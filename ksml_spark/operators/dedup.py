@@ -154,6 +154,10 @@ def _pin_tokens(toks: DataFrame, opts: dict) -> DataFrame:
     storage memory; {"storage": "memory"} opts into MEMORY_AND_DISK
     for small interactive runs.
 
+    near-dedup pins its INPUT by the same rule, for reason 1 at the
+    pipeline level: the pair stage's sample, the pair checkpoint and the
+    final anti join each read it.
+
     Registered in util._PINNED (bounded, oldest-evicted) so repeated
     invocations in a long-lived session can't accumulate cache blocks;
     ``ksml_spark.release_pinned()`` frees them all."""
@@ -1189,10 +1193,13 @@ def _index_estimate(
     # below would otherwise each re-run the limit (two scan+tokenize
     # jobs at plan time — measured as jaccard-pairs' auto-mode overhead)
     # over two potentially DIFFERENT non-deterministic samples, making
-    # f_max inconsistent with the count it divides by. Lazy (r17): the
-    # size/avg agg directly below is a full scan, so its job doubles as
-    # the materialization — the consumers are sequential driver
-    # actions, so the single-sample guarantee is unchanged
+    # f_max inconsistent with the count it divides by. eager=False (r17):
+    # the size/avg agg directly below is a full scan, so its job writes
+    # the checkpoint — the consumers are sequential driver actions, so
+    # the single-sample guarantee is unchanged. The call is not free:
+    # under AQE it runs the upstream's shuffle stages at once (measured
+    # 0.6-0.75 s of a corpus_batch job); near-dedup pins its input so
+    # that this upstream work is not paid again by the later jobs
     base = base.localCheckpoint(eager=False)
     s = base.agg(
         F.avg("__b").alias("b"), F.avg(F.size("__t")).alias("n"),
@@ -1292,79 +1299,84 @@ def _jaccard_prefix(toks: DataFrame, idc: str, blocks: list, thr: float) -> KStr
     return KStreamRel(pairs, key_cols=("doc_a", "doc_b"))
 
 
-@defop("dup-clusters")
-def op_dup_clusters(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
-    """Connected components over a pair relation by min-label propagation:
+# Pair relations of at most this many rows close their components on the
+# driver (dup-clusters): one bounded Arrow fetch and a union-find instead
+# of the distributed contraction loop, which stays for pair sets beyond
+# driver memory. The same bound as ann-topk's max_query_rows.
+CC_DRIVER_MAX_PAIRS = 100_000
 
-        ["dup-clusters", pairs, {"a": "doc_a", "b": "doc_b",
-                                 "as": "doc_id", "max_iter": 15}]
 
-    Returns (id, cluster) for every id that appears in a pair; cluster is
-    the smallest member id of the component (the canonical
-    representative). Compose after lsh-candidates / jaccard-pairs /
-    neardup-pairs to turn near-dup PAIRS into dedup GROUPS; ids with no
-    pair are their own representative (left-join this result and
-    coalesce).
+def _driver_components(src: list, dst: list) -> tuple[list, list]:
+    """(nodes, clusters) of a pair list by union-find with min-id roots:
+    the contraction loop's output, row for row, NULL ids included.
 
-    Contraction-based batch iteration (the multi-level CC shape that
-    holds at 100 TB): labels start as min(self, direct neighbors) — one
-    aggregation over the edge list — and every subsequent round operates
-    ONLY on the contracted cross-cluster edge graph, which collapses
-    near-complete dup components after the first remap. Per round: a
-    min-neighbor step plus a pointer-jump composition in label space
-    (tiny joins), the node labels re-mapped through it, and the edge set
-    re-contracted; convergence = the contracted edge set is empty (the
-    per-round COUNT the driver coordinates). Only the initial step and
-    first contraction scan the full edge list — rounds never re-touch
-    it, unlike plain label propagation whose every round joins all
-    edges. Each round ``localCheckpoint``s: iterative self-referencing
-    DataFrames otherwise compound their logical plan (persist caches
-    data, not analysis cost) until rounds take minutes. Checkpoints
-    whose first consumer is a full-scan driver probe are LAZY (r17):
-    the probe's own job materializes them, so one Spark job serves as
-    both materialization and convergence test — an eager checkpoint
-    there pays a second job per pointer-doubling step purely for the
-    probe (measured 87-117 jobs/invocation on the chain/random skew
-    shapes before the fusion, 78-99 after — AQE splits each action into
-    per-stage jobs, so the probe job is the removable fraction; at
-    cluster scale each saved job is a saved driver barrier, ~10-20%
-    wall-clock on the CC-heavy rows locally). Relations read twice WITHIN
-    one job (the pair relation under the symmetric union, the
-    min-neighbor map under its self-join's two sides) stay EAGER:
-    concurrent stage tasks racing a lazy cache would compute them
-    twice. Batch-only by design: streaming connected components needs
-    incremental union-find state, out of scope (run per micro-batch
-    via foreach-batch if needed)."""
-    opts = _opts(rest)
-    a = opts.get("a", "doc_a")
-    b = opts.get("b", "doc_b")
-    out_id = opts.get("as", "doc_id")
-    max_iter = int_opt(opts, "max_iter", "dup-clusters", 15)
-    if rel.df.isStreaming:
-        raise ArityError("dup-clusters is batch-only (see docstring)")
+    The loop groups every NULL endpoint into one NULL node labelled with
+    its smallest non-NULL neighbour m (NULL when it has none) and drops
+    NULL edges from the cross-edge graph, so no NULL links two
+    components. Label m is remapped only while some non-NULL node also
+    starts with label m — min(self, neighbours) — since a label no node
+    holds never enters the cross-edge graph: the NULL node ends in m's
+    cluster in that case, and as m otherwise. Self-loops add nothing but
+    their node."""
+    parent: dict = {}
 
-    # checkpoint the pair relation BEFORE the symmetric union: both union
-    # branches would otherwise re-run the (expensive) upstream pair
-    # generation once each
-    pairs = rel.df.select(
-        F.col(a).alias("__src"), F.col(b).alias("__dst")
-    ).localCheckpoint()
-    # lazy: the labels aggregation below is a full scan, so its eager
-    # checkpoint job doubles as the edges materialization
-    edges = (
-        pairs.union(pairs.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # initial labels: min(self, direct neighbors) — src is the group key,
-    # so one hash aggregation over the edge list, no join; stays eager
-    # (its node->label map feeds BOTH remap branches concurrently)
-    labels = (
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    first: dict = {}  # node -> min(self, non-NULL neighbours): the loop's first label
+    null_first = None
+    has_null = False
+    for a, b in zip(src, dst):
+        for u, v in ((a, b), (b, a)):
+            if u is None:
+                has_null = True
+                if v is not None and (null_first is None or v < null_first):
+                    null_first = v
+            else:
+                parent.setdefault(u, u)
+                cur = first.get(u, u)
+                first[u] = v if v is not None and v < cur else cur
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:  # the smaller root wins, so a root is its set's min
+                parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(first)
+    clusters = [find(x) for x in nodes]
+    if has_null:
+        nodes.append(None)
+        clusters.append(
+            find(null_first) if null_first in set(first.values()) else null_first
+        )
+    return nodes, clusters
+
+
+def _initial_labels(edges: DataFrame) -> DataFrame:
+    """(__node, __label): min(self, direct neighbours) per node — src is
+    the group key, so one hash aggregation over the edge list, no join."""
+    return (
         edges.groupBy("__src")
         .agg(F.least(F.first("__src"), F.min("__dst")).alias("__label"))
         .select(F.col("__src").alias("__node"), "__label")
-        .localCheckpoint()
     )
+
+
+def _contract_components(pairs: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed connected-components loop of dup-clusters (see its
+    docstring): (__node, __label) with __label the component's min id.
+    ``pairs`` is the checkpointed pair relation, ``edges`` its symmetric
+    closure (lazy); both are released here once consumed."""
+    # lazy: the labels aggregation below is a full scan, so its eager
+    # checkpoint job reads the edges for the first time. Under AQE the
+    # lazy checkpoint still runs the distinct's shuffle stage when it is
+    # called; only the final stage is left to the consumer's job
+    edges = edges.localCheckpoint(eager=False)
+    # eager: its node->label map feeds BOTH remap branches concurrently
+    labels = _initial_labels(edges).localCheckpoint()
 
     def remap(e, mapping):
         """Remap edge endpoints through (``__from`` -> ``__to``), keep
@@ -1480,22 +1492,131 @@ def op_dup_clusters(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             "rounds — raise {'max_iter': N}; returning partial clusters "
             "would silently split components"
         )
-    out = labels.select(
-        F.col("__node").alias(out_id), F.col("__label").alias("cluster")
-    )
+    return labels
+
+
+@defop("dup-clusters")
+def op_dup_clusters(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
+    """Connected components of a pair relation (driver union-find to 100k pairs):
+
+        ["dup-clusters", pairs, {"a": "doc_a", "b": "doc_b",
+                                 "as": "doc_id", "max_iter": 15}]
+
+    Returns (id, cluster) for every id that appears in a pair; cluster is
+    the smallest member id of the component (the canonical
+    representative). Compose after lsh-candidates / jaccard-pairs /
+    neardup-pairs to turn near-dup PAIRS into dedup GROUPS; ids with no
+    pair are their own representative (left-join this result and
+    coalesce).
+
+    The pair relation is checkpointed once, then fetched to the driver
+    with ONE bounded Arrow fetch (``limit(CC_DRIVER_MAX_PAIRS + 1)``,
+    100k rows, not an option). When it fits — the near-dup case: a
+    corpus job verifies tens to thousands of pairs — a union-find with
+    min-id roots closes the components on the driver, and the result
+    returns as a local relation built from an Arrow table (no Python
+    worker). Only integer and string ids take this path, whose Python
+    order matches Spark's. The output equals the loop's row for row,
+    NULL ids included (see _driver_components); ``max_iter`` does not
+    apply, since the driver path has no rounds.
+
+    Larger pair sets run the contraction-based batch iteration (the
+    multi-level CC shape that holds at 100 TB): labels start as
+    min(self, direct neighbors) — one aggregation over the edge list —
+    and every subsequent round operates ONLY on the contracted
+    cross-cluster edge graph, which collapses near-complete dup
+    components after the first remap. Per round: a min-neighbor step
+    plus a pointer-jump composition in label space (tiny joins), the
+    node labels re-mapped through it, and the edge set re-contracted;
+    convergence = the contracted edge set is empty (the per-round COUNT
+    the driver coordinates). Only the initial step and first contraction
+    scan the full edge list — rounds never re-touch it, unlike plain
+    label propagation whose every round joins all edges. Each round
+    ``localCheckpoint``s: iterative self-referencing DataFrames otherwise
+    compound their logical plan (persist caches data, not analysis cost)
+    until rounds take minutes. Checkpoints whose first consumer is a
+    full-scan driver probe are taken with ``eager=False`` (r17), so the
+    probe's job writes them and also answers the convergence test. That
+    is not free of jobs: under AQE the call itself runs the checkpointed
+    plan's shuffle stages, and only the last stage waits for the probe.
+    It still saves the probe's extra final stage per pointer-doubling
+    step (measured 87-117 jobs/invocation on the chain/random skew
+    shapes before the fusion, 78-99 after). Relations read twice WITHIN
+    one job (the pair relation under the symmetric union, the
+    min-neighbor map under its self-join's two sides) stay EAGER:
+    concurrent stage tasks racing a lazy cache would compute them
+    twice. Past ``max_iter`` rounds the loop raises instead of returning
+    split components. Batch-only by design: streaming connected
+    components needs incremental union-find state, out of scope (run per
+    micro-batch via foreach-batch if needed)."""
+    from pyspark.sql.types import IntegralType, StringType
+
+    opts = _opts(rest)
+    a = opts.get("a", "doc_a")
+    b = opts.get("b", "doc_b")
+    out_id = opts.get("as", "doc_id")
+    max_iter = int_opt(opts, "max_iter", "dup-clusters", 15)
+    if rel.df.isStreaming:
+        raise ArityError("dup-clusters is batch-only (see docstring)")
+
+    # checkpoint the pair relation BEFORE the bounded fetch and the
+    # symmetric union: each would otherwise re-run the (expensive)
+    # upstream pair generation
+    pairs = rel.df.select(
+        F.col(a).alias("__src"), F.col(b).alias("__dst")
+    ).localCheckpoint()
+    edges = pairs.union(
+        pairs.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
+    ).distinct()
+
+    def labelled(labels):
+        return labels.select(
+            F.col("__node").alias(out_id), F.col("__label").alias("cluster")
+        )
+
+    if all(isinstance(f.dataType, IntegralType) or f.dataType == StringType()
+           for f in pairs.schema):
+        fetched = pairs.limit(CC_DRIVER_MAX_PAIRS + 1).toArrow()
+        if fetched.num_rows <= CC_DRIVER_MAX_PAIRS:
+            import pyarrow as pa
+
+            pairs.unpersist()
+            nodes, clusters = _driver_components(
+                fetched.column("__src").to_pylist(), fetched.column("__dst").to_pylist()
+            )
+            # the loop's output schema, analysed from its own expressions
+            # (no job): id types widen and nullability match exactly
+            schema = labelled(_initial_labels(edges)).schema
+            table = pa.Table.from_arrays(
+                [pa.array(nodes), pa.array(clusters)], names=schema.fieldNames()
+            )
+            out = ctx.spark.createDataFrame(table, schema)
+            return KStreamRel(out, key_cols=(out_id,))
+    out = labelled(_contract_components(pairs, edges, max_iter))
     return KStreamRel(out, key_cols=(out_id,))
 
 
 @defop("near-dedup")
 def op_near_dedup(ctx: Ctx, rel: Rel, *rest) -> Rel:
-    """End-to-end near-duplicate removal: rows whose id is a non-minimal
-    member of a near-dup cluster are dropped; everything else (including
-    rows with no near-dup) passes through unchanged.
+    """End-to-end near-duplicate removal over its input, pinned once.
+
+    Rows whose id is a non-minimal member of a near-dup cluster are
+    dropped; everything else (including rows with no near-dup) passes
+    through unchanged.
 
     Composition of the gated building blocks — jaccard-pairs (inverted-
-    index exact verification within blocks) -> dup-clusters (contraction
-    connected components) -> left_anti join against the non-representative
+    index exact verification within blocks) -> dup-clusters (driver
+    union-find up to CC_DRIVER_MAX_PAIRS pairs, contraction connected
+    components beyond) -> left_anti join against the non-representative
     ids (a set far smaller than the corpus, so Catalyst broadcasts it).
+
+    The input is pinned once (the _pin_tokens storage rule: DISK_ONLY,
+    MEMORY_AND_DISK under {"storage": "memory"}) before any of that
+    runs. Three jobs read it: the pair stage's plan-time sample, the
+    pair checkpoint in dup-clusters and the final anti join; unpinned,
+    each re-ran the whole upstream pipeline. A call therefore holds two
+    registry pins (this one and the pair stage's), freed by
+    ``ksml_spark.release_pinned()``.
 
     ``{"method": "winnow"}`` swaps the pair stage for winnow-pairs
     (substring-granularity: docs sharing >= min_shared winnowing
@@ -1505,20 +1626,25 @@ def op_near_dedup(ctx: Ctx, rel: Rel, *rest) -> Rel:
     opts = _opts(rest)
     idc = opts.get("id", "doc_id")
     method = opts.get("method", "jaccard")
-    if method == "winnow":
-        pairs = op_winnow_pairs(ctx, rel, opts)
-    elif method == "jaccard":
-        pairs = op_jaccard_pairs(ctx, rel, opts)
-    else:
+    if method not in ("jaccard", "winnow"):
         raise ArityError(
             f"near-dedup method must be 'jaccard' or 'winnow', got {method!r}"
         )
+    from .util import spread
+
+    # spread BEFORE the pin: a pinned relation hides its source files, so
+    # the pair stage's own spread would no longer see a one-split source
+    pinned = rel.with_df(_pin_tokens(spread(rel.df), opts))
+    if method == "winnow":
+        pairs = op_winnow_pairs(ctx, pinned, opts)
+    else:
+        pairs = op_jaccard_pairs(ctx, pinned, opts)
     clusters = op_dup_clusters(
         ctx, pairs, {"a": "doc_a", "b": "doc_b", "as": idc,
                      "max_iter": opts.get("max_iter", 15)}
     )
     losers = clusters.df.filter(F.col(idc) != F.col("cluster")).select(idc)
-    return rel.with_df(rel.df.join(losers, idc, "left_anti"))
+    return rel.with_df(pinned.df.join(losers, idc, "left_anti"))
 
 
 # ---------------------------------------------------------------------------

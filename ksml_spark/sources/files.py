@@ -11,6 +11,7 @@ Detection is metadata-only (pyarrow reads just the footer; no data pass).
 
 from __future__ import annotations
 
+import os
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,8 +31,22 @@ TABLE_NAMES = (
 )
 
 
+def _stamp(path: str):
+    """(mtime_ns, size) of a local path, or None when it can't be
+    stat'ed (a URI or a missing path): the validity key of the per-path
+    caches below, so a file rewritten in-process is re-read instead of
+    answered from a stale entry."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
 @lru_cache(maxsize=256)
-def _nano_timestamp_cols(path: str) -> tuple[str, ...]:
+def _nano_timestamp_cols(path: str, stamp) -> tuple[str, ...]:
+    """TIMESTAMP(NANOS) columns of a parquet file. ``stamp`` (_stamp of
+    the path) is only part of the cache key: a rewritten file misses."""
     try:
         import pyarrow.parquet as pq
 
@@ -49,10 +64,11 @@ def _nano_timestamp_cols(path: str) -> tuple[str, ...]:
 # (``spark.read.schema(s).parquet``) skips that job entirely, exactly as
 # a production deployment declares its table schemas in a catalog. This
 # caches METADATA only — every action still reads the parquet data
-# itself; the testdata contract (deterministic, immutable within a run)
-# is the same one the pyarrow footer cache above already relies on.
-# StructType is session-independent, so a restarted session reuses it.
-_SCHEMA_CACHE: dict[str, object] = {}
+# itself. StructType is session-independent, so a restarted session
+# reuses it. Each entry carries the file's _stamp() from when it was
+# inferred; a different stamp (the path was rewritten, perhaps with a
+# new schema) is a miss and re-infers, like the footer cache above.
+_SCHEMA_CACHE: dict[str, tuple[object, object]] = {}
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -76,11 +92,13 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     and its effect on outside code is to read TIMESTAMP(NANOS) columns
     as BIGINT instead of erroring (PARQUET_TYPE_ILLEGAL)."""
     conf = spark.conf
-    nanos = _nano_timestamp_cols(path)
+    stamp = _stamp(path)
+    nanos = _nano_timestamp_cols(path, stamp)
     nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
     if nanos:
         conf.set(nanos_key, "true")
-    cached = _SCHEMA_CACHE.get(path)
+    hit = _SCHEMA_CACHE.get(path)
+    cached = hit[1] if hit is not None and hit[0] == stamp else None
     if cached is not None:
         # schema known: no inference job runs, and with no inference the
         # NTZ conf is irrelevant (the cached schema was inferred with it
@@ -94,7 +112,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             df = spark.read.parquet(path)
         finally:
             conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", ntz_prev)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[path] = (stamp, df.schema)
     for c in nanos:
         # Integer division, not float: at epoch-ns magnitude doubles have
         # 256ns ulp, so `/ 1000` rounds ~1.6% of values off by 1us.

@@ -24,10 +24,12 @@ shape of the recall-vs-dims / recall-vs-nprobe curves.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ksml_spark import get_spark, pipe  # noqa: E402
 from ksml_spark.sources.files import load_table  # noqa: E402

@@ -3,9 +3,11 @@ per registered op with its implementing function and docstring summary."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ksml_spark import OPERATORS  # noqa: E402
 import ksml_spark.operators  # noqa: F401,E402  (registers everything)
@@ -47,7 +49,7 @@ def main() -> None:
         forms = ", ".join(f"`{n}`" for n in names)
         lines.append(f"| {forms} | `{mod}.{fn.__name__}` | {summary} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/docs/OPERATORS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "OPERATORS.md"), "w") as f:
         f.write(out)
     print(f"wrote docs/OPERATORS.md ({len(seen)} ops, {len(OPERATORS)} forms)")
 

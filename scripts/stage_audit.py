@@ -27,11 +27,13 @@ Usage: python scripts/stage_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ksml_spark import get_spark  # noqa: E402

@@ -202,17 +202,25 @@ def test_dup_clusters_high_diameter_converges_logarithmically(spark):
     assert (agg["n"], agg["k"], agg["m"]) == (5000, 1, 0)
 
 
-def test_dup_clusters_max_iter_exhaustion_raises(spark):
+# needs >= 2 contraction rounds (found by search: the min-pointer forest
+# of round 1 leaves a cross-cluster edge)
+TWO_ROUND_EDGES = [(0, 3), (0, 6), (0, 9), (1, 3), (1, 9), (2, 8), (4, 6),
+                   (4, 8), (9, 11), (10, 11)]
+
+
+def test_dup_clusters_max_iter_exhaustion_raises(spark, monkeypatch):
     """r17 fused-probe regression: the non-convergence check now reads
     the carried cross-edge count from the round-end materializing job
     (one Spark job serves as both checkpoint and convergence probe)
     instead of a fresh post-loop count — it must still refuse loudly
     when rounds run out, and still pass once given enough rounds. This
-    graph provably needs >= 2 contraction rounds (found by search: the
-    min-pointer forest of round 1 leaves a cross-cluster edge)."""
-    edges = [(0, 3), (0, 6), (0, 9), (1, 3), (1, 9), (2, 8), (4, 6),
-             (4, 8), (9, 11), (10, 11)]
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    graph provably needs >= 2 contraction rounds. Small pair sets close
+    on the driver without rounds, so the driver bound is patched to 0 to
+    run the contraction loop."""
+    from ksml_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_PAIRS", 0)
+    df = spark.createDataFrame(TWO_ROUND_EDGES, "doc_a long, doc_b long")
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="did not converge"):
@@ -226,6 +234,79 @@ def test_dup_clusters_max_iter_exhaustion_raises(spark):
     assert {r["doc_id"]: r["cluster"] for r in out} == {
         i: 0 for i in (0, 1, 2, 3, 4, 6, 8, 9, 10, 11)
     }
+
+
+LONG_PAIRS = "doc_a long, doc_b long"
+
+
+@pytest.mark.parametrize("edges,ddl", [
+    ([(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (20, 22)], LONG_PAIRS),
+    ([(i, i + 1) for i in range(12)], LONG_PAIRS),
+    ([(i, i + 1) for i in range(4999)], LONG_PAIRS),  # diameter 5000
+    (TWO_ROUND_EDGES, LONG_PAIRS),
+    # NULL endpoints: labelled from the smallest non-NULL neighbour, which
+    # is remapped only while a non-NULL node starts with it as its label
+    ([(1, 2), (None, 3), (3, 4)], LONG_PAIRS),
+    ([(2, 3), (None, 3)], LONG_PAIRS),
+    ([(2, 3), (3, 5), (3, None), (7, None)], LONG_PAIRS),
+    ([(None, None), (4, 4)], LONG_PAIRS),
+    ([(5, 5), (5, 6), (7, 7)], "doc_a int, doc_b long"),
+    ([("b", "a"), ("c", "b"), ("x", None), ("é", "z")], "doc_a string, doc_b string"),
+    ([], LONG_PAIRS),
+], ids=["components", "chain12", "chain5000", "two_rounds", "null_label_held",
+        "null_label_unheld", "nulls_mixed", "null_pair_self_loop", "self_loops",
+        "strings", "empty"])
+def test_dup_clusters_driver_path_matches_loop(spark, monkeypatch, edges, ddl):
+    """The driver union-find (pair sets up to CC_DRIVER_MAX_PAIRS) and the
+    distributed contraction loop (forced by patching the bound to 0)
+    return the same rows and schema, NULL ids and self-loops included."""
+    from ksml_spark.operators import dedup
+
+    pairs = spark.createDataFrame(edges, ddl)
+
+    def run():
+        df = ksml(["dup-clusters", ["stream", pairs, {}], {}], spark=spark).df
+        rows = [tuple(r) for r in df.collect()]
+        return df.schema, sorted(rows, key=lambda r: [(v is not None, v) for v in r])
+
+    driver = run()
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_PAIRS", 0)
+    assert driver == run()
+
+
+def test_dup_clusters_driver_path_ignores_max_iter(spark):
+    """Below the driver bound there are no rounds, so max_iter does not
+    apply: the graph the loop refuses at max_iter=1 returns its
+    clusters."""
+    df = spark.createDataFrame(TWO_ROUND_EDGES, "doc_a long, doc_b long")
+    out = ksml(["dup-clusters", ["stream", df, {}], {"max_iter": 1}], spark=spark).df
+    assert {r["doc_id"]: r["cluster"] for r in out.collect()} == {
+        i: 0 for i in (0, 1, 2, 3, 4, 6, 8, 9, 10, 11)
+    }
+
+
+def test_near_dedup_pins_stay_bounded(spark):
+    """near-dedup holds two registry pins per call (its input and the
+    pair stage's tokens): repeated calls keep at most _PIN_CAP live,
+    and release_pinned() unpersists every one of them."""
+    from pyspark import StorageLevel
+
+    from ksml_spark import release_pinned
+    from ksml_spark.operators import util as _u
+
+    release_pinned()
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d"), (3, "x y z")], "doc_id long, text string"
+    )
+    seen = []
+    for i in range(_u._PIN_CAP + 2):
+        out = pipe(["stream", docs, {"key": "doc_id"}],
+                   ["near-dedup", {"col": "text", "threshold": 0.5}], spark=spark).df
+        assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
+        seen += _u._PINNED
+        assert len(_u._PINNED) == min(2 * (i + 1), _u._PIN_CAP)
+    assert release_pinned() == _u._PIN_CAP and not _u._PINNED
+    assert all(p.storageLevel == StorageLevel.NONE for p in seen)
 
 
 @pytest.mark.slow

@@ -490,3 +490,26 @@ def test_read_parquet_schema_cache_skips_inference_job(spark):
     # TIMESTAMP(NANOS) on disk and must surface as a usable timestamp
     ev = read_parquet(spark, f"{SF}/events.parquet")
     assert dict(ev.dtypes)["ts"] == "timestamp"
+
+
+def test_read_parquet_rereads_schema_of_rewritten_path(spark, tmp_path):
+    """The schema and nano-column caches are keyed by path but validated
+    by the file's (mtime_ns, size): a path rewritten in-process with a
+    different schema must read with the NEW schema, nano rebuild
+    included, not the cached one."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ksml_spark.sources.files import read_parquet
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    ts = pa.array([dt.datetime(2024, 1, 1, 0, 0, 1)] * 2, pa.timestamp("ns"))
+    pq.write_table(pa.table({"a": pa.array([3, 4], pa.int64()),
+                             "b": pa.array(["x", "y"]), "ts": ts}), path)
+    df = read_parquet(spark, path)
+    assert dict(df.dtypes) == {"a": "bigint", "b": "string", "ts": "timestamp"}
+    assert sorted(r["a"] for r in df.collect()) == [3, 4]

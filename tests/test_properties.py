@@ -91,18 +91,28 @@ edge_lists = st.lists(
 )
 
 
-@pytest.mark.slow
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(edges=edge_lists)
-def test_dup_clusters_matches_union_find(spark, edges):
+def _dup_clusters_vs_union_find(spark, edges):
+    """dup-clusters on both sides of the driver cutover — the driver
+    union-find and the contraction loop (bound patched to 0) — against a
+    reference union-find."""
+    from unittest import mock
+
+    from ksml_spark.operators import dedup
+
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "doc_a long, doc_b long"
     )
-    out = ksml(
-        ["dup-clusters", ["stream", pairs, {}], {"a": "doc_a", "b": "doc_b"}],
-        spark=spark,
-    ).df
-    got = {r["doc_id"]: r["cluster"] for r in out.collect()}
+
+    def clusters():
+        out = ksml(
+            ["dup-clusters", ["stream", pairs, {}], {"a": "doc_a", "b": "doc_b"}],
+            spark=spark,
+        ).df
+        return {r["doc_id"]: r["cluster"] for r in out.collect()}
+
+    got = clusters()
+    with mock.patch.object(dedup, "CC_DRIVER_MAX_PAIRS", 0):
+        got_loop = clusters()
 
     parent: dict[int, int] = {}
 
@@ -118,7 +128,21 @@ def test_dup_clusters_matches_union_find(spark, edges):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     expected = {x: find(x) for x in parent}
-    assert got == expected
+    assert got == expected and got_loop == expected
+
+
+@pytest.mark.slow
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=edge_lists)
+def test_dup_clusters_matches_union_find(spark, edges):
+    _dup_clusters_vs_union_find(spark, edges)
+
+
+@settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=edge_lists)
+def test_dup_clusters_matches_union_find_fast(spark, edges):
+    """Fast-tier sample of the property above."""
+    _dup_clusters_vs_union_find(spark, edges)
 
 
 def test_ord_ge_total_order_with_nulls():
