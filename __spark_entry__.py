@@ -1085,8 +1085,7 @@ SELECT q_id, n_id, rank, round(sim, 6) AS sim FROM (
 
 def _q_ann_lsh_banded(spark, sf):
     """The late-r13 {'bands': b} OR-construction path of ann-lsh-topk
-    (registered r14, funded by the anti_join_customers retirement —
-    see the rotation notes): band j hashes coordinates [j*4, (j+1)*4),
+    (registered r14): band j hashes coordinates [j*4, (j+1)*4),
     a pair is a candidate if it co-buckets in ANY band, and the pair
     dedupe + (sim desc, n_id) ranking run after the band explode."""
     return pipe(
@@ -2717,10 +2716,10 @@ LEFT JOIN losers l ON d.doc_id = l.node WHERE l.node IS NULL"""
 
 
 # ---------------------------------------------------------------------------
-# r09 additions: the two open-slot rows (see the rotation budget below) —
-# gopher-filter (the last registered op without driver evidence) and the
-# transform-with-state batch shim (the stateful escape hatch's first
-# oracled execution; eval.clj:310-323 is the reference surface it backs).
+# r09 additions: gopher-filter (then the last registered op without an
+# oracled row) and the transform-with-state batch shim (the stateful
+# escape hatch's first oracled execution; eval.clj:310-323 is the
+# reference surface it backs).
 
 
 def _q_gopher_filter(spark, sf):
@@ -3004,180 +3003,14 @@ FROM documents"""
 
 # ---------------------------------------------------------------------------
 
-# Registry order matters: the correctness driver records only the FIRST 50
-# entries per round.  ROTATION INVARIANT: entries are ordered by the round
-# of their most recent driver-green CORRECTNESS row, OLDEST FIRST (brand-new
-# queries count as "never recorded" and go first of all; ties keep relative
-# order).
-#
-# ROUND-END GATE (adopted r10 after the same miss twice — r08's untested
-# gopher-filter, r09's dsir registration breaking two plan tests in the
-# snapshot commit): NO registry or operator change ships in a round's
-# final commit without a full `pytest tests/` run on that exact tree,
-# exactly like the oracle sweep.  A green suite on an earlier tree does
-# not count.  With 100 queries and a 50-row window, 50 fall outside each round
-# and re-enter the window the next round — so every query has a driver-green
-# row at most 2 rounds old.  Each round: move the previous round's
-# unrecorded tail to the front and push the freshest block to the back.
-#
-# RETIREMENT POLICY (the swap rule, applied first in r08): 100 is a hard
-# cap, so registering a new query requires retiring one — and because the
-# upcoming window must hold every survivor of the stalest block, each NEW
-# query must retire a query FROM THAT BLOCK specifically.  A query is
-# retirement-eligible only when every operator/option it uniquely oracles
-# stays covered: (a) by another registry query exercising the same code
-# path (lsh_join_incremental ⊂ lsh_join_verified; simhash_docs' signature
-# CTE is embedded in simhash_pairs' oracle), (b) by per-op queries for a
-# composite showcase (q3 = where+join+select-key+group-by+agg+order+limit,
-# each oracled individually), or (c) by a dedicated invariant test when
-# the retiree oracled an OPTION whose plain form stays oracled
-# (agg_salted == plain agg, pinned by tests/test_agg.py). Pins for
-# retired/renamed rows migrate in docs/PERF_BASELINE.md (r08 notes).
-# Retired in r08: jaccard_ngram_pairs, lsh_join_incremental, simhash_docs,
-# q3_segment_revenue, agg_salted_user_totals. Re-pinned to richer options
-# (new name => never-recorded, so the row moves to the rotation head):
-# lm_ppl_bigram→lm_ppl_kn, dist_shift_sources→dist_shift_js,
-# histogram_prices→histogram_log_chars,
-# asof_join_click_error→asof_join_tolerance.  The last two replaced
-# r07-green slots, which would have left them without driver evidence in
-# the r07∪r08 window — so two more r06-block rows are retired to make
-# room in the head: jaccard_pairs_prefix (clause c: bit-identical to
-# jaccard_pairs by construction, pinned by
-# test_jaccard_prefix_matches_plain_plan + the skew bench) and
-# dup_clusters (clause a: substring_dedup_prep's near-dedup composition
-# calls op_dup_clusters directly and its oracle embeds the same
-# transitive closure).
-#
-# r09 spent the 2 open slots (gopher_filter, transform_with_state_fold)
-# — the registry is at the 100-row cap and the rotation is a zero-slack
-# 50/50 flip-flop from here on: the r10 window must hold exactly the 50
-# r08-green rows, the r11 window the 50 r09-green rows, and so on.  ANY
-# new query now requires retiring a row from the block about to be
-# re-recorded, under the eligibility clauses above.
-# Retired in r09 (swap rule, clause a): kmeans_assign — the new semdedup
-# op invokes op_kmeans_assign directly and semdedup_embeddings' oracle
-# embeds the identical assignment CTE, exposing (cluster, sim) verbatim
-# in its output, so the assign path keeps hash-exact driver evidence
-# (the dup_clusters ⊂ substring_dedup_prep precedent).
-# Also retired in r09 (swap rule, clauses a+c): neardup_lsh — it oracled
-# the {"lsh_dims": d} OPTION of neardup-pairs, whose plain {"block": col}
-# form stays oracled by neardup_embeddings; the option's only unique
-# surface, the sign-bucket expression, keeps hash-exact driver evidence
-# through ann_lsh_topk (same sign_bucket_col), and the shared pair-join
-# path is pinned bit-identical by
-# test_neardup_lsh_mode_matches_block_on_precomputed_bucket (+ the
-# existing lsh-subset-of-full sim-equality test). Its slot funds
-# semdedup_join (a brand-new op needing first driver evidence).
-# Also retired in r09 (swap rule, clause a — the dup_clusters precedent):
-# winnow_fingerprints — substring_dedup_prep runs near-dedup{winnow} with
-# the SAME k=3/window=4 parameters (op_winnow's expressions execute
-# inside it) and its oracle embeds the identical fingerprint CTEs
-# verbatim, so the winnow construction keeps hash-exact driver evidence;
-# the per-row expression values also stay pinned by the winnow
-# Python-reference and streaming-parity tests. Its slot funds
-# dsir_scores (the new DSIR importance-scoring op).
-# Retired in r11 (swap rule, clause a — the simhash_docs ⊂ simhash_pairs
-# precedent, verbatim): minhash_signatures — op_lsh_candidates calls the
-# SAME band_signatures() construction (dedup.py) and _LSH_CANDIDATES_ORACLE
-# embeds the identical _minhash_cte, so the signature values keep
-# hash-exact driver evidence through the lsh_candidates row (any signature
-# error changes its band buckets and thus its candidate pairs); the
-# streaming per-row path and the hash family itself stay pinned by
-# test_band_signature_cols_match_agg_path and
-# test_minhash_matches_python_reference. (The r10 VERDICT's candidate
-# top_bigrams was adjudicated NOT eligible: op_ngrams is invoked by no
-# other registry query, so clause a fails at the op granularity the
-# dup_clusters/winnow precedents set — similar expression SHAPES in
-# _gram_ids/pmi are different code paths.) Its slot funds
-# bpe_train_encode, the composed tokenizer-training row (the only
-# computational ops that had no registry entry after r10).
-#
-# r12: the three no_oracle rows (bpe_train_encode, approx_distinct_users,
-# kmeans_centroids) were upgraded IN PLACE to invariant-shaped hash-exact
-# oracles (round-trip reconstruction / tolerance check / Lloyd
-# invariants — see each query's docstring). Same names, same rotation
-# slots; their first driver-verified rows land when their blocks
-# re-enter the window (r13 for bpe_train_encode, r13 for the other two).
-#
-# late r13: the new {'bands': b} OR-construction on ann-lsh-topk /
-# neardup-pairs gets NO new registry row, under the retired-neardup_lsh
-# clause-(a+c) reasoning in reverse (adding would require retiring from
-# the r12 block mid-window): every piece of the banded path keeps
-# hash-exact driver evidence through an existing row — the sign-bucket
-# expression via ann_lsh_topk, the pair join + guarded cosine + top-k
-# ranking via ann_lsh_topk/neardup_embeddings — and the only NEW
-# plumbing (band explode + pair-key dedupe) is pinned bit-for-bit by
-# sequential-order Python-reference tests (test_ann_lsh_bands_exact_
-# reference, test_neardup_bands_exact_reference) plus the planted-
-# duplicate recall regression. bands=1 stays the oracle shape of both
-# rows. If a future rotation frees a slot, a banded row is the first
-# candidate to register.
-#
-# r14: the rotation freed the r12 block for the swap the late-r13 note
-# promised — the banded paths register (ann_lsh_banded, neardup_banded)
-# funded by two retirements from the incoming head:
-# - table_filter_mapvalues (clause a, the dup_clusters ⊂
-#   substring_dedup_prep composition precedent): every op it invokes is
-#   Rel-type-agnostic and keeps hash-exact driver evidence through a
-#   still-oracled row — the latest-per-key table construction via
-#   table_latest_event (identical QUALIFY CTE in its oracle), op_filter
-#   via filter_highqty, op_map_values via map_values_net, to-stream via
-#   anomaly_detection; the composition itself stays pinned bit-for-bit
-#   by test_table_filter_mapvalues_composition_pin (pandas reference).
-# - anti_join_customers (clause c, the neardup_lsh how-option
-#   precedent): anti-join is a one-line how-string dispatch into the
-#   SAME _do_join construction as the still-oracled semi_join_customers
-#   / left_join_counts / outer_join_nations rows; the how-specific
-#   surface is pinned by test_anti_join_is_semi_complement (anti ∪ semi
-#   partition the left exactly, disjoint, on the driver tables).
-# Their swap keeps the 50-row arithmetic: r14 window = r12 window − 2
-# retired + 2 banded rows (ROTATION_SWAPS below feeds
-# scripts/rotation_check.py the adjustment).
-# r15: no retirements/registrations this round — the rotation is the
-# plain zero-slack 50/50 flip-flop (head = the r13 window going stale,
-# tail = the r14 window just recorded). Kept as an explicit empty
-# declaration so scripts/rotation_check.py reads the round's intent.
-# r16: head = the r14 window going stale, tail = the r15 window just
-# recorded, with TWO clause-c swaps funding the round's new ops:
-# - filter_not_returns retired (clause c, the anti_join precedent):
-#   filter-not is a one-line `~` dispatch into the same
-#   predicate_condition + df.filter construction as the still-oracled
-#   filter_highqty row; the complement surface is pinned by
-#   tests/test_stateless.py::test_filter_not_is_filter_complement
-#   (filter ∪ filter-not partition the driver lineitem exactly).
-# - outer_join_nations retired (clause c): outer join is a one-line
-#   how-string dispatch ('full_outer') into the SAME _do_join
-#   construction as the still-oracled left_join_counts /
-#   semi_join_customers rows; the null-extension surface is pinned by
-#   tests/test_joins.py::test_outer_join_is_left_union_right_anti
-#   (outer = left-join rows ∪ null-extended right-anti rows).
-# The freed slots register the round's new ops, both DuckDB-oracled:
-# classify_quality (frozen linear hashed-ngram scorer) and
-# shuffle_shards (seeded deterministic global shuffle).
-# - hopping_count retired (clause c): a hopping window is the same
-#   WindowSpec -> F.window construction as the still-oracled tumbling
-#   windowed_count row plus the slideDuration argument; the overlap
-#   arithmetic is pinned by tests/test_agg.py::
-#   test_hopping_count_is_rolling_sum_of_tumbling (hopping(2a, a) ==
-#   rolling sum of tumbling(a) on the driver events). Its slot funds
-#   transform_with_state_ttl — the protobuf-seam fallback of VERDICT
-#   r15 #5: driver evidence for TTL registration, deleteIfExists, the
-#   timeMode-'none' timer contract, and multi-row emission.
-# r17: no retirements/registrations — the optimization round changes no
-# query surface, so the rotation is the plain zero-slack 50/50 flip-flop
-# (head = the r15 window going stale, tail = the r16 window just
-# recorded). Declared empty so scripts/rotation_check.py reads the
-# round's intent.
-# r18: same — second optimization round, no query-surface change; plain
-# flip-flop (head = the r16 window going stale, tail = the r17 window
-# just recorded), exactly as VERDICT r17 item 8 ordered.
-ROTATION_SWAPS: dict = {}
+# The query registry: name -> (query function, DuckDB oracle SQL). Every
+# row has an oracle, compared hash-exactly by scripts/check_oracle.py.
+# Entry order is historical and kept stable. Queries retired from the
+# registry keep their coverage through another row that runs the same
+# construction or through a dedicated test (see the "Retirement pin"
+# tests).
 
 _QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {
-    # --- ROTATION HEAD for r18: the 50 r16-green rows whose driver
-    # evidence goes stale this round (the zero-slack 50/50 flip-flop —
-    # set-verified by scripts/rotation_check.py). Sub-block order kept
-    # from the r16 window. ---
     "ann_lsh_banded": (_q_ann_lsh_banded, _ANN_LSH_BANDED_ORACLE),
     "neardup_banded": (_q_neardup_banded, _NEARDUP_BANDED_ORACLE),
     "freq_items_priority": (_q_freq_items, _FREQ_ITEMS_ORACLE),
@@ -3228,9 +3061,6 @@ _QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], Optional[str
     "shuffle_shards": (_q_shuffle, _SHUFFLE_ORACLE),
     "join_global_nation": (_q_join_global, _JOIN_GLOBAL_ORACLE),
     "semi_join_customers": (_q_semi_join, _SEMI_JOIN_ORACLE),
-    # --- green in r17 (freshest evidence): behind the rotation head;
-    # these 50 re-enter the window in r19. Sub-block order kept from
-    # the r17 window. ---
     "bpe_train_encode": (_q_bpe_train_encode, _BPE_TRAIN_ENCODE_ORACLE),
     "gopher_filter": (_q_gopher_filter, _GOPHER_FILTER_ORACLE),
     "transform_with_state_fold": (_q_transform_with_state, _TRANSFORM_WITH_STATE_ORACLE),

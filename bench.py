@@ -66,8 +66,7 @@ def _calibration_py_seconds(spark, passes: int = 4) -> float:
     reduction per batch. No file
     I/O, no shuffle, no data dependence — the number moves ONLY with
     host speed and Python-worker scheduling pressure. Pinned alongside
-    `calib` in docs/PERF_BASELINE.md; scripts/pin_check.py prints both
-    heat factors."""
+    `calib` in docs/PERF_BASELINE.md."""
 
     def _work(batches):
         import numpy as np  # noqa: PLC0415 — worker-side import
@@ -204,16 +203,14 @@ def _stream_bench(spark, sf_dir: str) -> dict:
             out = stream_table_join(ls, rt, "inner")
             return run_noop(out.df, ckpt, t0), 2 * n
 
-        def lsh_join_stream(ckpt, impl=None, src_path=None, rows=None):
+        def lsh_join_stream(ckpt, src_path=None, rows=None):
             # incremental cross-corpus dedup flagship: per-row band
             # signatures on the streaming new-docs side, stream-static
             # equi-join on (band, bucket) against the reference corpus,
             # exact-Jaccard verify on candidates (the complete probe the
             # incremental_dedup example composes with an anti-join).
-            # streaming default impl resolves to the km single-digest
-            # Kirsch-Mitzenmacher family (r09 flip — the measured ~4x
-            # signature speedup); impl="md5" keeps the salted-md5
-            # oracle-parity family benched as the A/B reference
+            # A streaming side runs the km single-digest
+            # Kirsch-Mitzenmacher family
             from ksml_spark import ksml as _ksml
 
             t0 = time.time()
@@ -223,8 +220,6 @@ def _stream_bench(spark, sf_dir: str) -> dict:
             # otherwise fire per pass); the dedup_within-bounded shape
             # is probed by scripts/stream_scale_probe.py
             opts = {"verify": 0.7, "broadcast": True, "unbounded_ok": True}
-            if impl:
-                opts["impl"] = impl
             out = _ksml(
                 ["lsh-join", ["stream", src, {"key": "doc_id"}],
                  ["stream", ref_docs, {"key": "doc_id"}], opts],
@@ -257,21 +252,13 @@ def _stream_bench(spark, sf_dir: str) -> dict:
                 ckpt, small_group=1 << 62, paths=(hlp, hrp)),
             "stream_table_join": st_join,
             "session_fold": session_fold,
-            # auto -> km since r09; 8x-replicated layout since r12: the
+            # km family; 8x-replicated layout since r12: the
             # 5k-doc input twice drew cold-start adjudications (r10
             # outlier, r11 suite 1,093 vs isolated 2,500 docs/s) because
             # one availableNow micro-batch carries ~2.4s fixed cost —
             # the larger input measures throughput, not setup
             "lsh_join_stream": lambda ckpt: lsh_join_stream(
                 ckpt, src_path=docs8_path, rows=8 * n_docs),
-            # md5 moved to the 40k layout too (r13, VERDICT band-
-            # consistency item): with the default row on 8x, the md5
-            # A/B read a 5k-doc cold-start rate against a 40k-doc
-            # marginal rate — not comparable; re-pinned on this layout
-            "lsh_join_stream_md5": lambda ckpt: lsh_join_stream(
-                ckpt, impl="md5", src_path=docs8_path, rows=8 * n_docs),
-            "lsh_join_stream_km": lambda ckpt: lsh_join_stream(
-                ckpt, impl="km", src_path=docs8_path, rows=8 * n_docs),
         }
         passes = int(os.environ.get("BENCH_STREAM_PASSES", "2"))
         for name, fn in benches.items():

@@ -15,9 +15,8 @@ Tokenizer caveat: the default pre-tokenization split is ASCII-only
 nothing to the vocabulary and their token counts read 0 here. For a
 multilingual corpus pass {"tokenizer": "unicode"} to BOTH bpe-train
 and bpe-encode — non-Latin words then get character-level BPE
-fallback. Batch corpora with realistic (Heaps-law) vocabularies can
-also pass {"impl": "distinct"} to bpe-encode to pay the merge loop
-once per distinct word per corpus instead of per Arrow batch.
+fallback. bpe-encode memoizes words within each Arrow batch, so the
+merge loop runs once per distinct word per batch.
 
 Run:  python examples/tokenizer_training.py [sf_dir] [merges]
 """

@@ -46,7 +46,8 @@ from ..errors import ArityError, TypeDispatchError
 from ..eval import Ctx, defop
 from ..model import Rel
 from ..operators.util import (
-    float_opt, int_opt, let1, md5_long_col, opts_of, spread,
+    float_opt, int_opt, let1, md5_long_col, opts_of, refuse_removed_opt,
+    spread,
 )
 from .text import words
 
@@ -917,8 +918,8 @@ def op_bpe_train(ctx: Ctx, rel: Rel, *rest) -> Rel:
 def _bpe_enc_word_fn(ranks):
     """Greedy lowest-rank BPE apply over one word: chars + '</w>',
     repeatedly merge the present pair with the smallest training rank
-    (ties impossible: ranks are unique). Shared by the per-row and
-    distinct encode paths so their values agree by construction."""
+    (ties impossible: ranks are unique); ``s_cache`` memoizes words
+    within one Arrow batch."""
     inf = float("inf")
 
     def enc_word(s_cache, w):
@@ -961,8 +962,7 @@ def op_bpe_encode(ctx: Ctx, rel: Rel, merges: Rel, *rest) -> Rel:
     """Apply a trained BPE merge table to a text column:
 
         ["bpe-encode", rel, merge_table,
-         {"col": "text", "as": "bpe_tokens", "tokenizer": "ascii",
-          "impl": "perrow"}]
+         {"col": "text", "as": "bpe_tokens", "tokenizer": "ascii"}]
         -> every input column plus ``as``: array<string> of BPE tokens
            (words end in the '</w>' marker; strip it downstream if
            undesired). Token counts under the REAL trained vocabulary —
@@ -980,24 +980,12 @@ def op_bpe_encode(ctx: Ctx, rel: Rel, merges: Rel, *rest) -> Rel:
     metadata (r12) and a mismatch is REFUSED with a curated error;
     hand-built tables carry no stamp and are trusted as-is.
 
-    Two batch-equivalent impls (values pinned identical by test):
-
-    * {'impl': 'perrow'} (default; the only streaming-legal shape) —
-      Arrow-batched pandas UDF (greedy lowest-rank merge, the standard
-      BPE apply loop) with a per-batch word memo: merge-loop cost is
-      paid once per DISTINCT word per Arrow BATCH, Zipf doing the heavy
-      lifting. Zero shuffles. Per-row and model-static, so a STREAMING
-      left is legal (score a live stream against a frozen tokenizer);
-      the merge table itself must be batch.
-    * {'impl': 'distinct'} (batch-only) — posexplode words, encode the
-      corpus-DISTINCT word relation once (the same enc_word UDF), join
-      the encoded vocabulary back (AQE broadcast-picks it when it
-      fits), and reassemble per-document arrays in word order
-      (array_sort over (pos, toks) structs). Merge-loop cost drops to
-      once per distinct word per CORPUS — the Zipf win at 100 TB when
-      the merge table is deep — at the price of two shuffles (the
-      vocab-join back + the per-doc regroup). Measured A/B at sf0.1 in
-      docs/PERF_BASELINE.md.
+    Encoding runs in an Arrow-batched pandas UDF (greedy lowest-rank
+    merge, the standard BPE apply loop) with a per-batch word memo:
+    merge-loop cost is paid once per DISTINCT word per Arrow BATCH, Zipf
+    doing the heavy lifting. Zero shuffles. Per-row and model-static,
+    so a STREAMING left is legal (score a live stream against a frozen
+    tokenizer); the merge table itself must be batch.
 
     Reference: no analog (§2.10 extension surface)."""
     if not isinstance(merges, Rel):
@@ -1009,32 +997,13 @@ def op_bpe_encode(ctx: Ctx, rel: Rel, merges: Rel, *rest) -> Rel:
     colc = opts.get("col", "text")
     out_col = opts.get("as", "bpe_tokens")
     tokenizer = _bpe_tokenizer_opt(opts)
-    impl = opts.get("impl", "perrow")
-    if impl not in ("perrow", "distinct"):
-        raise ArityError(
-            f"bpe-encode impl must be 'perrow' or 'distinct', got {impl!r}"
-        )
-    if impl == "distinct" and rel.df.isStreaming:
-        raise ArityError(
-            "bpe-encode {'impl': 'distinct'} is batch-only (it joins an "
-            "encoded corpus-distinct vocabulary back per document); "
-            "streaming inputs use the default per-row impl"
-        )
+    refuse_removed_opt(opts, "impl", "bpe-encode",
+                       "per-row encoding is the only implementation")
     if out_col in rel.df.columns:
         raise ArityError(
             f"bpe-encode: output column {out_col!r} already exists; "
             "pass {'as': name}"
         )
-    if impl == "distinct":
-        # reserved internal working columns (the semdedup-join rule):
-        # withColumn/select would silently shadow same-named inputs
-        for internal in ("__bpe_rid", "__bpe_pos", "__bpe_w", "__bpe_toks"):
-            if internal in rel.df.columns:
-                raise ArityError(
-                    f"bpe-encode: left column {internal!r} collides with "
-                    "a reserved internal working column of the distinct "
-                    "impl; rename it upstream"
-                )
     if merges.df.isStreaming:
         raise ArityError(
             "bpe-encode merge table must be batch (collected once and "
@@ -1081,73 +1050,6 @@ def op_bpe_encode(ctx: Ctx, rel: Rel, merges: Rel, *rest) -> Rel:
     from pyspark.sql.functions import pandas_udf
 
     tok_pat = _BPE_TOK_PY[tokenizer]
-
-    if impl == "distinct":
-        @pandas_udf("array<string>")
-        def _encode_word(ws):
-            enc_word = _bpe_enc_word_fn(bc.value)
-            cache: dict = {}
-            return ws.map(lambda w: enc_word(cache, w))
-
-        from ..operators.util import pin
-
-        wcol = _bpe_words_col(F.col(colc), tokenizer)
-        # __bpe_rid: physical per-row key (user id columns may be
-        # absent/NULL/duplicated). base feeds TWO branches (the word
-        # explode and the join-back), so pin it: both read the SAME
-        # materialization — ids consistent by construction, and the
-        # corpus text is scanned once, not twice. DISK_ONLY for the
-        # lsh-candidates reason ({"storage": "memory"} opts into
-        # MEMORY_AND_DISK for small interactive runs).
-        base = pin(
-            rel.df.withColumn("__bpe_rid", F.monotonically_increasing_id()),
-            StorageLevel.MEMORY_AND_DISK
-            if opts.get("storage") == "memory"
-            else StorageLevel.DISK_ONLY,
-        )
-        exploded = base.select(
-            "__bpe_rid", F.posexplode(wcol).alias("__bpe_pos", "__bpe_w")
-        )
-        enc_vocab = (
-            exploded.select("__bpe_w")
-            .distinct()
-            .withColumn("__bpe_toks", _encode_word(F.col("__bpe_w")))
-        )
-        per_doc = (
-            exploded.join(enc_vocab, "__bpe_w")
-            .groupBy("__bpe_rid")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("__bpe_pos"), F.col("__bpe_toks")
-                                )
-                            )
-                        ),
-                        lambda x: x["__bpe_toks"],
-                    )
-                ).alias("__bpe_toks")
-            )
-        )
-        # per-row parity at the edges: NULL text -> NULL; non-NULL text
-        # with zero tokens (dropped by posexplode) -> empty array
-        out = (
-            base.join(per_doc, "__bpe_rid", "left")
-            .withColumn(
-                out_col,
-                F.when(
-                    F.col(colc).isNotNull(),
-                    F.coalesce(
-                        F.col("__bpe_toks"),
-                        F.array().cast("array<string>"),
-                    ),
-                ),
-            )
-            .drop("__bpe_rid", "__bpe_toks")
-        )
-        return rel.with_df(out)
 
     @pandas_udf("array<string>")
     def _encode(texts):

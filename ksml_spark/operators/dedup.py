@@ -65,6 +65,7 @@ def minhash_slice(j: int) -> tuple[int, int]:
 
 from .util import opts_of as _opts  # noqa: E402  (shared option merging)
 from .util import float_opt, int_opt, pos_int_opt  # noqa: E402  (curated parses)
+from .util import refuse_removed_opt  # noqa: E402
 
 
 @defop("dedup")
@@ -211,35 +212,39 @@ def band_signature_cols(textc: str) -> dict:
 
 def _sig_struct_udf(with_toks: bool, shingle_k: int = SHINGLE_K,
                     family: str = "md5"):
-    """Arrow-batched per-row MinHash band signatures (and optionally the
-    distinct shingle-hash token set), numpy-vectorized per row.
+    """Arrow-batched per-row MinHash band signatures, numpy-vectorized
+    per row — the streaming signature path of both families.
 
-    family="md5" (default): bit-identical to band_signature_cols /
-    _tok_ids and the batch agg path (parity pinned by test) — 4 salted
-    md5 digests per shingle sliced into 16 32-bit pieces, min per
-    piece. The digests are C calls; the 16-way min that used to be a
-    ~770-iteration Python loop per doc is one numpy reshape+min.
+    family="md5" (streaming lsh-candidates): bit-identical to
+    band_signature_cols and the batch agg path (parity pinned by test)
+    — 4 salted md5 digests per shingle sliced into 16 32-bit pieces,
+    min per piece. The digests are C calls; the 16-way min that used to
+    be a ~770-iteration Python loop per doc is one numpy reshape+min.
 
-    family="km" ({"impl": "km"}): ONE unsalted md5 digest per shingle,
-    16 hash functions derived Kirsch-Mitzenmacher style as
+    family="km" (streaming lsh-join): ONE unsalted md5 digest per
+    shingle, 16 hash functions derived Kirsch-Mitzenmacher style as
     g_j = p0 + j*p1 from the digest's first two big-endian 32-bit
     pieces (Kirsch & Mitzenmacher, "Less Hashing, Same Performance" —
     two base hashes give an entire MinHash family). 4x fewer digest
-    calls than md5; token ids come free off the same digest and EQUAL
-    md5_long_col's values (first 60 bits), so the verify Jaccard is
-    family-independent. Band/bucket VALUES are a different space than
-    the md5 family — one family must be threaded to both join sides.
-    p0 + 15*p1 < 2^36, so int64 never overflows and the batch codegen
-    form (conv(substr(md5)) + j*p1, min agg) matches bit-exactly.
+    calls than md5. ``with_toks`` (km only — the streaming lsh-join
+    verify) adds the distinct shingle-hash token set, taken free off
+    the same digests; its ids EQUAL md5_long_col's values (first 60
+    bits), so the verify Jaccard is family-independent. Band/bucket
+    VALUES are a different space than the md5 family — one family must
+    be threaded to both join sides. p0 + 15*p1 < 2^36, so int64 never
+    overflows and the batch codegen form (conv(substr(md5)) + j*p1, min
+    agg) matches bit-exactly.
 
     Why a UDF and not expressions: Spark's HOF transform/array_min
     exprs don't codegen — measured at sf0.1 (5000 docs, streaming,
     min-of-2): md5 exprs 900 docs/s, xxhash64 exprs 860 docs/s
     (swapping md5 for the cheap JVM hash changes nothing — per-element
     interpretation is the cost), this UDF ~2.1k before vectorization,
-    higher after (bench lsh_join_stream rows). Used on STREAMING inputs
-    (shuffle-free, no stateful agg); the batch path keeps the explode +
-    codegen hash-agg plan, which beats all per-row forms."""
+    higher after. Used on STREAMING inputs (shuffle-free, no stateful
+    agg); the batch path keeps the explode + codegen hash-agg plan,
+    which beats all per-row forms."""
+    if with_toks and family != "km":
+        raise ValueError("_sig_struct_udf token sets come from the km digests")
     import hashlib
 
     import numpy as np
@@ -293,12 +298,6 @@ def _sig_struct_udf(with_toks: bool, shingle_k: int = SHINGLE_K,
                 .min(axis=0)
                 .astype(np.int64)
             )
-            if with_toks:
-                tbuf = b"".join(md5(b).digest() for b in enc)
-                toks = np.unique(
-                    (np.frombuffer(tbuf, dtype=">u8")[::2] >> np.uint64(4))
-                    .astype(np.int64)
-                )
         bands = [
             md5(
                 "".join(
@@ -309,38 +308,32 @@ def _sig_struct_udf(with_toks: bool, shingle_k: int = SHINGLE_K,
         ]
         return (bands, toks.tolist()) if with_toks else (bands,)
 
-    if with_toks:
-
-        @pandas_udf(ret)
-        def _sig(texts):
-            rows = [_one(t) for t in texts]
-            return pd.DataFrame(
-                {"bands": [r[0] for r in rows], "toks": [r[1] for r in rows]}
-            )
-
-    else:
-
-        @pandas_udf(ret)
-        def _sig(texts):
-            return pd.DataFrame({"bands": [_one(t)[0] for t in texts]})
+    @pandas_udf(ret)
+    def _sig(texts):
+        rows = [_one(t) for t in texts]
+        cols = {"bands": [r[0] for r in rows]}
+        if with_toks:
+            cols["toks"] = [r[1] for r in rows]
+        return pd.DataFrame(cols)
 
     return _sig
 
 
 def band_signatures(
-    df: DataFrame, idc: str, textc: str, impl: str = "auto",
+    df: DataFrame, idc: str, textc: str, family: str = "md5",
     keep: tuple = (),
 ) -> DataFrame:
-    """(id, band_0..band_{B-1}) MinHash band buckets.
+    """(id, band_0..band_{B-1}) MinHash band buckets of one hash family
+    (``family``: "md5", the salted family the DuckDB oracle replicates,
+    or "km" — see _sig_struct_udf).
 
     STREAMING inputs take a shuffle-free per-row path (no stateful agg;
     rows with NULL text are dropped, matching the batch path where they
-    produce no shingle rows): the Arrow-vectorized _sig_struct_udf by
-    default, or the pure-expression band_signature_cols with
-    impl="expr" (both bit-identical to the batch construction; the
-    vectorized form measured ~4x faster — interpreted HOF exprs don't
-    codegen). Batch inputs take the explode + codegen hash-agg path
-    below, which beats both.
+    produce no shingle rows): the Arrow-vectorized _sig_struct_udf,
+    bit-identical to the batch construction (measured ~4x faster than
+    the interpreted HOF expressions of band_signature_cols). Batch
+    inputs take the explode + codegen hash-agg path below, which beats
+    both.
 
     Plan shape chosen for codegen: explode shingles -> 4 salted md5 columns
     sliced into 16 32-bit hex pieces (whole-stage codegen; Spark's
@@ -361,14 +354,7 @@ def band_signatures(
     if df.isStreaming:
         nn = df.filter(F.col(textc).isNotNull())
         kc = [F.col(c) for c in keep]
-        if impl == "expr":
-            bands = band_signature_cols(textc)
-            return nn.select(
-                F.col(idc), *kc, *[c.alias(n) for n, c in bands.items()]
-            )
-        sig = _sig_struct_udf(
-            with_toks=False, family="km" if impl == "km" else "md5"
-        )
+        sig = _sig_struct_udf(with_toks=False, family=family)
         return nn.select(
             F.col(idc), *kc, sig(F.col(textc)).alias("__sig")
         ).select(
@@ -380,15 +366,13 @@ def band_signatures(
             ],
         )
 
-    if impl == "km":
-        # batch km: same explode + codegen min-agg plan shape as the md5
-        # family below, ONE md5 per shingle with the 16 functions derived
-        # as p0 + j*p1 (no overflow: < 2^36) — bit-identical to the
-        # streaming km UDF (parity pinned by test)
-        sh = spread(df).select(
-            F.col(idc), F.explode(shingles_col(F.col(textc))).alias("__s")
-        )
-        pieces = sh.select(
+    sh = spread(df).select(F.col(idc), F.explode(shingles_col(F.col(textc))).alias("__s"))
+    if family == "km":
+        # batch km (the static side of a stream-static lsh-join): ONE md5
+        # per shingle with the 16 functions derived as p0 + j*p1 (no
+        # overflow: < 2^36) — bit-identical to the streaming km UDF
+        # (parity pinned by test)
+        halves = sh.select(
             F.col(idc),
             *[
                 F.conv(F.substring(F.md5(F.col("__s")), p * 8 + 1, 8), 16, 10)
@@ -397,54 +381,36 @@ def band_signatures(
                 for p in range(2)
             ],
         )
-        mins = (
-            pieces.select(
-                F.col(idc),
-                *[
-                    (F.col("__q0") + F.lit(j) * F.col("__q1")).alias(f"__p{j}")
-                    for j in range(N_HASHES)
-                ],
-            )
-            .groupBy(idc)
-            .agg(*[F.min(f"__p{j}").alias(f"__mh{j}") for j in range(N_HASHES)])
-        )
-        return mins.select(
+        pieces = halves.select(
             F.col(idc),
             *[
-                F.md5(
-                    F.concat(
-                        *[
-                            F.col(f"__mh{b * ROWS_PER_BAND + r}").cast("string")
-                            for r in range(ROWS_PER_BAND)
-                        ]
-                    )
-                ).alias(f"band_{b}")
-                for b in range(N_BANDS)
+                (F.col("__q0") + F.lit(j) * F.col("__q1")).alias(f"__p{j}")
+                for j in range(N_HASHES)
             ],
         )
-
-    sh = spread(df).select(F.col(idc), F.explode(shingles_col(F.col(textc))).alias("__s"))
-    hashed = sh.select(
-        F.col(idc),
-        *[
-            F.md5(F.concat(F.lit(f"{m}#"), F.col("__s"))).alias(f"__m{m}")
-            for m in range(N_MD5)
-        ],
-    )
-    # hash values as BIGINTs: min(long) hash-aggregates in codegen (min over
-    # strings would fall back to SortAggregate — string agg buffers are not
-    # hash-mutable) and the shuffle rows shrink to 16 longs
-    pieces = hashed.select(
-        F.col(idc),
-        *[
-            F.conv(
-                F.substring(F.col(f"__m{minhash_slice(j)[0]}"), minhash_slice(j)[1], 8), 16, 10
-            )
-            .cast("long")
-            .alias(f"__p{j}")
-            for j in range(N_HASHES)
-        ],
-    )
+    else:
+        hashed = sh.select(
+            F.col(idc),
+            *[
+                F.md5(F.concat(F.lit(f"{m}#"), F.col("__s"))).alias(f"__m{m}")
+                for m in range(N_MD5)
+            ],
+        )
+        # hash values as BIGINTs: min(long) hash-aggregates in codegen
+        # (min over strings would fall back to SortAggregate — string agg
+        # buffers are not hash-mutable) and the shuffle rows shrink to 16
+        # longs
+        pieces = hashed.select(
+            F.col(idc),
+            *[
+                F.conv(
+                    F.substring(F.col(f"__m{minhash_slice(j)[0]}"), minhash_slice(j)[1], 8), 16, 10
+                )
+                .cast("long")
+                .alias(f"__p{j}")
+                for j in range(N_HASHES)
+            ],
+        )
     mins = pieces.groupBy(idc).agg(
         *[F.min(f"__p{j}").alias(f"__mh{j}") for j in range(N_HASHES)]
     )
@@ -533,6 +499,16 @@ def op_lsh_candidates(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     return KStreamRel(pairs, key_cols=("doc_a", "doc_b"))
 
 
+def _lsh_family(left: DataFrame, right: DataFrame) -> str:
+    """lsh-join's MinHash family, fixed by its inputs. Streaming output
+    never meets the batch DuckDB oracle, so a streaming side takes the
+    km family (parity-pinned against its own batch codegen form; the
+    single-digest signatures measured 8.6-9.9k docs/s vs 1.9-2.2k on
+    md5). All-batch joins keep salted md5, the family the oracle
+    replicates. One family serves BOTH sides (band/bucket join)."""
+    return "km" if left.isStreaming or right.isStreaming else "md5"
+
+
 @defop("lsh-join")
 def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
     """Cross-corpus near-duplicate candidates — the incremental-dedup
@@ -558,16 +534,12 @@ def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
     built once (no persist needed — unlike the self-join, nothing is
     read twice). The shuffle key is the bucket, so cost scales with
     rows·bands per side; a small reference set broadcasts with
-    {"broadcast": true}. Hash family: streaming inputs default to the
+    {"broadcast": true}. The hash family is fixed by the inputs
+    (_lsh_family): when either side is streaming, both sides use the
     single-digest Kirsch-Mitzenmacher MinHash family (one md5 per
     shingle instead of four salted ones, token ids shared — the
-    measured ~4x-faster signature path), batch inputs to the salted-md5
-    family the DuckDB oracle replicates; {"impl": "km"|"md5"|"expr"}
-    overrides the default on BOTH sides ("km" = single-digest KM,
-    "md5" = salted-md5 codegen — the pre-r09 streaming default and the
-    escape hatch for checkpointed pipelines that must keep their old
-    candidate sets, "expr" = md5 family as pure interpreted
-    expressions, kept for plan-shape A/B).
+    measured ~4x-faster signature path); all-batch inputs use the
+    salted-md5 family the DuckDB oracle replicates.
     Reference: no analog (§2.10 extension)."""
     if not isinstance(right, Rel):
         raise TypeDispatchError(
@@ -575,6 +547,11 @@ def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
             f"got {type(right).__name__}"
         )
     opts = _opts(rest)
+    refuse_removed_opt(
+        opts, "impl", "lsh-join",
+        "the hash family follows the inputs (km when either side is "
+        "streaming, salted md5 otherwise)",
+    )
     idc = opts.get("id", "doc_id")
     ridc = opts.get("right_id", idc)
     colc = opts.get("col", "text")
@@ -655,32 +632,7 @@ def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
         raise ArityError(
             f"lsh-join method must be 'minhash' or 'winnow', got {method!r}"
         )
-    # {"impl": ...}: "auto" (default; resolves below — salted-md5 family
-    # on batch inputs, km on streaming), "md5" (force the salted-md5
-    # family — codegen agg on batch, vectorized Arrow UDF on streaming),
-    # "expr" (md5 family, pure expressions — interpreted HOFs, kept for
-    # plan-shape A/B), "km" (force the
-    # single-digest Kirsch-Mitzenmacher family — 4x fewer digests;
-    # band/bucket values are a different space than md5, so ONE impl is
-    # threaded to BOTH sides; verify token ids are md5_long_col-identical
-    # across families, so Jaccard values are impl-independent). md5 is
-    # the batch default because it is the family the DuckDB oracle
-    # replicates; km's parity with its own batch codegen form is pinned
-    # by test instead.
-    impl = opts.get("impl", "auto")
-    if impl not in ("auto", "expr", "km", "md5"):
-        raise ArityError(
-            f"lsh-join impl must be 'auto', 'expr', 'km' or 'md5', got {impl!r}"
-        )
-    if impl == "auto" and (left.df.isStreaming or right.df.isStreaming):
-        # streaming default is the km family (r09): streaming output
-        # never meets the batch DuckDB oracle, km is parity-pinned
-        # against its own batch codegen form, and the single-digest
-        # signatures measured 8.6-9.9k docs/s vs 1.9-2.2k on md5.
-        # Batch keeps md5 (the family the oracle replicates); callers
-        # can still force either side of the trade with {"impl": ...}.
-        # ONE family must be threaded to BOTH sides (band/bucket join).
-        impl = "km"
+    family = _lsh_family(left.df, right.df)
     wk = int_opt(opts, "k", "lsh-join", SHINGLE_K)
     ww = int_opt(opts, "window", "lsh-join", 4)
     if wk < 1 or ww < 1:
@@ -705,7 +657,7 @@ def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
     def _long(df, id_col, text_col, out, keep=()):
         if method == "winnow":
             return _fp_long(df, id_col, text_col, out, keep=keep)
-        sigs = band_signatures(df, id_col, text_col, impl=impl, keep=keep)
+        sigs = band_signatures(df, id_col, text_col, family=family, keep=keep)
         return sigs.select(
             F.col(id_col).alias(out),
             *[F.col(c) for c in keep],
@@ -751,7 +703,7 @@ def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
         thr = float(verify)
 
         def _tok_ids(text_col):
-            # impl-independent: the km streaming UDF emits the SAME
+            # family-independent: the km streaming UDF emits the SAME
             # 60-bit md5 token ids, so exact Jaccard agrees across
             # families and across the two join sides
             return F.array_distinct(
@@ -772,27 +724,12 @@ def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
                     .select(out_a, *lk, "__ta", F.lit(0).alias("band"),
                             F.col("__fp").cast("string").alias("bucket"))
                 )
-            elif impl == "expr":
-                bands = band_signature_cols(colc)
-                sigsel = [
-                    _tok_ids(colc).alias("__ta"),
-                    F.posexplode(
-                        F.array(*[bands[f"band_{b}"] for b in range(N_BANDS)])
-                    ).alias("band", "bucket"),
-                ]
-                base = ldf.filter(F.col(colc).isNotNull()).select(
-                    F.col(idc).alias(out_a), *lk, *sigsel
-                )
             else:
-                # vectorized: ONE Arrow UDF eval per row yields bands AND
-                # the token set (the expression form re-walks the shingle
-                # array per hash function, interpreted — ~4x slower).
-                # Two select steps so the struct is projected once;
-                # CollapseProject won't inline (and so duplicate) a
-                # non-cheap Python UDF expression.
-                sig = _sig_struct_udf(
-                    with_toks=True, family="km" if impl == "km" else "md5"
-                )
+                # vectorized: ONE Arrow UDF eval per row yields the km
+                # bands AND the token set. Two select steps so the
+                # struct is projected once; CollapseProject won't inline
+                # (and so duplicate) a non-cheap Python UDF expression.
+                sig = _sig_struct_udf(with_toks=True, family="km")
                 base = (
                     ldf.filter(F.col(colc).isNotNull())
                     .select(F.col(idc).alias(out_a), *lk, sig(F.col(colc)).alias("__sig"))

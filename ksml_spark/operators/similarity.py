@@ -40,6 +40,7 @@ from ..model import KStreamRel, Rel
 from .util import opts_of as _opts  # noqa: E402  (shared option merging)
 from .util import req_opt as _req  # noqa: E402  (curated required-option fetch)
 from .util import float_opt, int_opt  # noqa: E402  (curated parses)
+from .util import refuse_removed_opt  # noqa: E402
 from .util import pos_int_opt as _pos_int_opt  # noqa: E402  (curated >= 1 int parse)
 
 
@@ -143,7 +144,7 @@ def _nearest_order() -> Column:
     )
 
 
-# the {"assign_impl": "auto"} cutover: below this K the codegen
+# the nearest-centroid assignment cutover: below this K the codegen
 # crossJoin fan-out wins (zero Arrow transfer, stays in whole-stage
 # codegen); at or above it the N x K dot work dominates and one BLAS
 # matmul per Arrow batch is 1-2 orders faster per element. 257 keeps
@@ -392,23 +393,25 @@ def _cents_of_rel(cents_rel: Rel, opts, op_name: str, dim):
     )
 
 
-def _assign_impl_opts(opts, op_name: str, dim):
-    """Parse the shared {'assign_impl': ..., 'max_k': ...} options."""
-    from ..errors import ArityError
+def _assign_max_k(opts, op_name: str) -> int:
+    """Parse {'max_k': n}, refusing the retired {'assign_impl': ...}."""
+    refuse_removed_opt(
+        opts, "assign_impl", op_name,
+        f"the assignment path follows the centroid count (BLAS at K >= "
+        f"{_BLAS_ASSIGN_MIN_K} with a fixed 'dim', the expression plan below)",
+    )
+    return int_opt(opts, "max_k", op_name, 65536, lo=1)
 
-    impl = opts.get("assign_impl", "auto")
-    if impl not in ("auto", "expr", "blas"):
-        raise ArityError(
-            f"{op_name} assign_impl must be 'auto', 'expr' or 'blas', "
-            f"got {impl!r}"
-        )
-    max_k = int_opt(opts, "max_k", op_name, 65536, lo=1)
-    if impl == "blas" and not dim:
-        raise ArityError(
-            f"{op_name} {{'assign_impl': 'blas'}} needs {{'dim': n}} "
-            "(the matmul requires a fixed vector width)"
-        )
-    return impl, max_k
+
+def _use_blas_assign(dim, init_rows) -> bool:
+    """The assignment path, picked from what construction observes: the
+    BLAS matmul pick needs a fixed width and wins once K reaches
+    _BLAS_ASSIGN_MIN_K; NULL centroid ids stay on the expression plan."""
+    return bool(
+        dim
+        and len(init_rows) >= _BLAS_ASSIGN_MIN_K
+        and all(r["__cid"] is not None for r in init_rows)
+    )
 
 
 from .util import spread as _spread  # noqa: E402  (shared plan helper)
@@ -761,15 +764,14 @@ def op_ann_ivf_topk(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     100 TB inverted-file layout — on a real deployment the assignment
     output is written bucketed by cluster id so probes prune partitions.
 
-    {'assign_impl': 'auto'|'expr'|'blas'} + {'max_k': n} (r12): the
-    expr assignment pays K codegen dots per row, and with the centroid
-    sample growing with the corpus that branch is N x K — the r12
-    vector-axis probe measured this op superlinear (exp 1.56 on the
-    30x step) on exactly it. 'auto' (default) switches to the
-    bit-exact BLAS argmax pick at K >= 257 (the kmeans-assign
-    machinery; see its docstring), which also removes the expr plan's
-    corpus-wide argmax groupBy shuffle; the over-max_k centroid guard
-    applies on every path."""
+    Assignment path (r12) + {'max_k': n}: the expr assignment pays K
+    codegen dots per row, and with the centroid sample growing with the
+    corpus that branch is N x K — the r12 vector-axis probe measured
+    this op superlinear (exp 1.56 on the 30x step) on exactly it. At
+    K >= 257 (with a fixed 'dim') the op switches to the bit-exact BLAS
+    argmax pick (the kmeans-assign machinery; see its docstring), which
+    also removes the expr plan's corpus-wide argmax groupBy shuffle;
+    the over-max_k centroid guard applies on every path."""
     from pyspark.sql import Window
 
     opts = _opts(rest)
@@ -787,7 +789,7 @@ def op_ann_ivf_topk(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             "of one relation) and is batch-only; score a STREAM against a "
             "static corpus with semdedup-join or lsh-join instead"
         )
-    impl, max_k = _assign_impl_opts(opts, "ann-ivf-topk", dim)
+    max_k = _assign_max_k(opts, "ann-ivf-topk")
     cents_rel = next((r for r in rest if isinstance(r, Rel)), None)
     if cents_rel is not None and (opts.get("centroids") or opts.get("init")):
         raise ArityError(
@@ -825,12 +827,7 @@ def op_ann_ivf_topk(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             "ann-ivf-topk: centroids filter matched more than "
             f"max_k={max_k} rows — sample sparser or raise {{'max_k': n}}"
         )
-    use_blas = impl == "blas" or (
-        impl == "auto"
-        and dim
-        and len(init_rows) >= _BLAS_ASSIGN_MIN_K
-        and all(r["__cid"] is not None for r in init_rows)
-    )
+    use_blas = _use_blas_assign(dim, init_rows)
     assign = None
     if use_blas:
         # cluster ids come from the CENTROID side (a relation operand
@@ -1268,21 +1265,21 @@ def op_kmeans_assign(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     of K centroids, one codegen fan-out + hash-agg argmax, no shuffle of
     the corpus side.
 
-    {'assign_impl': 'auto'|'expr'|'blas'} (r12): the codegen crossJoin
-    fan-out pays K unrolled dots per row — with K itself growing with
-    the corpus (the %127-style sampling), assignment work is N x K and
-    the r12 vector-axis probe measured ann-ivf superlinear on exactly
-    this branch. 'blas' collects the bounded centroid set (``max_k``
-    guard, default 65536 — the kmeans-centroids contract) and assigns
-    with one BLAS matmul + argmax per Arrow batch, bit-exact to the
-    expr plan via the semdedup-join near-tie machinery (sequential-dot
-    re-decision within a 1e-9 cosine gap; see _blas_assign_udf), then
-    recomputes `sim` against the PICKED centroid with the identical
-    codegen dot expression — one dot per row instead of K, and no
-    corpus shuffle (the expr plan's argmax groupBy exchanges the
-    corpus once). 'auto' (default) picks blas at K >= 257, keeping
-    small-K corpora on the oracle-reference expr plan. One observable
-    difference under MALFORMED input: duplicate ids collapse to one
+    Assignment path (r12): the codegen crossJoin fan-out pays K
+    unrolled dots per row — with K itself growing with the corpus (the
+    %127-style sampling), assignment work is N x K and the r12
+    vector-axis probe measured ann-ivf superlinear on exactly this
+    branch. At K >= 257 (with a fixed 'dim') the op collects the
+    bounded centroid set (``max_k`` guard, default 65536 — the
+    kmeans-centroids contract) and assigns with one BLAS matmul +
+    argmax per Arrow batch, bit-exact to the expr plan via the
+    semdedup-join near-tie machinery (sequential-dot re-decision within
+    a 1e-9 cosine gap; see _blas_assign_udf), then recomputes `sim`
+    against the PICKED centroid with the identical codegen dot
+    expression — one dot per row instead of K, and no corpus shuffle
+    (the expr plan's argmax groupBy exchanges the corpus once).
+    Small-K corpora stay on the oracle-reference expr plan. One
+    observable difference under MALFORMED input: duplicate ids collapse to one
     output row on the expr plan (groupBy) but flow through per-row on
     blas — unique ids are the op's key contract. A centroid filter
     matching more than ``max_k`` rows is refused loudly on every path
@@ -1305,12 +1302,19 @@ def op_kmeans_assign(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             "centroid relation operand (e.g. kmeans-centroids output)"
         )
     src_desc = f"filter {init!r}" if cents_rel is None else "relation"
-    impl, max_k = _assign_impl_opts(opts, "kmeans-assign", dim)
+    max_k = _assign_max_k(opts, "kmeans-assign")
     # internal (r18, the semdedup scan-share): carry the prepared vector
     # and norm through the assignment so a caller that needs them (the
     # semdedup rank window + pair join) does not re-scan the corpus and
     # join back on the id. Within a group every row shares one (__v,
     # __n) — first() is exact. Public output is unchanged without it.
+    # Carrying also pins the expr plan: the caller joins the result
+    # back on the id, and the expr argmax's groupBy leaves its output
+    # hash-partitioned by exactly that key, so the join adds no
+    # exchange; the blas pick would re-shuffle and pay the Arrow pass
+    # for nothing (measured at 60k x K=472: expr ~5.5-6.2s in-op vs
+    # blas ~8.6-12s). Standalone assignment keeps the K cutover, where
+    # blas wins 3x.
     carry = bool(opts.get("_carry_vec"))
     if rel.df.isStreaming:
         raise ArityError(
@@ -1342,13 +1346,7 @@ def op_kmeans_assign(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             f"kmeans-assign: centroids {src_desc} matched more than "
             f"max_k={max_k} rows — sample sparser or raise {{'max_k': n}}"
         )
-    use_blas = impl == "blas" or (
-        impl == "auto"
-        and dim
-        and len(init_rows) >= _BLAS_ASSIGN_MIN_K
-        and all(r["__cid"] is not None for r in init_rows)
-    )
-    if use_blas:
+    if not carry and _use_blas_assign(dim, init_rows):
         # cluster ids come from the CENTROID side (a relation operand
         # may carry a different id type than the corpus key)
         cid_type = next(
@@ -1369,10 +1367,9 @@ def op_kmeans_assign(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
                 "cluster",
                 "left",
             )
-            sel = [F.col(idc), F.col("cluster"), _centroid_sim(dim).alias("sim")]
-            if carry:
-                sel += [F.col("__v"), F.col("__n")]
-            assigned = picked.select(*sel)
+            assigned = picked.select(
+                F.col(idc), F.col("cluster"), _centroid_sim(dim).alias("sim")
+            )
             return KStreamRel(assigned, key_cols=(idc,))
         # no usable centroid: the expr plan's all-NULL sims produce the
         # same all-NULL assignment — fall through
@@ -1487,6 +1484,11 @@ def op_semdedup(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     opts = _opts(rest)
     idc, vecc = opts.get("id", "vec_id"), opts.get("vec", "embedding")
     dim = _pos_int_opt(opts, "dim", "semdedup")
+    refuse_removed_opt(
+        opts, "assign_impl", "semdedup",
+        "semdedup assigns with the expression plan, whose groupBy already "
+        "partitions by the id it joins on",
+    )
     thr = float_opt(opts, "threshold", "semdedup", 0.9)
     action = opts.get("action", "annotate")
     if action not in ("annotate", "filter"):
@@ -1511,24 +1513,15 @@ def op_semdedup(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     assigned = op_kmeans_assign(
         ctx, rel, *(() if cents_rel is None else (cents_rel,)),
         {"id": idc, "vec": vecc, "dim": dim, "centroids": cents,
-                   # assignment levers threaded through (r12) — but the
-                   # DEFAULT here is expr, not auto: semdedup joins the
-                   # assignment back to the corpus on `idc`, and the
-                   # expr argmax's groupBy leaves its output hash-
-                   # partitioned by exactly that key, so the join adds
-                   # no exchange; the blas pick would re-shuffle and
-                   # pay the Arrow pass for nothing (measured A/B at
-                   # 60k x K=472: expr ~5.5-6.2s in-op vs blas
-                   # ~8.6-12s). Standalone kmeans-assign (no downstream
-                   # key reuse) keeps auto, where blas wins 3x.
-                   "assign_impl": opts.get("assign_impl", "expr"),
                    "max_k": opts.get("max_k", 65536),
                    "centroid_id": opts.get("centroid_id", "cluster"),
                    "centroid_vec": opts.get("centroid_vec", "centroid"),
                    # r18 scan-share (VERDICT r17 #9): the assignment agg
                    # carries (__v, __n) through, so the old second
                    # corpus scan (_prepared) + sort-merge join-back on
-                   # the id is gone — one scan feeds the rank window
+                   # the id is gone — one scan feeds the rank window.
+                   # Carrying also keeps the expr plan (see
+                   # kmeans-assign), whose groupBy partitions by `idc`
                    "_carry_vec": True}
     ).df
     members = assigned

@@ -35,7 +35,7 @@ from typing import Any, Iterator, Optional
 from pyspark.sql import functions as F
 
 from ..errors import ArityError
-from .util import opts_of
+from .util import opts_of, refuse_removed_opt
 from ..eval import Ctx, defop
 from ..exprs import Lambda
 from ..model import KStreamRel, Rel
@@ -352,13 +352,13 @@ def op_transform_with_state(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     for streaming queries — this op forces its creation (else batch runs
     die with RpcEndpointNotFoundException). NATIVE execution (not plan
     construction) needs ``google.protobuf`` in the Python env — the
-    worker's state-server protocol uses it. Without protobuf, BATCH
-    input automatically runs a semantics-preserving shim (fresh empty
-    state per key, one handleInputRows pass per group, state discarded —
-    the native batch lifecycle, compiled to applyInPandas; force with
-    ``{"impl": "shim"}``, forbid with ``{"impl": "native"}``), and
-    streaming input gets a curated construction-time refusal pointing at
-    the ``process`` op. Scale posture: one shuffle on the
+    worker's state-server protocol uses it, so the path follows the
+    environment: with protobuf the native operator runs; without it,
+    BATCH input runs a semantics-preserving shim (fresh empty state per
+    key, one handleInputRows pass per group, state discarded — the
+    native batch lifecycle, compiled to applyInPandas), and streaming
+    input gets a curated construction-time refusal pointing at the
+    ``process`` op. Scale posture: one shuffle on the
     grouping key; state is per-key, partition-local, RocksDB-backed with
     changelog checkpointing — the Kafka Streams state-store model,
     verbatim."""
@@ -370,6 +370,11 @@ def op_transform_with_state(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             opts.update({k: v for k, v in r.items() if v is not None})
         elif r is not None:
             proc = r
+    refuse_removed_opt(
+        opts, "impl", "transform-with-state",
+        "the native operator runs when google.protobuf is installed, the "
+        "batch shim otherwise",
+    )
     schema = opts.get("schema")
     if proc is None or schema is None:
         raise ArityError(
@@ -388,19 +393,8 @@ def op_transform_with_state(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     if not key_cols:
         raise ArityError("transform-with-state requires key columns")
 
-    impl = opts.get("impl", "auto")
-    if impl not in ("auto", "native", "shim"):
-        raise ArityError(
-            f"transform-with-state impl must be 'auto'|'native'|'shim', got {impl!r}"
-        )
-    use_shim = impl == "shim" or (impl == "auto" and not _has_protobuf())
-    if use_shim:
+    if not _has_protobuf():
         if rel.df.isStreaming:
-            if impl == "shim":
-                raise ArityError(
-                    "transform-with-state {'impl': 'shim'} is batch-only; "
-                    "streaming needs the native state server"
-                )
             raise ArityError(
                 "transform-with-state streaming execution needs "
                 "google.protobuf (the worker state-server protocol); this "

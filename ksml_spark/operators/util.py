@@ -155,6 +155,19 @@ def req_opt(opts: dict, key: str, op: str):
     return opts[key]
 
 
+def refuse_removed_opt(opts: dict, key: str, op: str, replacement: str) -> None:
+    """Curated refusal of a retired implementation switch: each such op
+    now picks its own path, and a form still passing ``key`` gets an
+    ArityError naming what replaced it instead of a silently ignored
+    option."""
+    from ..errors import ArityError
+
+    if key in opts:
+        raise ArityError(
+            f"{op}: option {key!r} was removed — {replacement}; drop the key"
+        )
+
+
 def order_cols(order) -> list[Column]:
     """Parse order specs: ``"col"`` ascending, ``"-col"`` descending
     (the order-by convention)."""

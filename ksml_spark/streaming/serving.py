@@ -44,6 +44,7 @@ Storage backends:
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 from typing import Any, Optional
 
@@ -54,6 +55,10 @@ from ..errors import ArityError
 from ..operators.util import float_opt, int_opt, opts_of, str_opt
 from ..eval import Ctx, defop
 from ..model import KTableRel, Rel
+
+
+# serializes the session-conf flip around bucketed lookups (see lookup)
+_BUCKETED_LOOKUP_LOCK = threading.Lock()
 
 
 @dataclass
@@ -235,16 +240,18 @@ class ServeHandle:
         # a bare filter (it only credits avoided shuffles, not pruning);
         # turn it off for the lookup so the scan reads ONE bucket —
         # "SelectedBucketsCount: 1 out of N" — the ring.clj host-routing
-        # analog. Restored after; single-driver serving assumption noted
-        # in the module docstring.
+        # analog. The conf is session-wide, so set/collect/restore runs
+        # under one module lock: two client threads interleaving their
+        # restores would otherwise leave the session at "false" for good.
         conf = self.spark.conf
         key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        prev = conf.get(key)
-        conf.set(key, "false")
-        try:
-            return df.collect()
-        finally:
-            conf.set(key, prev)
+        with _BUCKETED_LOOKUP_LOCK:
+            prev = conf.get(key)
+            conf.set(key, "false")
+            try:
+                return df.collect()
+            finally:
+                conf.set(key, prev)
 
     def refresh(self) -> "ServeHandle":
         """Streaming handles: block until everything currently available

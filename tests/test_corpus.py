@@ -453,62 +453,20 @@ def _train_encode(spark, corpus, probe, train_opts, enc_opts):
             for r in out.df.collect()}
 
 
-def test_bpe_encode_distinct_impl_matches_perrow(spark):
-    """{'impl': 'distinct'} (encode the corpus-distinct vocabulary once,
-    join back, reassemble in word order) must equal the per-row path
-    token-for-token, including the edges: NULL text -> NULL, non-NULL
-    text with zero tokens -> empty array, repeated words, duplicate and
-    NULL doc ids (the join-back runs on a minted physical row key)."""
-    corpus = _docs(spark, [(1, "low lower lowest newest widest " * 3)])
-    probe = spark.createDataFrame(
-        [(1, "low lowest newest low"), (1, "newest ?!"), (None, "widest low"),
-         (2, None), (3, "?!  ::"), (4, "")],
-        "doc_id long, text string")
-    from ksml_spark import ksml
-
-    merges = ksml(["bpe-train", ["stream", corpus, {"key": "doc_id"}],
-                   {"merges": 40, "min_freq": 1, "min_pair_freq": 1}],
-                  spark=spark)
-
-    def run(impl):
-        out = ksml(["bpe-encode", ["stream", probe, {"key": "doc_id"}],
-                    merges, {"col": "text", "impl": impl}], spark=spark)
-        return sorted(
-            ((r["doc_id"], r["text"],
-              None if r["bpe_tokens"] is None else tuple(r["bpe_tokens"]))
-             for r in out.df.collect()),
-            key=lambda t: (t[0] is None, t[0], t[1] is None, t[1]),
-        )
-
-    perrow, distinct = run("perrow"), run("distinct")
-    assert distinct == perrow
-    # edge values, not just parity
-    vals = {(d, t): toks for d, t, toks in distinct}
-    assert vals[(2, None)] is None
-    assert vals[(3, "?!  ::")] == ()
-    assert vals[(4, "")] == ()
-
-
-def test_bpe_encode_distinct_impl_guards(spark, tmp_path):
-    """distinct impl refuses streaming lefts and reserved-column
-    collisions; junk impl/tokenizer options are curated errors."""
+def test_bpe_encode_distinct_impl_guards(spark):
+    """The retired {'impl': ...} switch (the distinct-vocabulary encode
+    is gone; per-row encoding is the only implementation) and junk
+    tokenizer options are curated errors."""
     from ksml_spark import ksml
 
     corpus = _docs(spark, [(1, "hello world")])
     merges = ksml(["bpe-train", ["stream", corpus, {"key": "doc_id"}],
                    {"merges": 5, "min_freq": 1, "min_pair_freq": 1}],
                   spark=spark)
-    sdf = _stream_docs(spark, tmp_path, [(1, "hello")])
-    with pytest.raises(ArityError, match="batch-only"):
-        ksml(["bpe-encode", ["stream", sdf, {"key": "doc_id"}],
-              merges, {"impl": "distinct"}], spark=spark)
-    bad = corpus.withColumnRenamed("doc_id", "__bpe_rid")
-    with pytest.raises(ArityError, match="__bpe_rid"):
-        ksml(["bpe-encode", ["stream", bad, {"key": "text"}],
-              merges, {"impl": "distinct"}], spark=spark)
-    with pytest.raises(ArityError, match="impl"):
-        ksml(["bpe-encode", ["stream", corpus, {"key": "doc_id"}],
-              merges, {"impl": "vectorized"}], spark=spark)
+    for impl in ("distinct", "perrow", "vectorized"):
+        with pytest.raises(ArityError, match="'impl' was removed.*per-row"):
+            ksml(["bpe-encode", ["stream", corpus, {"key": "doc_id"}],
+                  merges, {"impl": impl}], spark=spark)
     with pytest.raises(ArityError, match="tokenizer"):
         ksml(["bpe-encode", ["stream", corpus, {"key": "doc_id"}],
               merges, {"tokenizer": "bert"}], spark=spark)
@@ -519,7 +477,7 @@ def test_bpe_unicode_tokenizer_non_latin_fallback(spark):
     (documented limitation — empty arrays); {'tokenizer': 'unicode'}
     gives zh/fr words character-level BPE fallback, the Spark-side
     train split and the Python-side encode split agree on word
-    boundaries (round-trip), and both encode impls agree under it."""
+    boundaries (round-trip)."""
     rows = [(1, "数据 管道 数据"), (2, "déjà vu déjà"), (3, "plain ascii")]
     corpus = _docs(spark, rows)
     probe = _docs(spark, rows + [(4, "数据déjà mixed2x")])
@@ -538,12 +496,6 @@ def test_bpe_unicode_tokenizer_non_latin_fallback(spark):
     assert "数据</w>" in uni[1]
     # mixed-script token: letter/digit RUN is one word under both splits
     assert "".join(uni[4]).replace("</w>", " ").strip() == "数据déjà mixed2x"
-
-    uni_distinct = _train_encode(
-        spark, corpus, probe,
-        {"tokenizer": "unicode"},
-        {"tokenizer": "unicode", "impl": "distinct"})
-    assert uni_distinct == uni
 
 
 def test_bpe_encode_refuses_tokenizer_mismatch(spark):
@@ -654,6 +606,41 @@ def test_cooccurrence_window_and_min_count(spark):
 # lsh-join (cross-corpus candidates)
 
 
+def _lsh_join_pairs(spark, left, right, opts):
+    """{(doc_a, doc_b): jaccard or None} of one batch lsh-join."""
+    return {(r["doc_a"], r["doc_b"]): r.asDict().get("jaccard")
+            for r in pipe(
+                ["lsh-join", ["stream", left, {"key": "doc_id"}],
+                 ["stream", right, {"key": "doc_id"}], opts],
+                spark=spark).df.collect()}
+
+
+def _lsh_join_batch_km(spark, left, right, opts):
+    """The batch lsh-join answer under the km family — the reference for
+    a streaming run, which always takes km (dedup._lsh_family)."""
+    from ksml_spark.operators import dedup
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "_lsh_family", lambda left, right: "km")
+        return _lsh_join_pairs(spark, left, right, opts)
+
+
+def _lsh_join_stream(spark, path, right, opts, name):
+    """One availableNow pass of lsh-join with a streaming left read from
+    ``path``, in the _lsh_join_pairs shape."""
+    from ksml_spark.streaming.runtime import file_stream_source
+
+    out = pipe(
+        ["lsh-join", ["stream", file_stream_source(spark, path), {"key": "doc_id"}],
+         ["stream", right, {"key": "doc_id"}], opts], spark=spark).df
+    assert out.isStreaming
+    q = (out.writeStream.format("memory").queryName(name)
+         .trigger(availableNow=True).outputMode("append").start())
+    q.awaitTermination(60)
+    return {(r["doc_a"], r["doc_b"]): r.asDict().get("jaccard")
+            for r in spark.sql(f"SELECT * FROM {name}").collect()}
+
+
 def test_lsh_join_finds_cross_corpus_dup_only(spark):
     """A left doc near-duplicating a right doc pairs up; identical docs
     WITHIN one side never pair (no self-join); the broadcast hint
@@ -721,31 +708,24 @@ def test_lsh_join_verify_exact_jaccard(spark, tmp_path):
 
     p = str(tmp_path / "lshv_docs")
     left.write.parquet(p)
-    from ksml_spark.streaming.runtime import file_stream_source
-
-    # impl pinned to md5 on the streaming leg: streaming "auto" resolves
-    # to the km family (r09 default), and banded RECALL is probabilistic
-    # per family — this test pins the verify machinery's batch/stream
-    # parity within one family, not cross-family recall
-    out = pipe(
-        ["lsh-join",
-         ["stream", file_stream_source(spark, p), {"key": "doc_id"}],
-         ["stream", right, {"key": "doc_id"}], {"verify": 0.5, "impl": "md5"}],
-        spark=spark).df
-    assert out.isStreaming
-    q = (out.writeStream.format("memory").queryName("lshv")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    sgot = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in spark.sql("SELECT * FROM lshv").collect()}
-    assert sgot == got
+    # the streaming leg runs the km family, and banded RECALL is
+    # probabilistic per family — so its reference is the batch answer
+    # under km; verified Jaccard values are family-independent
+    km = _lsh_join_batch_km(spark, left, right, {"verify": 0.5})
+    assert km[(1, 100)] == 1.0
+    assert all(got[k] == v for k, v in km.items() if k in got)
+    sgot = _lsh_join_stream(spark, p, right, {"verify": 0.5}, "lshv")
+    assert sgot == km
 
 
 def test_lsh_join_streaming_auto_is_km(spark, tmp_path):
-    """r09 default flip: a streaming input resolves impl 'auto' to the
-    km family (bit-identical to {"impl": "km"}), while batch 'auto'
-    stays on the oracle's salted-md5 family; {"impl": "md5"} forces the
-    md5 family on streaming (the vectorized engine-parity path)."""
+    """The hash family follows the inputs: a streaming side puts BOTH
+    sides on the km family, and the streaming answer equals the batch
+    km reference; all-batch joins stay on the oracle's salted-md5
+    family."""
+    from ksml_spark.operators.dedup import _lsh_family
+    from ksml_spark.streaming.runtime import file_stream_source
+
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon")
     left = _docs(spark, [(1, base), (2, "unrelated words about caches "
@@ -753,31 +733,15 @@ def test_lsh_join_streaming_auto_is_km(spark, tmp_path):
     right = _docs(spark, [(100, base)])
     p = str(tmp_path / "lsh_auto_docs")
     left.write.parquet(p)
-    from ksml_spark.streaming.runtime import file_stream_source
+    src = file_stream_source(spark, p)
+    assert _lsh_family(src, right) == "km"
+    assert _lsh_family(left, src) == "km"
+    assert _lsh_family(left, right) == "md5"
 
-    def run_stream(opts, name):
-        out = pipe(
-            ["lsh-join", ["stream", file_stream_source(spark, p), {"key": "doc_id"}],
-             ["stream", right, {"key": "doc_id"}], opts], spark=spark).df
-        q = (out.writeStream.format("memory").queryName(name)
-             .trigger(availableNow=True).outputMode("append").start())
-        q.awaitTermination(60)
-        return {(r["doc_a"], r["doc_b"])
-                for r in spark.sql(f"SELECT doc_a, doc_b FROM {name}").collect()}
-
-    auto = run_stream({}, "lsh_auto")
-    km = run_stream({"impl": "km"}, "lsh_auto_km")
-    md5 = run_stream({"impl": "md5"}, "lsh_auto_md5")
-    assert auto == km and (1, 100) in auto and (1, 100) in md5
-    # batch auto stays md5: identical candidates to forced md5
-    batch_auto = {(r["doc_a"], r["doc_b"]) for r in pipe(
-        ["lsh-join", ["stream", left, {"key": "doc_id"}],
-         ["stream", right, {"key": "doc_id"}], {}], spark=spark).df.collect()}
-    batch_md5 = {(r["doc_a"], r["doc_b"]) for r in pipe(
-        ["lsh-join", ["stream", left, {"key": "doc_id"}],
-         ["stream", right, {"key": "doc_id"}], {"impl": "md5"}],
-        spark=spark).df.collect()}
-    assert batch_auto == batch_md5 and (1, 100) in batch_auto
+    stream = _lsh_join_stream(spark, p, right, {}, "lsh_auto")
+    assert stream == _lsh_join_batch_km(spark, left, right, {})
+    assert (1, 100) in stream
+    assert (1, 100) in _lsh_join_pairs(spark, left, right, {})
 
 
 def test_lsh_join_composes_with_anti_join(spark):
@@ -896,17 +860,15 @@ def test_lsh_join_streaming_left_matches_batch(spark, tmp_path):
 
 @pytest.mark.slow
 def test_lsh_join_km_impl_parity(spark, tmp_path):
-    """{"impl": "km"} — the single-digest Kirsch-Mitzenmacher streaming
-    fast path: (a) an EXACT duplicate recalls under both families
-    (identical shingle sets give identical minhash vectors, whatever
-    the hash) and any pair found by both carries the same verified
-    Jaccard (km token ids == md5_long_col values, so set arithmetic is
-    family-identical); near-dup recall may differ pair-by-pair —
-    banding is probabilistic per family, (b) one-microbatch streaming
-    (numpy UDF) == batch (codegen agg) within the km family, (c) bad
-    impl is curated."""
-    from ksml_spark.errors import ArityError
-
+    """The km family (the streaming lsh-join path): (a) an EXACT
+    duplicate recalls under both families (identical shingle sets give
+    identical minhash vectors, whatever the hash) and any pair found by
+    both carries the same verified Jaccard (km token ids ==
+    md5_long_col values, so set arithmetic is family-identical);
+    near-dup recall may differ pair-by-pair — banding is probabilistic
+    per family, (b) one-microbatch streaming (numpy UDF) == batch
+    (codegen agg) within the km family, with and without verify,
+    (c) the retired impl option is curated."""
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon")
     near = base.replace("iota kappa", "iota prime kappa")
@@ -915,14 +877,8 @@ def test_lsh_join_km_impl_parity(spark, tmp_path):
                              "row groups dictionaries and bloom filters")])
     right = _docs(spark, [(100, base)])
 
-    def run(opts):
-        return {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pipe(
-            ["lsh-join", ["stream", left, {"key": "doc_id"}],
-             ["stream", right, {"key": "doc_id"}], opts],
-            spark=spark).df.collect()}
-
-    md5_out = run({"verify": 0.5})
-    km_out = run({"verify": 0.5, "impl": "km"})
+    md5_out = _lsh_join_pairs(spark, left, right, {"verify": 0.5})
+    km_out = _lsh_join_batch_km(spark, left, right, {"verify": 0.5})
     assert (1, 100) in md5_out and (1, 100) in km_out
     assert km_out[(1, 100)] == 1.0
     for k in set(md5_out) & set(km_out):
@@ -931,43 +887,15 @@ def test_lsh_join_km_impl_parity(spark, tmp_path):
 
     p = str(tmp_path / "lsh_km_stream")
     left.write.parquet(p)
-    from ksml_spark.streaming.runtime import file_stream_source
-
-    out = pipe(
-        ["lsh-join",
-         ["stream", file_stream_source(spark, p), {"key": "doc_id"}],
-         ["stream", right, {"key": "doc_id"}],
-         {"verify": 0.5, "impl": "km"}],
-        spark=spark).df
-    assert out.isStreaming
-    q = (out.writeStream.format("memory").queryName("lsh_km")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    sgot = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in spark.sql("SELECT * FROM lsh_km").collect()}
-    assert sgot == km_out
+    assert _lsh_join_stream(spark, p, right, {"verify": 0.5}, "lsh_km") == km_out
 
     # candidates-only (no verify) streaming km also matches its batch form
-    out2 = pipe(
-        ["lsh-join",
-         ["stream", file_stream_source(spark, p), {"key": "doc_id"}],
-         ["stream", right, {"key": "doc_id"}], {"impl": "km"}],
-        spark=spark).df
-    q2 = (out2.writeStream.format("memory").queryName("lsh_km2")
-          .trigger(availableNow=True).start())
-    q2.awaitTermination(60)
-    got2 = {(r["doc_a"], r["doc_b"])
-            for r in spark.sql("SELECT * FROM lsh_km2").collect()}
-    exp2 = {(r["doc_a"], r["doc_b"]) for r in pipe(
-        ["lsh-join", ["stream", left, {"key": "doc_id"}],
-         ["stream", right, {"key": "doc_id"}], {"impl": "km"}],
-        spark=spark).df.collect()}
-    assert got2 == exp2 and (1, 100) in got2
+    got2 = _lsh_join_stream(spark, p, right, {}, "lsh_km2")
+    assert got2 == _lsh_join_batch_km(spark, left, right, {})
+    assert (1, 100) in got2
 
-    with pytest.raises(ArityError, match="impl must be"):
-        pipe(["lsh-join", ["stream", left, {"key": "doc_id"}],
-              ["stream", right, {"key": "doc_id"}], {"impl": "sha"}],
-             spark=spark)
+    with pytest.raises(ArityError, match="'impl' was removed"):
+        _lsh_join_pairs(spark, left, right, {"impl": "km"})
 
 
 def test_band_signatures_km_stream_batch_bit_parity(spark, tables):
@@ -986,7 +914,7 @@ def test_band_signatures_km_stream_batch_bit_parity(spark, tables):
                          tuple(r["s"]["toks"]) if r["s"]["toks"] else None)
            for r in docs.select("doc_id", sig(F.col("text")).alias("s")).collect()}
     agg = {r["doc_id"]: tuple(r[f"band_{b}"] for b in range(4))
-           for r in band_signatures(docs, "doc_id", "text", impl="km").collect()}
+           for r in band_signatures(docs, "doc_id", "text", family="km").collect()}
     # batch drops NULL-text docs (no shingle rows); streaming yields NULLs
     assert got.pop(90002) == (None, None)
     assert {d: b for d, (b, _) in got.items()} == agg
@@ -1346,8 +1274,9 @@ def test_pinned_persist_registry_bounded(spark):
 
 def test_sig_struct_udf_matches_expression_paths(spark, tables):
     """The Arrow-vectorized streaming signature UDF is bit-identical to
-    the batch agg path (bands) and the expression token-set build
-    (toks), including the short-doc whole-text fallback and NULL text."""
+    the batch agg path (md5 bands) and, on the km family that carries
+    them, its token sets equal the expression token-set build —
+    including the short-doc whole-text fallback and NULL text."""
     from pyspark.sql import functions as F
 
     from ksml_spark.operators.dedup import (
@@ -1359,10 +1288,12 @@ def test_sig_struct_udf_matches_expression_paths(spark, tables):
 
     docs = tables["documents"].select("doc_id", "text").limit(50).unionByName(
         _docs(spark, [(90001, "tiny doc"), (90002, None), (90003, "")]))
-    sig = _sig_struct_udf(with_toks=True)
+    md5_sig = _sig_struct_udf(with_toks=False)
+    km_sig = _sig_struct_udf(with_toks=True, family="km")
     got = {r["doc_id"]: (tuple(r["s"]["bands"]) if r["s"]["bands"] else None,
-                         tuple(r["s"]["toks"]) if r["s"]["toks"] else None)
-           for r in docs.select("doc_id", sig(F.col("text")).alias("s")).collect()}
+                         tuple(r["k"]["toks"]) if r["k"]["toks"] else None)
+           for r in docs.select("doc_id", md5_sig(F.col("text")).alias("s"),
+                                km_sig(F.col("text")).alias("k")).collect()}
     agg = {r["doc_id"]: tuple(r[f"band_{b}"] for b in range(4))
            for r in band_signatures(docs, "doc_id", "text").collect()}
     toks_expr = {
@@ -1382,6 +1313,8 @@ def test_sig_struct_udf_matches_expression_paths(spark, tables):
         assert bands == agg[did], did
         assert toks == toks_expr[did], did
     assert len(got) == 53
+    with pytest.raises(ValueError, match="km"):
+        _sig_struct_udf(with_toks=True, family="md5")
 
 
 @pytest.mark.slow
@@ -1422,6 +1355,40 @@ def test_lsh_join_dedup_within_bounded_state(spark, tmp_path):
              ["stream", right, {"key": "doc_id"}], dict(extra)],
             spark=spark).df.collect()}
         assert got == exp and got
+
+
+def test_lsh_join_dedup_within_matches_unbounded_fast(spark, tmp_path):
+    """Fast-tier smoke of test_lsh_join_dedup_within_bounded_state: on a
+    3-document stream, the watermark-bounded pair dedup returns the same
+    pairs as the unbounded default."""
+    import datetime as dt
+
+    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+            "lambda mu nu xi omicron pi rho sigma tau upsilon")
+    t0 = dt.datetime(2024, 1, 1)
+    left = spark.createDataFrame(
+        [(1, base, t0), (2, "unrelated words about caches and pages", t0),
+         (3, base, t0 + dt.timedelta(minutes=5))],
+        "doc_id long, text string, ts timestamp")
+    right = _docs(spark, [(100, base)])
+    p = str(tmp_path / "lshw_fast")
+    left.write.parquet(p)
+    from ksml_spark.streaming.runtime import file_stream_source
+
+    def run(opts, name):
+        out = pipe(
+            ["lsh-join", ["stream", file_stream_source(spark, p),
+                          {"key": "doc_id", "time": "ts"}],
+             ["stream", right, {"key": "doc_id"}], opts], spark=spark).df
+        q = (out.writeStream.format("memory").queryName(name)
+             .trigger(availableNow=True).outputMode("append").start())
+        q.awaitTermination(60)
+        return {(r["doc_a"], r["doc_b"])
+                for r in spark.sql(f"SELECT doc_a, doc_b FROM {name}").collect()}
+
+    bounded = run({"dedup_within": "1 hour"}, "lshw_fast_bounded")
+    assert bounded == run({"unbounded_ok": True}, "lshw_fast_unbounded")
+    assert bounded == {(1, 100), (3, 100)}
 
 
 def test_lsh_join_streaming_unbounded_state_warns_at_construction(

@@ -544,3 +544,44 @@ def test_str_opt_contract_standalone():
     assert str_opt({"m": "warn"}, "m", "op", choices=("warn", "error")) == "warn"
     with _pytest.raises(ArityError, match="must be one of"):
         str_opt({"m": "loud"}, "m", "op", choices=("warn", "error"))
+
+
+_RETIRED_IMPL_OPTS = [
+    # (op, extra operand?, retired key, every value it used to take,
+    #  other options, what the message names as the replacement)
+    ("bpe-encode", True, "impl", ("perrow", "distinct"), {},
+     "per-row encoding is the only implementation"),
+    ("lsh-join", True, "impl", ("auto", "md5", "km", "expr"), {},
+     "hash family follows the inputs"),
+    ("transform-with-state", False, "impl", ("auto", "native", "shim"), {},
+     "native operator runs when google.protobuf is installed"),
+    ("ann-ivf-topk", False, "assign_impl", ("auto", "expr", "blas"),
+     {"id": "doc_id", "vec": "embedding", "dim": 3,
+      "queries": "doc_id = 0", "centroids": "doc_id = 1"},
+     "assignment path follows the centroid count"),
+    ("kmeans-assign", False, "assign_impl", ("auto", "expr", "blas"),
+     {"id": "doc_id", "vec": "embedding", "dim": 3, "centroids": "doc_id = 1"},
+     "assignment path follows the centroid count"),
+    ("semdedup", False, "assign_impl", ("auto", "expr", "blas"),
+     {"id": "doc_id", "vec": "embedding", "dim": 3, "centroids": "doc_id = 1"},
+     "semdedup assigns with the expression plan"),
+]
+
+
+@pytest.mark.parametrize(
+    "op, operand, key, values, opts, replacement", _RETIRED_IMPL_OPTS,
+    ids=[f"{r[0]}-{r[2]}" for r in _RETIRED_IMPL_OPTS])
+def test_retired_impl_options_refused_naming_replacement(
+        spark, probe_rel_df, op, operand, key, values, opts, replacement):
+    """The user-set implementation switches are gone — each op picks its
+    path from what it observes (streaming inputs, protobuf, centroid
+    count). Every value the retired option used to take is refused at
+    construction with the curated ArityError naming what replaced it."""
+    from ksml_spark.errors import ArityError
+
+    rel = ["stream", probe_rel_df, {"key": "doc_id"}]
+    for value in values:
+        form = [op, rel, *([rel] if operand else []), dict(opts, **{key: value})]
+        with pytest.raises(ArityError,
+                           match=f"{op}: option '{key}' was removed — .*{replacement}"):
+            ksml(form, spark=spark)

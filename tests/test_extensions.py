@@ -13,6 +13,18 @@ from pyspark.sql import functions as F
 
 from ksml_spark import ksml, pipe
 
+
+def _assign_path(path: str):
+    """Force the nearest-centroid assignment path by moving its K
+    cutover (similarity._BLAS_ASSIGN_MIN_K): "blas" from K = 1, "expr"
+    at any realistic K."""
+    from unittest import mock
+
+    from ksml_spark.operators import similarity
+
+    return mock.patch.object(similarity, "_BLAS_ASSIGN_MIN_K",
+                             1 if path == "blas" else 10**9)
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -462,6 +474,23 @@ def test_ann_topk_query_side_guard(spark, tables):
                 spark=spark).df
     assert sorted(map(tuple, guarded.collect())) == \
         sorted(map(tuple, free.collect()))
+
+
+def test_ann_topk_query_side_guard_fast(spark):
+    """Fast-tier smoke of test_ann_topk_query_side_guard on 5 vectors: a
+    'queries' filter matching more than max_query_rows refuses at
+    construction; 0 disables the cap and the same form constructs."""
+    from ksml_spark.errors import ArityError
+
+    df = spark.createDataFrame(
+        [(i, [1.0, float(i), 0.5]) for i in range(5)],
+        "vec_id long, embedding array<double>")
+    src = ["stream", df, {"key": "vec_id"}]
+    base = {"id": "vec_id", "vec": "embedding", "k": 2, "dim": 3,
+            "queries": "vec_id >= 0"}
+    with pytest.raises(ArityError, match="max_query_rows"):
+        ksml(["ann-topk", src, dict(base, max_query_rows=2)], spark=spark)
+    ksml(["ann-topk", src, dict(base, max_query_rows=0)], spark=spark)
 
 
 def test_ann_lsh_restricts_to_bucket(spark, tables):
@@ -1075,12 +1104,13 @@ def test_degenerate_vectors_never_abort_similarity_ops(spark):
                dict(ivf_opts, queries="vec_id in (0, 2)",
                     centroids="vec_id in (0, 2, 5)"))
     assert want
-    for impl in ("expr", "blas"):
-        got = run(dirty, "ann-ivf-topk",
-                  dict(ivf_opts, assign_impl=impl,
-                       queries=f"vec_id in (0, 2, {deg_ids})",
-                       centroids=f"vec_id in (0, 2, 5, {deg_ids})"))
-        assert got == want, impl
+    for path in ("expr", "blas"):
+        with _assign_path(path):
+            got = run(dirty, "ann-ivf-topk",
+                      dict(ivf_opts,
+                           queries=f"vec_id in (0, 2, {deg_ids})",
+                           centroids=f"vec_id in (0, 2, 5, {deg_ids})"))
+        assert got == want, path
 
     # neardup-pairs: degenerate rows on both join sides; a NaN pair
     # cosine must FAIL the threshold (NULL), not pass it as NaN
@@ -1614,7 +1644,7 @@ def test_kmeans_assign_string_ids_ties_and_zero_norm(spark):
 
 
 def test_kmeans_assign_blas_impl_bit_matches_expr(spark):
-    """r12 {'assign_impl': 'blas'}: BLAS matmul argmax + near-tie
+    """r12 BLAS assignment (K >= the cutover): BLAS matmul argmax + near-tie
     sequential re-decision + picked-centroid codegen sim must equal the
     expr crossJoin plan BIT-FOR-BIT — on exact centroid ties (smallest
     id), near-tie centroids (1e-13 apart), and every degenerate row
@@ -1637,13 +1667,14 @@ def test_kmeans_assign_blas_impl_bit_matches_expr(spark):
     ] + [(f"w{i:02d}", [1.0, i / 7.0, (i % 3) / 2.0, 0.1]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
 
-    def run(impl):
-        out = ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
-                    {"id": "vec_id", "vec": "embedding", "dim": 4,
-                     "centroids": "vec_id like 'c%'",
-                     "assign_impl": impl}], spark=spark)
-        return {r["vec_id"]: (r["cluster"], repr(r["sim"]))
-                for r in out.df.collect()}
+    def run(path, extra=None):
+        with _assign_path(path):
+            out = ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
+                        dict({"id": "vec_id", "vec": "embedding", "dim": 4,
+                              "centroids": "vec_id like 'c%'"}, **(extra or {}))],
+                       spark=spark)
+            return {r["vec_id"]: (r["cluster"], repr(r["sim"]))
+                    for r in out.df.collect()}
 
     expr, blas = run("expr"), run("blas")
     assert expr == blas
@@ -1656,13 +1687,17 @@ def test_kmeans_assign_blas_impl_bit_matches_expr(spark):
 
     from ksml_spark.errors import ArityError
 
-    with pytest.raises(ArityError, match="assign_impl"):
-        run("vectorized")
-    with pytest.raises(ArityError, match="needs .'dim'"):
-        ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
-              {"id": "vec_id", "vec": "embedding",
-               "centroids": "vec_id like 'c%'", "assign_impl": "blas"}],
-             spark=spark)
+    with pytest.raises(ArityError, match="'assign_impl' was removed"):
+        run("blas", {"assign_impl": "blas"})
+    # without a fixed 'dim' there is no matmul: the cutover keeps expr
+    no_dim = ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
+                   {"id": "vec_id", "vec": "embedding",
+                    "centroids": "vec_id like 'c%'"}], spark=spark)
+    with _assign_path("blas"):
+        no_dim_blas = ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
+                            {"id": "vec_id", "vec": "embedding",
+                             "centroids": "vec_id like 'c%'"}], spark=spark)
+    assert sorted(no_dim.df.collect()) == sorted(no_dim_blas.df.collect())
     with pytest.raises(ArityError, match="more than max_k"):
         ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
               {"id": "vec_id", "vec": "embedding", "dim": 4,
@@ -1671,9 +1706,10 @@ def test_kmeans_assign_blas_impl_bit_matches_expr(spark):
 
 @pytest.mark.slow
 def test_ann_ivf_blas_impl_matches_expr_and_auto_cutover(spark):
-    """r12: ann-ivf-topk with {'assign_impl': 'blas'} returns the exact
+    """r12: ann-ivf-topk on the BLAS assignment returns the exact
     expr-plan result (same probes, same candidates, same ranked sims);
-    'auto' resolves to blas at K >= 257 and stays identical too."""
+    the default cutover picks blas at K >= 257 and stays identical
+    too."""
     rows = [(i, [1.0 + (i % 17) / 7.0, (i % 5) / 3.0,
                  (i % 11) / 9.0, 0.25]) for i in range(400)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -1681,21 +1717,49 @@ def test_ann_ivf_blas_impl_matches_expr_and_auto_cutover(spark):
             "queries": "vec_id % 40 = 0", "centroids": "vec_id % 29 = 1",
             "nprobe": 2}
 
-    def run(extra):
-        out = ksml(["ann-ivf-topk", ["stream", df, {"key": "vec_id"}],
-                    dict(form, **extra)], spark=spark)
-        return {(r["q_id"], r["rank"]): (r["n_id"], repr(r["sim"]))
-                for r in out.df.collect()}
+    def run(extra, path=None):
+        def go():
+            out = ksml(["ann-ivf-topk", ["stream", df, {"key": "vec_id"}],
+                        dict(form, **extra)], spark=spark)
+            return {(r["q_id"], r["rank"]): (r["n_id"], repr(r["sim"]))
+                    for r in out.df.collect()}
 
-    expr = run({"assign_impl": "expr"})
-    assert expr == run({"assign_impl": "blas"})
-    # auto cutover: 300 centroids >= 257 -> blas; still identical
+        if path is None:
+            return go()
+        with _assign_path(path):
+            return go()
+
+    expr = run({}, "expr")
+    assert expr == run({}, "blas")
+    # default cutover: 300 centroids >= 257 -> blas; still identical
     # (the structured vectors repeat every lcm(17,5,11) ids, so the
     # centroid set contains exact duplicates — probe-boundary ties are
     # exercised, not just clean gaps)
-    dense = dict(form, centroids="vec_id % 4 != 3")  # 300 of 400
-    assert run(dict(dense, assign_impl="expr")) == \
-        run(dict(dense, assign_impl="auto"))
+    dense = {"centroids": "vec_id % 4 != 3"}  # 300 of 400
+    assert run(dense, "expr") == run(dense)
+
+
+def test_ann_ivf_blas_matches_expr_fast(spark):
+    """Fast-tier smoke of test_ann_ivf_blas_impl_matches_expr_and_auto_
+    cutover: with the K cutover moved, the BLAS assignment and probe
+    return the expr plan's ranked neighbours exactly on 6 vectors,
+    including an exact centroid tie."""
+    rows = [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]),
+            (3, [0.6, 0.8, 0.0]), (4, [0.1, 0.2, 0.9]), (5, [0.7, 0.1, 0.2])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    form = {"id": "vec_id", "vec": "embedding", "k": 2, "dim": 3,
+            "queries": "vec_id in (3, 5)", "centroids": "vec_id in (0, 1, 2)",
+            "nprobe": 1}
+
+    def run(path):
+        with _assign_path(path):
+            out = ksml(["ann-ivf-topk", ["stream", df, {"key": "vec_id"}],
+                        form], spark=spark)
+            return sorted((r["q_id"], r["rank"], r["n_id"], repr(r["sim"]))
+                          for r in out.df.collect())
+
+    expr = run("expr")
+    assert expr and expr == run("blas")
 
 
 def test_ann_ivf_degenerate_centroids_rank_last_not_hijack(spark):
@@ -1715,12 +1779,12 @@ def test_ann_ivf_degenerate_centroids_rank_last_not_hijack(spark):
     form = {"id": "vec_id", "vec": "embedding", "k": 2, "dim": 2,
             "queries": "vec_id % 10 = 0", "nprobe": 2}
 
-    def run(df, cond, impl):
-        out = ksml(["ann-ivf-topk", ["stream", df, {"key": "vec_id"}],
-                    dict(form, centroids=cond, assign_impl=impl)],
-                   spark=spark)
-        return sorted((r["q_id"], r["rank"], r["n_id"], repr(r["sim"]))
-                      for r in out.df.collect())
+    def run(df, cond, path):
+        with _assign_path(path):
+            out = ksml(["ann-ivf-topk", ["stream", df, {"key": "vec_id"}],
+                        dict(form, centroids=cond)], spark=spark)
+            return sorted((r["q_id"], r["rank"], r["n_id"], repr(r["sim"]))
+                          for r in out.df.collect())
 
     base = run(clean, "vec_id % 3 = 1", "expr")
     assert base
@@ -1792,26 +1856,6 @@ def test_centroid_relation_operand_matches_filter_and_composes(spark):
     with pytest.raises(ArityError, match="missing column"):
         ksml(["kmeans-assign", src, ksml(["select", src,
               {"cid": "vec_id"}], spark=spark), base_form], spark=spark)
-
-
-def test_semdedup_blas_assign_matches_default(spark):
-    """r12: semdedup threads assign_impl through to kmeans-assign; the
-    blas pick must leave every (cluster, sim, keep) decision unchanged
-    (sims feed the rank window, so bit-exactness is load-bearing)."""
-    rows = [(f"v{i:02d}", [1.0, (i % 9) / 4.0, (i % 7) / 3.0])
-            for i in range(40)] + [("vz", [0.0, 0.0, 0.0]), ("vn", None)]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    form = {"id": "vec_id", "vec": "embedding", "dim": 3,
-            "centroids": "vec_id in ('v00', 'v03', 'v07')",
-            "threshold": 0.995}
-
-    def run(extra):
-        out = ksml(["semdedup", ["stream", df, {"key": "vec_id"}],
-                    dict(form, **extra)], spark=spark)
-        return {r["vec_id"]: (r["cluster"], repr(r["sim_centroid"]),
-                              r["keep"]) for r in out.df.collect()}
-
-    assert run({}) == run({"assign_impl": "blas"})
 
 
 def test_semdedup_noncascading_triangular_rule(spark):

@@ -191,7 +191,7 @@ def test_asof_join_tolerance_nulls_stale_matches(spark):
 
 
 def test_anti_join_is_semi_complement(spark, tables):
-    """Retirement pin (r14, clause c — see the registry rotation notes):
+    """Retirement pin (r14, clause c):
     anti-join is a one-line how-string dispatch into the same _do_join
     construction as the still-oracled semi/left/outer rows; its
     how-specific surface is exactly the complement contract. On the

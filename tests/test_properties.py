@@ -492,23 +492,18 @@ def test_bpe_train_encode_roundtrip_property(spark, docs, merges):
     from a doc's encoded tokens and re-joining reproduces the doc's
     normalized (lowercased, tokenizer-split) words — BPE segments, it
     never alters or drops content — and every emitted token is either a
-    trained merge product or a single char + optional marker. The
-    distinct encode impl agrees token-for-token."""
+    trained merge product or a single char + optional marker."""
     rows = [(i, " ".join(ws)) for i, ws in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     table = ksml(["bpe-train", ["stream", df, {"key": "doc_id"}],
                   {"merges": merges, "min_freq": 1, "min_pair_freq": 1}],
                  spark=spark)
     merged_syms = {r["merged"] for r in table.df.collect()}
-    out = {}
-    for impl in ("perrow", "distinct"):
-        enc = ksml(["bpe-encode", ["stream", df, {"key": "doc_id"}], table,
-                    {"col": "text", "impl": impl}], spark=spark)
-        out[impl] = {r["doc_id"]: list(r["bpe_tokens"])
-                     for r in enc.df.collect()}
-    assert out["perrow"] == out["distinct"]
+    enc = ksml(["bpe-encode", ["stream", df, {"key": "doc_id"}], table,
+                {"col": "text"}], spark=spark)
+    out = {r["doc_id"]: list(r["bpe_tokens"]) for r in enc.df.collect()}
     for i, ws in enumerate(docs):
-        toks = out["perrow"][i]
+        toks = out[i]
         rebuilt = "".join(toks).replace("</w>", " ").split()
         assert rebuilt == [w for w in " ".join(ws).lower().split() if w]
         for t in toks:
@@ -517,6 +512,18 @@ def test_bpe_train_encode_roundtrip_property(spark, docs, merges):
 
 
 # -- kmeans-assign expr/blas bit-parity --------------------------------------
+
+
+def _assign_path(path: str):
+    """Force the nearest-centroid assignment path by moving its K
+    cutover (similarity._BLAS_ASSIGN_MIN_K): "blas" from K = 1, "expr"
+    at any realistic K."""
+    from unittest import mock
+
+    from ksml_spark.operators import similarity
+
+    return mock.patch.object(similarity, "_BLAS_ASSIGN_MIN_K",
+                             1 if path == "blas" else 10**9)
 
 
 def _repr_f(v):
@@ -569,7 +576,7 @@ vec_corpus = st.lists(
 @example(vecs=_R12_DIVISION_CORPUS, n_cents=3)
 @given(vecs=vec_corpus, n_cents=st.integers(min_value=1, max_value=6))
 def test_kmeans_assign_blas_parity_property(spark, vecs, n_cents):
-    """r12 {'assign_impl': 'blas'} invariant: for ANY corpus — including
+    """r12 BLAS-assignment invariant: for ANY corpus — including
     NULL / NaN / zero-norm / longer-than-dim vectors and duplicate
     (exactly tied) centroids — the BLAS argmax + near-tie re-decision
     returns the expr crossJoin plan's (cluster, sim) BIT-FOR-BIT."""
@@ -588,12 +595,13 @@ def test_kmeans_assign_blas_parity_property(spark, vecs, n_cents):
     cond = "vec_id in ({})".format(",".join(
         str(i) for i in cent_ids + [1000 + i for i in cent_ids]))
 
-    def run(impl):
-        out = ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
-                    {"id": "vec_id", "vec": "embedding", "dim": 3,
-                     "centroids": cond, "assign_impl": impl}], spark=spark)
-        return sorted((r["vec_id"], r["cluster"], _repr_f(r["sim"]))
-                      for r in out.df.collect())
+    def run(path):
+        with _assign_path(path):
+            out = ksml(["kmeans-assign", ["stream", df, {"key": "vec_id"}],
+                        {"id": "vec_id", "vec": "embedding", "dim": 3,
+                         "centroids": cond}], spark=spark)
+            return sorted((r["vec_id"], r["cluster"], _repr_f(r["sim"]))
+                          for r in out.df.collect())
 
     assert run("expr") == run("blas")
 
@@ -628,11 +636,12 @@ def test_ann_ivf_blas_parity_property(spark, vecs, nprobe):
             "centroids": "vec_id in ({})".format(
                 ",".join(str(i) for i in cents))}
 
-    def run(impl):
-        out = ksml(["ann-ivf-topk", ["stream", df, {"key": "vec_id"}],
-                    dict(form, assign_impl=impl)], spark=spark)
-        return sorted((r["q_id"], r["rank"], r["n_id"], _repr_f(r["sim"]))
-                      for r in out.df.collect())
+    def run(path):
+        with _assign_path(path):
+            out = ksml(["ann-ivf-topk", ["stream", df, {"key": "vec_id"}],
+                        form], spark=spark)
+            return sorted((r["q_id"], r["rank"], r["n_id"], _repr_f(r["sim"]))
+                          for r in out.df.collect())
 
     assert run("expr") == run("blas")
 

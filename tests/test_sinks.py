@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import os
+import sys
 
 import pytest
 
@@ -153,6 +154,39 @@ def test_serve_table_storage_bucket_pruned_lookup(spark, tables):
         assert "SelectedBucketsCount: 1 out of 8" in plan
     finally:
         spark.sql("DROP TABLE IF EXISTS served_bucketed")
+
+
+def test_serve_table_concurrent_lookups_restore_conf(spark):
+    """Bucketed lookups switch autoBucketedScan off for the whole session
+    around their collect. Eight client threads looking up at once must
+    each get the right rows, and the session must end with the conf it
+    started with (interleaved restores used to leave it at "false")."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    df = spark.createDataFrame([(k, k * 10) for k in range(16)],
+                               "k long, v long")
+    h = ksml(["serve", ["stream", df, {"key": "k"}],
+              {"name": "served_concurrent", "storage": "table", "buckets": 4}],
+             spark=spark)
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    prior = spark.conf.get(key)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the client threads often
+    try:
+        def client(i):
+            return [(k, [r["v"] for r in h.lookup(k)])
+                    for k in (i, i + 8) * 3]
+
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            results = list(pool.map(client, range(8), timeout=300))
+        assert len(results) == 8
+        for got in results:
+            for k, vs in got:
+                assert vs == [k * 10], (k, vs)
+        assert spark.conf.get(key) == prior
+    finally:
+        sys.setswitchinterval(switch)
+        spark.sql("DROP TABLE IF EXISTS served_concurrent")
 
 
 def test_serve_streaming_table_storage_refresh(spark, tables, tmp_path):

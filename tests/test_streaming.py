@@ -174,9 +174,13 @@ def _has_protobuf() -> bool:
         return False
 
 
-def test_transform_with_state_builds_plan(spark, tables):
+def test_transform_with_state_builds_plan(spark, tables, monkeypatch):
     """Spark-4 StatefulProcessor op: plan construction must work even
-    where execution can't (worker protocol needs google.protobuf)."""
+    where execution can't (worker protocol needs google.protobuf). The
+    op picks the native path when protobuf imports, so the native plan
+    is built here with the probe patched to True."""
+    from ksml_spark.operators import stateful
+
     import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor
 
@@ -194,12 +198,15 @@ def test_transform_with_state_builds_plan(spark, tables):
         def close(self):
             pass
 
-    out = ksml(
-        ["transform-with-state",
-         ["stream", tables["events"], {"key": "user_id"}],
-         RunningCount(), {"schema": "user_id long, n bigint", "impl": "native"}],
-        spark=spark,
-    )
+    with monkeypatch.context() as mp:
+        mp.setattr(stateful, "_has_protobuf", lambda: True)
+        out = ksml(
+            ["transform-with-state",
+             ["stream", tables["events"], {"key": "user_id"}],
+             RunningCount(), {"schema": "user_id long, n bigint"}],
+            spark=spark,
+        )
+    assert "TransformWithState" in out.df._jdf.queryExecution().analyzed().toString()
     assert out.df.schema.simpleString() == "struct<user_id:bigint,n:bigint>"
     # the RocksDB provider requirement was applied to the session
     assert "RocksDB" in spark.conf.get("spark.sql.streaming.stateStore.providerClass")
@@ -217,17 +224,18 @@ def test_transform_with_state_builds_plan(spark, tables):
         for r in tables["events"].groupBy("user_id").count()
         .withColumnRenamed("count", "n").collect()
     }
-    # batch shim (impl auto without protobuf, or forced): EXECUTES the
-    # same processor protobuf-free with the native per-key lifecycle
-    for impl_opts in ({}, {"impl": "shim"}):
+    # batch shim (the path without protobuf): EXECUTES the same
+    # processor protobuf-free with the native per-key lifecycle
+    with monkeypatch.context() as mp:
+        mp.setattr(stateful, "_has_protobuf", lambda: False)
         shim_out = ksml(
             ["transform-with-state",
              ["stream", tables["events"], {"key": "user_id"}],
-             RunningCount(), {"schema": "user_id long, n bigint", **impl_opts}],
+             RunningCount(), {"schema": "user_id long, n bigint"}],
             spark=spark,
         )
-        counts = {r["user_id"]: r["n"] for r in shim_out.df.collect()}
-        assert counts == expected and counts
+    counts = {r["user_id"]: r["n"] for r in shim_out.df.collect()}
+    assert counts == expected and counts
 
 
 def test_transform_with_state_shim_state_kinds_and_streaming_refusal(
@@ -291,12 +299,7 @@ def test_transform_with_state_shim_state_kinds_and_streaming_refusal(
             ksml(["transform-with-state", events_stream(spark, events_path),
                   Kinds(), {"schema": "user_id long, n bigint, total_cents bigint, n_types bigint"}],
                  spark=spark)
-    with pytest.raises(ArityError, match="shim.*batch-only"):
-        ksml(["transform-with-state", events_stream(spark, events_path),
-              Kinds(), {"schema": "user_id long, n bigint, total_cents bigint, n_types bigint",
-                        "impl": "shim"}],
-             spark=spark)
-    with pytest.raises(ArityError, match="impl must be"):
+    with pytest.raises(ArityError, match="'impl' was removed.*protobuf"):
         ksml(["transform-with-state", ["stream", tables["events"], {"key": "user_id"}],
               Kinds(), {"schema": "user_id long, n bigint, total_cents bigint, n_types bigint",
                         "impl": "rocks"}],

@@ -73,7 +73,7 @@ def test_global_table_is_broadcast(spark, tables):
 
 
 def test_table_filter_mapvalues_composition_pin(spark, tables):
-    """Retirement pin (r14, clause a — see the registry rotation notes):
+    """Retirement pin (r14, clause a):
     the retired table_filter_mapvalues registry row's exact shape —
     latest-per-key table → filter → map-values → to-stream — checked
     bit-for-bit against a pandas reference. Every op it invokes keeps
