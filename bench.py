@@ -38,7 +38,11 @@ def _calibration_seconds(spark, passes: int = 4) -> float:
     uniformly ~1.2x hot vs the same tree and fabricated two 2x-gate
     breaches; with this row in the artifact a uniform host shift is
     visible IN the artifact (suite ratio tracking calib ratio = host
-    heat, not regression — see docs/PERF_BASELINE.md 'Calibration').
+    heat, not regression). Pin (r15): 0.78 s, steady-state 0.759-0.889
+    min-of-warm-4 on the pin box; ``calib / 0.78`` is the host-heat
+    factor, and a row over 2x raw but under 2x after dividing by it, on
+    a run whose suite total shifted by ~the same factor, is host noise
+    to re-measure isolated, not a regression.
     bit_xor, not sum: ANSI mode aborts on long-sum overflow. Min over
     passes after one untimed JIT warm, the suite's own methodology."""
     df = (
@@ -65,8 +69,11 @@ def _calibration_py_seconds(spark, passes: int = 4) -> float:
     session default) through one mapInPandas doing a small fixed NumPy
     reduction per batch. No file
     I/O, no shuffle, no data dependence — the number moves ONLY with
-    host speed and Python-worker scheduling pressure. Pinned alongside
-    `calib` in docs/PERF_BASELINE.md."""
+    host speed and Python-worker scheduling pressure. Pin (r17): 1.69 s
+    on a quiet box (contended sessions read 1.98-2.04); ``calib_py /
+    1.69`` is the Python-worker heat factor for Arrow-stage-heavy rows,
+    which the JVM-only ``calib`` cannot see (r16 read calib heat 1.00
+    while every applyInPandas row ran 2-3x slow)."""
 
     def _work(batches):
         import numpy as np  # noqa: PLC0415 — worker-side import
@@ -218,7 +225,7 @@ def _stream_bench(spark, sf_dir: str) -> dict:
             # unbounded_ok: the bench measures the bounded-duration
             # default deliberately (the r12 construction warning would
             # otherwise fire per pass); the dedup_within-bounded shape
-            # is probed by scripts/stream_scale_probe.py
+            # was measured by the r11 streaming probe (docs/SCALE.md)
             opts = {"verify": 0.7, "broadcast": True, "unbounded_ok": True}
             out = _ksml(
                 ["lsh-join", ["stream", src, {"key": "doc_id"}],
@@ -599,7 +606,7 @@ def format_output_lines(total, per_query, streaming, sf, budget: int = 1900,
     2000 chars once the streaming section joined it, so its head scrolled
     out of the window and the driver recorded "parsed": null — a clean run
     with no number. Keep the FINAL line hard-capped: streaming numbers go
-    on their own earlier line (and into docs/PERF_BASELINE.md), the metric
+    on their own earlier line, the metric
     line uses compact separators, and if it still exceeds the budget the
     per-query map degrades (fewer decimals, then slowest-N with failed
     queries ranked first) before ever dropping "value". A degraded line
@@ -632,7 +639,7 @@ def format_output_lines(total, per_query, streaming, sf, budget: int = 1900,
         if calib is not None:
             # constant-work host-speed reference (never degraded away —
             # it is what makes the rest of the line adjudicable): read
-            # against the pin in docs/PERF_BASELINE.md 'Calibration'
+            # against its 0.78 s r15 pin (see _calibration_seconds)
             d["calib"] = calib
         if calib_py is not None:
             # Python-boundary twin of calib (r17): adjudicates

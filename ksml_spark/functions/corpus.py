@@ -46,8 +46,8 @@ from ..errors import ArityError, TypeDispatchError
 from ..eval import Ctx, defop
 from ..model import Rel
 from ..operators.util import (
-    float_opt, int_opt, let1, md5_long_col, opts_of, refuse_removed_opt,
-    spread,
+    PERSIST_REMOVED, float_opt, int_opt, let1, md5_long_col, opts_of,
+    refuse_removed_opt, spread,
 )
 from .text import words
 
@@ -249,8 +249,7 @@ def _lm_score_kn(rel: Rel, tdf, tw: Column, idc: str, colc: str,
     from ..operators.util import pin
 
     types_all = pin(
-        bt.groupBy("__p", "__s").agg(F.count(F.lit(1)).alias("__cg")),
-        StorageLevel.DISK_ONLY,
+        bt.groupBy("__p", "__s").agg(F.count(F.lit(1)).alias("__cg"))
     )
     types = types_all.filter(F.col("__s").isNotNull())
     # per-prefix: occurrence total c(v) AND distinct continuations
@@ -339,8 +338,8 @@ def op_lm_score(ctx: Ctx, rel: Rel, *rest) -> Rel:
     one-row aggregate. Nothing Python touches a row.
 
     Self-training traverses the input lineage three times (two model
-    aggs + the scored side); pass {"persist": true} to cache the input
-    when it is an expensive pipeline rather than a stored table.
+    aggs + the scored side); when the input is an expensive pipeline
+    rather than a stored table, wrap it in ["persist", rel] upstream.
 
     FROZEN-STATS mode — {"stats": lm_train_stats(ref_df)} — scores
     against a PRECOMPUTED small model shipped in an Arrow-batched
@@ -363,6 +362,7 @@ def op_lm_score(ctx: Ctx, rel: Rel, *rest) -> Rel:
         elif isinstance(r, dict):
             # None-valued keys mean "unset" (the opts_of contract)
             opts.update({k: v for k, v in r.items() if v is not None})
+    refuse_removed_opt(opts, "persist", "lm-score", PERSIST_REMOVED)
     n = int_opt(opts, "n", "lm-score", 2)
     k = float_opt(opts, "k", "lm-score", 0.1)
     if n < 2:
@@ -454,12 +454,6 @@ def op_lm_score(ctx: Ctx, rel: Rel, *rest) -> Rel:
     if train is not None:
         _refuse_streaming(train, "lm-score (training relation)")
     tdf = (train or rel).df
-    if opts.get("persist"):
-        from ..operators.util import pin
-
-        tdf = pin(tdf, StorageLevel.MEMORY_AND_DISK)
-        if train is None:
-            rel = rel.with_df(tdf)
 
     tw = words(F.col(tcolc))
 
@@ -571,7 +565,7 @@ def op_pmi(ctx: Ctx, rel: Rel, *rest) -> Rel:
     jaccard/lm-score rationale): c1 feeds three plan branches (w1
     join, w2 join, the t1 total) and big feeds two (t2 total, the
     filtered join side) — unpinned, Catalyst planned each branch its
-    OWN scan+tokenize+explode+agg (stage_audit caught the t1/t2
+    OWN scan+tokenize+explode+agg (the r13 stage audit caught the t1/t2
     totals re-running the whole corpus pass single-task downstream:
     4-5 corpus passes where 2 suffice, O(corpus) in one task at
     scale). Pinned, the corpus is read exactly twice (once per

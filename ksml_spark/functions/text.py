@@ -25,7 +25,10 @@ from pyspark.sql import functions as F
 from ..errors import ArityError
 from ..eval import Ctx, defop
 from ..model import Rel
-from ..operators.util import float_opt, int_opt, opts_of, pos_int_opt
+from ..operators.util import (
+    PERSIST_REMOVED, float_opt, int_opt, opts_of, pos_int_opt,
+    refuse_removed_opt,
+)
 
 # ---------------------------------------------------------------------------
 # column-expression factories (usable directly or via the DSL ops)
@@ -788,9 +791,9 @@ def op_dedup_paragraphs(ctx: Ctx, rel: Rel, *rest) -> Rel:
 
     Cost shape: like pack-chunks, the input lineage is traversed twice
     (dedup branch + the id-recovery join that restores documents whose
-    every paragraph was filtered); pass {"persist": true} to cache the
-    input across both branches when it is an expensive pipeline rather
-    than a stored table."""
+    every paragraph was filtered); when the input is an expensive
+    pipeline rather than a stored table, wrap it in ["persist", rel]
+    upstream so both branches read one pinned copy."""
     from pyspark.sql import Window
 
     if rel.df.isStreaming:
@@ -802,13 +805,12 @@ def op_dedup_paragraphs(ctx: Ctx, rel: Rel, *rest) -> Rel:
             "per micro-batch via foreach-batch"
         )
     opts = opts_of(rest)
+    refuse_removed_opt(opts, "persist", "dedup-paragraphs", PERSIST_REMOVED)
     colc = opts.get("col", "text")
     idc = opts.get("id", "doc_id")
     sep = opts.get("sep", "\n\n")
     min_chars = int_opt(opts, "min_chars", "dedup-paragraphs", 0)
     df = rel.df
-    if opts.get("persist"):
-        df = df.persist()
     other = [c for c in df.columns if c not in (colc,)]
 
     # literal-quote like Pattern.quote: an embedded \E would otherwise

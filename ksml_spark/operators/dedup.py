@@ -28,8 +28,9 @@ the first-class extension operators a 100 TB corpus pipeline needs:
         -> keep each cluster's representative (min id). The one-call
         composition of the pipeline above.
 
-Scale posture: MinHash signatures are per-row narrow expressions (one scan,
-whole-stage codegen, no Python); the LSH self-join shuffles on (band,
+Scale posture: batch MinHash signatures are one scan + shingle explode +
+codegen hash-agg (no Python); streaming ones are a shuffle-free per-row
+Arrow UDF with identical values. The LSH self-join shuffles on (band,
 bucket) — the standard shingle→minhash→band→bucket-join plan whose shuffle
 volume is O(rows·bands), independent of pair count. Exact Jaccard is only
 ever run INSIDE blocks (blocking key join), never all-pairs.
@@ -65,7 +66,7 @@ def minhash_slice(j: int) -> tuple[int, int]:
 
 from .util import opts_of as _opts  # noqa: E402  (shared option merging)
 from .util import float_opt, int_opt, pos_int_opt  # noqa: E402  (curated parses)
-from .util import refuse_removed_opt  # noqa: E402
+from .util import STORAGE_REMOVED, refuse_removed_opt  # noqa: E402
 
 
 @defop("dedup")
@@ -134,7 +135,7 @@ def shingles_col(col: Column, k: int = SHINGLE_K) -> Column:
     )
 
 
-def _pin_tokens(toks: DataFrame, opts: dict) -> DataFrame:
+def _pin_tokens(toks: DataFrame) -> DataFrame:
     """Persist the tokenized (id, blocks, token-array, n) relation for
     the pair operators (jaccard / containment), batch only.
 
@@ -150,10 +151,9 @@ def _pin_tokens(toks: DataFrame, opts: dict) -> DataFrame:
        relation is a pushdown barrier: the filter stays above the
        cache, the scan reads only raw columns.
 
-    DISK_ONLY by default for the same reason as lsh-candidates
-    (dedup.py:199): at 100 TB the token arrays evict / thrash executor
-    storage memory; {"storage": "memory"} opts into MEMORY_AND_DISK
-    for small interactive runs.
+    DISK_ONLY (util.pin's level), for the same reason as
+    lsh-candidates: at 100 TB the token arrays evict / thrash executor
+    storage memory.
 
     near-dedup pins its INPUT by the same rule, for reason 1 at the
     pipeline level: the pair stage's sample, the pair checkpoint and the
@@ -164,50 +164,9 @@ def _pin_tokens(toks: DataFrame, opts: dict) -> DataFrame:
     ``ksml_spark.release_pinned()`` frees them all."""
     if toks.isStreaming:
         return toks
-    from pyspark import StorageLevel
-
     from .util import pin
 
-    level = (
-        StorageLevel.MEMORY_AND_DISK
-        if opts.get("storage") == "memory"
-        else StorageLevel.DISK_ONLY
-    )
-    return pin(toks, level)
-
-
-def band_signature_cols(textc: str) -> dict:
-    """Per-row EXPRESSION form of band_signatures: {band_i: Column}.
-
-    array_min over the transformed shingle array — higher-order
-    functions, so interpreted (~10x slower per row than the explode +
-    codegen-agg path) but SHUFFLE-FREE and therefore legal on streaming
-    sources, where the per-doc min aggregation would be a stateful agg.
-    Values are bit-identical to the agg path (min over the same md5
-    piece set; parity pinned by test). NULL text yields NULL bands."""
-    sh = shingles_col(F.col(textc))
-
-    def _piece(j: int):
-        # factory closure: a 2-arg lambda would make F.transform pass the
-        # element INDEX as the second argument, clobbering a j=j default
-        m, p = minhash_slice(j)
-
-        def fn(s):
-            return F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{m}#"), s)), p, 8), 16, 10
-            ).cast("long")
-
-        return fn
-
-    mins = [F.array_min(F.transform(sh, _piece(j))) for j in range(N_HASHES)]
-    return {
-        f"band_{b}": F.md5(
-            F.concat(
-                *[mins[b * ROWS_PER_BAND + r].cast("string") for r in range(ROWS_PER_BAND)]
-            )
-        )
-        for b in range(N_BANDS)
-    }
+    return pin(toks)
 
 
 def _sig_struct_udf(with_toks: bool, shingle_k: int = SHINGLE_K,
@@ -215,8 +174,8 @@ def _sig_struct_udf(with_toks: bool, shingle_k: int = SHINGLE_K,
     """Arrow-batched per-row MinHash band signatures, numpy-vectorized
     per row — the streaming signature path of both families.
 
-    family="md5" (streaming lsh-candidates): bit-identical to
-    band_signature_cols and the batch agg path (parity pinned by test)
+    family="md5" (streaming minhash and lsh-candidates): bit-identical
+    to the batch agg path (parity pinned by test)
     — 4 salted md5 digests per shingle sliced into 16 32-bit pieces,
     min per piece. The digests are C calls; the 16-way min that used to
     be a ~770-iteration Python loop per doc is one numpy reshape+min.
@@ -319,6 +278,16 @@ def _sig_struct_udf(with_toks: bool, shingle_k: int = SHINGLE_K,
     return _sig
 
 
+def _stream_bands(df: DataFrame, textc: str, family: str = "md5") -> DataFrame:
+    """``df`` minus its NULL-text rows, with band_0..band_{B-1} appended
+    by the per-row _sig_struct_udf (shuffle-free, streaming-legal)."""
+    sig = _sig_struct_udf(with_toks=False, family=family)
+    out = df.filter(F.col(textc).isNotNull()).withColumn("__sig", sig(F.col(textc)))
+    return out.withColumns({
+        f"band_{b}": F.element_at("__sig.bands", b + 1) for b in range(N_BANDS)
+    }).drop("__sig")
+
+
 def band_signatures(
     df: DataFrame, idc: str, textc: str, family: str = "md5",
     keep: tuple = (),
@@ -331,9 +300,9 @@ def band_signatures(
     rows with NULL text are dropped, matching the batch path where they
     produce no shingle rows): the Arrow-vectorized _sig_struct_udf,
     bit-identical to the batch construction (measured ~4x faster than
-    the interpreted HOF expressions of band_signature_cols). Batch
-    inputs take the explode + codegen hash-agg path below, which beats
-    both.
+    the same signatures as interpreted array_min/transform expressions).
+    Batch inputs take the explode + codegen hash-agg path below, which
+    beats both.
 
     Plan shape chosen for codegen: explode shingles -> 4 salted md5 columns
     sliced into 16 32-bit hex pieces (whole-stage codegen; Spark's
@@ -352,18 +321,8 @@ def band_signatures(
     from .util import spread
 
     if df.isStreaming:
-        nn = df.filter(F.col(textc).isNotNull())
-        kc = [F.col(c) for c in keep]
-        sig = _sig_struct_udf(with_toks=False, family=family)
-        return nn.select(
-            F.col(idc), *kc, sig(F.col(textc)).alias("__sig")
-        ).select(
-            F.col(idc),
-            *kc,
-            *[
-                F.element_at("__sig.bands", b + 1).alias(f"band_{b}")
-                for b in range(N_BANDS)
-            ],
+        return _stream_bands(df, textc, family).select(
+            idc, *keep, *[f"band_{b}" for b in range(N_BANDS)]
         )
 
     sh = spread(df).select(F.col(idc), F.explode(shingles_col(F.col(textc))).alias("__s"))
@@ -433,18 +392,15 @@ def band_signatures(
 @defop("minhash")
 def op_minhash(ctx: Ctx, rel: Rel, *rest) -> Rel:
     """Adds MinHash band-bucket columns (batch: codegen agg + join back
-    on the id; streaming: per-row expression columns — shuffle-free,
-    identical values; NULL-text rows are dropped on both paths,
-    matching the batch inner join)."""
+    on the id; streaming: _stream_bands, the per-row Arrow UDF streaming
+    lsh-candidates also runs — shuffle-free, identical values, every
+    input column kept); NULL-text rows are dropped on both paths,
+    matching the batch inner join."""
     opts = _opts(rest)
     idc = opts.get("id", "doc_id")
     colc = opts.get("col", "text")
     if rel.df.isStreaming:
-        bands = band_signature_cols(colc)
-        out = rel.df.filter(F.col(colc).isNotNull())
-        for n, c in bands.items():
-            out = out.withColumn(n, c)
-        return rel.with_df(out)
+        return rel.with_df(_stream_bands(rel.df, colc))
     sigs = band_signatures(rel.df, idc, colc)
     return rel.with_df(rel.df.join(sigs, idc, "inner"))
 
@@ -458,26 +414,19 @@ def op_lsh_candidates(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     key is the bucket, so cost scales with rows·bands, not candidate-pair
     count; skewed buckets are split by AQE."""
     opts = _opts(rest)
+    refuse_removed_opt(opts, "storage", "lsh-candidates", STORAGE_REMOVED)
     idc = opts.get("id", "doc_id")
     sigs = band_signatures(rel.df, idc, opts.get("col", "text"))
     if not sigs.isStreaming:
         # the self-join reads the signature relation twice; materialize it
-        # so the shingle/md5 work runs once. DISK_ONLY, not the default
+        # so the shingle/md5 work runs once. DISK_ONLY, not Spark's
         # MEMORY_AND_DISK: at 100 TB the signature relation evicts /
         # thrashes executor storage memory, and a sequential disk re-read
         # of the narrow (id + 4 hex) relation is cheap next to recomputing
-        # the shingle explosion ({"storage": "memory"} opts into memory
-        # for small interactive runs)
-        from pyspark import StorageLevel
-
+        # the shingle explosion
         from .util import pin
 
-        level = (
-            StorageLevel.MEMORY_AND_DISK
-            if opts.get("storage") == "memory"
-            else StorageLevel.DISK_ONLY
-        )
-        sigs = pin(sigs, level)
+        sigs = pin(sigs)
     long = sigs.select(
         F.col(idc),
         F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(N_BANDS)])).alias(
@@ -856,6 +805,7 @@ def op_jaccard_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             "batch-only; use lsh-join for incremental near-dup on streams"
         )
     opts = _opts(rest)
+    refuse_removed_opt(opts, "storage", "jaccard-pairs", STORAGE_REMOVED)
     idc = opts.get("id", "doc_id")
     block = opts.get("block")
     thr = float_opt(opts, "threshold", "jaccard-pairs", 0.5)
@@ -889,7 +839,7 @@ def op_jaccard_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
         tok_ids.alias("__t"),
     )
     toks = toks.withColumn("__n", F.size(F.col("__t")))
-    toks = _pin_tokens(toks, opts)
+    toks = _pin_tokens(toks)
 
     # Plan choice: {"prefix": True/False} is an explicit override; the
     # default "auto" estimates the token index from a LIMIT-sample (a
@@ -1027,6 +977,7 @@ def op_containment_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             "batch-only; use lsh-join for incremental near-dup on streams"
         )
     opts = _opts(rest)
+    refuse_removed_opt(opts, "storage", "containment-pairs", STORAGE_REMOVED)
     idc = opts.get("id", "doc_id")
     block = opts.get("block")
     thr = float_opt(opts, "threshold", "containment-pairs", 0.9)
@@ -1052,7 +1003,7 @@ def op_containment_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
         *[F.expr(b).alias(f"__b{i}") for i, b in enumerate(blocks)],
         tok_ids.alias("__t"),
     ).withColumn("__n", F.size(F.col("__t")))
-    toks = _pin_tokens(toks, opts)
+    toks = _pin_tokens(toks)
     ex = toks.select(
         F.col(idc),
         *[f"__b{i}" for i in range(len(blocks))],
@@ -1547,9 +1498,8 @@ def op_near_dedup(ctx: Ctx, rel: Rel, *rest) -> Rel:
     components beyond) -> left_anti join against the non-representative
     ids (a set far smaller than the corpus, so Catalyst broadcasts it).
 
-    The input is pinned once (the _pin_tokens storage rule: DISK_ONLY,
-    MEMORY_AND_DISK under {"storage": "memory"}) before any of that
-    runs. Three jobs read it: the pair stage's plan-time sample, the
+    The input is pinned once (DISK_ONLY, the _pin_tokens rule) before
+    any of that runs. Three jobs read it: the pair stage's plan-time sample, the
     pair checkpoint in dup-clusters and the final anti join; unpinned,
     each re-ran the whole upstream pipeline. A call therefore holds two
     registry pins (this one and the pair stage's), freed by
@@ -1561,6 +1511,7 @@ def op_near_dedup(ctx: Ctx, rel: Rel, *rest) -> Rel:
     low — the copied-paragraph case); winnow-pairs' opts (k, window,
     min_shared, max_fp_docs) pass through."""
     opts = _opts(rest)
+    refuse_removed_opt(opts, "storage", "near-dedup", STORAGE_REMOVED)
     idc = opts.get("id", "doc_id")
     method = opts.get("method", "jaccard")
     if method not in ("jaccard", "winnow"):
@@ -1571,7 +1522,7 @@ def op_near_dedup(ctx: Ctx, rel: Rel, *rest) -> Rel:
 
     # spread BEFORE the pin: a pinned relation hides its source files, so
     # the pair stage's own spread would no longer see a one-split source
-    pinned = rel.with_df(_pin_tokens(spread(rel.df), opts))
+    pinned = rel.with_df(_pin_tokens(spread(rel.df)))
     if method == "winnow":
         pairs = op_winnow_pairs(ctx, pinned, opts)
     else:
@@ -1711,7 +1662,8 @@ def op_simhash_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     (see simhash_signatures), so the DuckDB oracle brute-forces the
     same pairs from the same signatures.
 
-    Operating envelope (measured, scripts/ann_recall_probe.py): 64-bit
+    Operating envelope (measured by the late-r13 recall probe, numbers
+    in docs/SCALE.md): 64-bit
     hamming <= 3 requires ~99% feature sharing (per-bit correlation
     ~cos(3pi/64)), so this op finds NEAR-IDENTICAL documents — 0.93 /
     0.85 / 0.73 recall at 1/2/4 token edits on 400-token docs, and
@@ -1836,8 +1788,6 @@ def op_dup_spans(ctx: Ctx, rel: Rel, *rest) -> Rel:
             "batch-only; run per micro-batch via foreach-batch, or use "
             "minhash/lsh-join for incremental near-dup on streams"
         )
-    from pyspark import StorageLevel
-
     from .util import md5_long_col, pin, spread
 
     grams = spread(rel.df.filter(F.col(colc).isNotNull())).select(
@@ -1847,8 +1797,7 @@ def op_dup_spans(ctx: Ctx, rel: Rel, *rest) -> Rel:
         ).alias("__g"),
     )
     per_doc_gram = pin(
-        grams.groupBy(idc, "__g").agg(F.count(F.lit(1)).alias("__cnt")),
-        StorageLevel.DISK_ONLY,
+        grams.groupBy(idc, "__g").agg(F.count(F.lit(1)).alias("__cnt"))
     )
     shared = (
         per_doc_gram.groupBy("__g")
@@ -1991,8 +1940,6 @@ def op_winnow_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
             "candidates"
         )
     out_a, out_b = out_as
-    from pyspark import StorageLevel
-
     from .util import pin, spread
 
     hashes, windows = _winnow_exprs(colc, k, w)
@@ -2002,8 +1949,7 @@ def op_winnow_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     postings = pin(
         spread(rel.df.filter(F.col(colc).isNotNull()))
         .select(F.col(idc), hashes.alias("__h"))
-        .select(F.col(idc), F.explode(F.array_distinct(windows)).alias("__fp")),
-        StorageLevel.DISK_ONLY,
+        .select(F.col(idc), F.explode(F.array_distinct(windows)).alias("__fp"))
     )
     if max_fp_docs:
         # per-fp doc counts are one hash agg over the pinned postings;

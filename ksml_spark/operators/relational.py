@@ -32,7 +32,9 @@ from ..errors import ArityError
 from ..eval import Ctx, defop
 from ..exprs import to_col
 from ..model import GroupedRel, KStreamRel, KTableRel, Rel
-from .util import float_opt, int_opt, opts_of
+from .util import (
+    STORAGE_REMOVED, float_opt, int_opt, opts_of, refuse_removed_opt,
+)
 
 
 def _as_rel(x) -> Rel:
@@ -756,11 +758,13 @@ def op_except(ctx: Ctx, left: Rel, right, *rest) -> Rel:
 
 @defop("persist")
 def op_persist(ctx: Ctx, rel: Rel, *rest) -> Rel:
-    """Pin the relation for reuse across several downstream queries
-    (interactive sessions, iterative pipelines):
+    """Pin the relation DISK_ONLY for reuse by several downstream queries.
 
-        ["persist", rel]                      # DISK_ONLY (serving-safe)
-        ["persist", rel, {"storage": "memory"}]  # MEMORY_AND_DISK
+    For interactive sessions, iterative pipelines, or an input that an
+    operator reads more than once (lm-score training, pack-chunks,
+    dedup-paragraphs):
+
+        ["persist", rel]
 
     Registered in the engine's BOUNDED pin registry (oldest evicted,
     `ksml_spark.release_pinned()` frees all) — repeated persists in a
@@ -768,19 +772,13 @@ def op_persist(ctx: Ctx, rel: Rel, *rest) -> Rel:
     `df.persist()`. Streaming rels pass through unchanged (micro-batch
     caching is the engine's job)."""
     opts = opts_of(rest)
+    refuse_removed_opt(opts, "storage", "persist", STORAGE_REMOVED)
     rel = _as_rel(rel)
     if rel.df.isStreaming:
         return rel
-    from pyspark import StorageLevel
-
     from .util import pin
 
-    level = (
-        StorageLevel.MEMORY_AND_DISK
-        if opts.get("storage") == "memory"
-        else StorageLevel.DISK_ONLY
-    )
-    return rel.with_df(pin(rel.df, level))
+    return rel.with_df(pin(rel.df))
 
 
 @defop("freq-items")

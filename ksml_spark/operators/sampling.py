@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..errors import ArityError
 from ..eval import Ctx, defop
 from ..model import Rel
-from .util import int_opt, str_opt
+from .util import PERSIST_REMOVED, int_opt, refuse_removed_opt, str_opt
 from .util import opts_of as _opts
 
 
@@ -207,11 +207,12 @@ def op_pack_chunks(ctx: Ctx, rel: Rel, *rest) -> Rel:
     pipelines materialize token counts once) the second pass is a
     narrow metadata-light scan. When tokens are computed on the fly
     (e.g. token-count immediately upstream) the tokenize expression runs
-    twice; pass {"persist": true} to cache the input (MEMORY_AND_DISK)
-    across both branches instead."""
+    twice; wrap the input in ["persist", rel] upstream so both branches
+    read one pinned copy instead."""
     from pyspark.sql import Window
 
     opts = _opts(rest)
+    refuse_removed_opt(opts, "persist", "pack-chunks", PERSIST_REMOVED)
     tokc = opts.get("tokens")
     if not tokc:
         raise ArityError("pack-chunks needs {'tokens': <token-count column>}")
@@ -233,8 +234,6 @@ def op_pack_chunks(ctx: Ctx, rel: Rel, *rest) -> Rel:
         )
 
     df = rel.df.withColumn("__bkt", (F.expr(order).cast("long") / bucket_size).cast("long"))
-    if opts.get("persist"):
-        df = df.persist()
     w_in = (
         Window.partitionBy("__bkt")
         .orderBy(F.expr(order), F.col(idc))

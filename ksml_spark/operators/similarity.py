@@ -40,7 +40,7 @@ from ..model import KStreamRel, Rel
 from .util import opts_of as _opts  # noqa: E402  (shared option merging)
 from .util import req_opt as _req  # noqa: E402  (curated required-option fetch)
 from .util import float_opt, int_opt  # noqa: E402  (curated parses)
-from .util import refuse_removed_opt  # noqa: E402
+from .util import STORAGE_REMOVED, refuse_removed_opt  # noqa: E402
 from .util import pos_int_opt as _pos_int_opt  # noqa: E402  (curated >= 1 int parse)
 
 
@@ -579,8 +579,8 @@ def op_ann_lsh_topk(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     recall lever: band j hashes coordinates [j*sign_dims,
     (j+1)*sign_dims) and a pair is a candidate if it co-buckets in ANY
     band. Single-band recall on unclustered data decays as
-    (1-theta/pi)^sign_dims (measured at its theory floor by
-    scripts/ann_recall_probe.py: 0.01 at dims=8 on uniform vectors);
+    (1-theta/pi)^sign_dims (measured at its theory floor by the
+    late-r13 recall probe: 0.01 at dims=8 on uniform vectors);
     banding lifts it to 1-(1-p^r)^b at b x the candidate volume.
     Requires dim >= bands*sign_dims (disjoint slices). bands=1
     (default) is bit-compatible with every pre-bands release. Shape:
@@ -945,8 +945,8 @@ def op_neardup_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
       compared if it co-buckets in ANY band — at threshold 0.9 the
       per-coordinate sign agreement is ~0.86, so a single d=8 band
       finds only ~0.86^8 = 29% of true near-dups; banding lifts pair
-      recall to 1-(1-p^d)^b (measured on planted duplicates by
-      scripts/ann_recall_probe.py) at ~b x the join volume. Requires
+      recall to 1-(1-p^d)^b (measured r13 on planted duplicates:
+      0.89/0.985/1.0 at b=4/8/16) at ~b x the join volume. Requires
       dim >= bands*lsh_dims; bands=1 (default) is bit-compatible.
     * {"allow_full": true} — explicit opt-in to the full O(N²) self-join,
       for small relations only; omitting all three RAISES.
@@ -1027,7 +1027,7 @@ def op_neardup_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
                     f"(lsh_dims={ldims}, bands=1) at threshold={thr} "
                     "finds only a fraction of true near-duplicates — "
                     "measured recall 0.42 at lsh_dims=8, threshold=0.9 "
-                    "(scripts/ann_recall_probe.py; the (1-theta/pi)^d "
+                    "(r13 recall probe; the (1-theta/pi)^d "
                     "floor). Raise recall with the OR-construction "
                     "{'bands': b, 'dim': n} (measured 0.89/0.985/1.0 at "
                     "b=4/8/16), or acknowledge single-band blocking "
@@ -1489,6 +1489,7 @@ def op_semdedup(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
         "semdedup assigns with the expression plan, whose groupBy already "
         "partitions by the id it joins on",
     )
+    refuse_removed_opt(opts, "storage", "semdedup", STORAGE_REMOVED)
     thr = float_opt(opts, "threshold", "semdedup", 0.9)
     action = opts.get("action", "annotate")
     if action not in ("annotate", "filter"):
@@ -1526,7 +1527,6 @@ def op_semdedup(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     ).df
     members = assigned
 
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     # 0 disables either guard; negatives refuse (shared nonneg contract)
@@ -1572,11 +1572,6 @@ def op_semdedup(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     # plan is bit-identical to the default path.
     from .util import pin
 
-    level = (
-        StorageLevel.MEMORY_AND_DISK
-        if opts.get("storage") == "memory"
-        else StorageLevel.DISK_ONLY
-    )
     split_ids: list = []
     members_pin = None
     if hot_split and max_pairs:
@@ -1587,7 +1582,7 @@ def op_semdedup(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
         # 100 TB). The pre-check collect materializes the pin; it is
         # released as soon as the ranked pin below is materialized (or
         # immediately when no cluster is over the cap).
-        members_pin = pin(members, level)
+        members_pin = pin(members)
         members = members_pin
         pre = (
             members.filter(F.col("cluster").isNotNull())
@@ -1648,14 +1643,13 @@ def op_semdedup(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     # consumers (keep base, the earlier-ranked pair side, the dup-id
     # join-back, the degenerate passthrough) — unpinned, each branch
     # re-ran the full scan + centroid BNLJ + window shuffle (11 scans in
-    # the audited plan). DISK_ONLY default for the _pin_tokens reason:
-    # the pinned rows carry the corpus vectors, which would thrash
-    # executor storage memory at 100 TB; {"storage": "memory"} opts into
-    # MEMORY_AND_DISK for small interactive runs.
+    # the audited plan). DISK_ONLY for the _pin_tokens reason: the
+    # pinned rows carry the corpus vectors, which would thrash executor
+    # storage memory at 100 TB.
     w = Window.partitionBy(*part_cols).orderBy(
         F.col("sim").asc(), F.col(idc).asc()
     )
-    pinned = pin(members.withColumn("__rk", F.row_number().over(w)), level)
+    pinned = pin(members.withColumn("__rk", F.row_number().over(w)))
     ranked = pinned.filter(F.col("cluster").isNotNull())
     # Oversized-cluster guard (the cooccurrence-window-cap /
     # bpe-train-vocab-cap pattern: guard + loud, overridable error).
@@ -1895,6 +1889,7 @@ def op_semdedup_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
     from ..errors import ArityError
 
     opts = _opts(rest)
+    refuse_removed_opt(opts, "storage", "semdedup-join", STORAGE_REMOVED)
     idc, vecc = opts.get("id", "vec_id"), opts.get("vec", "embedding")
     ridc = opts.get("right_id", idc)
     rvecc = opts.get("right_vec", vecc)
@@ -2148,14 +2143,8 @@ def op_semdedup_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
         # The pin itself: the assigned-left relation feeds up to three
         # plan branches (semi side, join-back left, filter) — unpinned,
         # each re-runs the scan + Arrow assign UDF. DISK_ONLY for the
-        # semdedup reason: the pinned rows carry the corpus vectors
-        # ({"storage": "memory"} opts into MEMORY_AND_DISK).
-        la = pin(
-            la.withColumn("__rid", F.monotonically_increasing_id()),
-            StorageLevel.MEMORY_AND_DISK
-            if opts.get("storage") == "memory"
-            else StorageLevel.DISK_ONLY,
-        )
+        # semdedup reason: the pinned rows carry the corpus vectors.
+        la = pin(la.withColumn("__rid", F.monotonically_increasing_id()))
     assigned = la.filter(F.col("cluster").isNotNull())
 
     cond = (F.col("cluster") == F.col("__rcl")) & (

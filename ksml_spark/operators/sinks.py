@@ -41,6 +41,20 @@ def _encode_kafka(rel: Rel, kserde: Optional[Serde], vserde: Optional[Serde]) ->
     return rel.df.select(kc.alias("key"), vc.alias("value"))
 
 
+def with_stream_opts(w, opts: dict):
+    """Apply the options every streaming sink shares: ``checkpoint`` and
+    ``trigger`` (``"available_now"`` or an interval such as ``"1
+    second"``; without one, Spark's default back-to-back micro-batches)."""
+    if "checkpoint" in opts:
+        w = w.option("checkpointLocation", opts["checkpoint"])
+    trig = opts.get("trigger")
+    if trig == "available_now":
+        w = w.trigger(availableNow=True)
+    elif trig:
+        w = w.trigger(processingTime=trig)
+    return w
+
+
 @defop("to")
 def op_to(ctx: Ctx, rel: Rel, *rest) -> SinkResult:
     """[:to! key-serde val-serde topic] / [:to! rel {sink opts}]
@@ -100,14 +114,7 @@ def op_to(ctx: Ctx, rel: Rel, *rest) -> SinkResult:
             w = w.option("header", "true")
         if fmt == "memory":
             w = w.queryName(opts.get("name", rel.name or "ksml_sink"))
-        if "checkpoint" in opts:
-            w = w.option("checkpointLocation", opts["checkpoint"])
-        trig = opts.get("trigger")
-        if trig == "available_now":
-            w = w.trigger(availableNow=True)
-        elif trig:
-            w = w.trigger(processingTime=trig)
-        q = w.outputMode(opts.get("output_mode", "append")).start(
+        q = with_stream_opts(w, opts).outputMode(opts.get("output_mode", "append")).start(
             **({"path": opts["path"]} if "path" in opts else {})
         )
         return SinkResult(rel, opts.get("path") or opts.get("name"), q)
@@ -143,11 +150,7 @@ def op_foreach_batch(ctx: Ctx, rel: Rel, fn, *rest) -> SinkResult:
         )
     opts = opts_of(rest)
     if rel.df.isStreaming:
-        w = rel.df.writeStream.foreachBatch(fn)
-        if "checkpoint" in opts:
-            w = w.option("checkpointLocation", opts["checkpoint"])
-        if opts.get("trigger") == "available_now":
-            w = w.trigger(availableNow=True)
+        w = with_stream_opts(rel.df.writeStream.foreachBatch(fn), opts)
         return SinkResult(rel, "foreachBatch", w.start())
     fn(rel.df, 0)
     return SinkResult(rel, "foreachBatch")

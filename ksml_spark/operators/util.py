@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
 from typing import Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -156,16 +159,42 @@ def req_opt(opts: dict, key: str, op: str):
 
 
 def refuse_removed_opt(opts: dict, key: str, op: str, replacement: str) -> None:
-    """Curated refusal of a retired implementation switch: each such op
-    now picks its own path, and a form still passing ``key`` gets an
-    ArityError naming what replaced it instead of a silently ignored
-    option."""
+    """Curated refusal of a retired implementation switch or caching
+    hint: the op now picks its own path / storage level, and a form
+    still passing ``key`` gets an ArityError naming what replaced it
+    instead of a silently ignored option."""
     from ..errors import ArityError
 
     if key in opts:
         raise ArityError(
             f"{op}: option {key!r} was removed — {replacement}; drop the key"
         )
+
+
+# Replacements named by the refusals of the retired caching options.
+STORAGE_REMOVED = "the operator pins DISK_ONLY"
+PERSIST_REMOVED = ('wrap the input in ["persist", rel] upstream, which pins '
+                   "it in the bounded registry")
+
+
+# One lock for every scoped flip of a session-wide conf: two threads
+# interleaving their save/set/restore would otherwise restore each
+# other's "prev" and leave the session at the flipped value for good.
+_SESSION_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def session_conf(spark, key: str, value: str):
+    """Set a session-wide conf around an EAGER step (schema inference, a
+    collect), then restore it, under the one lock above."""
+    conf = spark.conf
+    with _SESSION_CONF_LOCK:
+        prev = conf.get(key)
+        conf.set(key, value)
+        try:
+            yield
+        finally:
+            conf.set(key, prev)
 
 
 def order_cols(order) -> list[Column]:
@@ -234,22 +263,25 @@ def spread(df: DataFrame) -> DataFrame:
 
 
 # Bounded registry of operator-pinned (persisted) DataFrames.  The pair
-# operators (jaccard / containment), lsh-candidates, and lm-score's
-# {"persist": true} path persist intermediate relations that the CALLER's
-# later action materializes — the operator can't unpersist them eagerly
-# without defeating the pin (Spark is lazy).  In a long-lived session,
-# repeated invocations would otherwise accumulate DISK_ONLY cache blocks
-# until the driver GCs the refs.  The registry gives that a hard bound:
-# pins beyond the cap evict oldest-first (correctness-neutral — an evicted
-# pin just recomputes), and ``release_pinned()`` frees everything, for
-# callers that know a batch of pair queries is done.
+# operators (jaccard / containment), lsh-candidates, and the persist op
+# persist intermediate relations that the CALLER's later action
+# materializes — the operator can't unpersist them eagerly without
+# defeating the pin (Spark is lazy).  In a long-lived session, repeated
+# invocations would otherwise accumulate cache blocks until the driver
+# GCs the refs.  The registry gives that a hard bound: pins beyond the
+# cap evict oldest-first (correctness-neutral — an evicted pin just
+# recomputes from its lineage), and ``release_pinned()`` frees
+# everything, for callers that know a batch of pair queries is done.
 _PINNED: list[DataFrame] = []
 _PIN_CAP = 8
 
 
-def pin(df: DataFrame, level) -> DataFrame:
-    """persist() with bounded-registry bookkeeping (see _PINNED above)."""
-    p = df.persist(level)
+def pin(df: DataFrame, level=None) -> DataFrame:
+    """persist() with bounded-registry bookkeeping (see _PINNED above).
+    DISK_ONLY by default: corpus-sized relations would thrash executor
+    storage memory at 100 TB; only model-sized sites pass
+    MEMORY_AND_DISK."""
+    p = df.persist(level or StorageLevel.DISK_ONLY)
     _PINNED.append(p)
     while len(_PINNED) > _PIN_CAP:
         try:

@@ -17,6 +17,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.util import session_conf
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -82,8 +84,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     (bit-identical to DuckDB's naive reading).
 
     ``inferTimestampNTZ`` is save/restored around the (eager)
-    schema-inference read — the 4.1.2 reader ignores a per-read option,
-    and a permanent ``spark.conf.set`` would silently change NTZ
+    schema-inference read under the engine's scoped-conf lock
+    (``operators.util.session_conf``) — the 4.1.2 reader ignores a
+    per-read option, and a permanent ``spark.conf.set`` would silently change NTZ
     inference for user code outside this framework. ``nanosAsLong`` is
     NOT restored, deliberately: the parquet scan re-reads it at
     execution time (action time, not read_parquet time), so restoring it
@@ -106,12 +109,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         # action time to map TIMESTAMP(NANOS) onto the LongType field.
         df = spark.read.schema(cached).parquet(path)
     else:
-        ntz_prev = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
-        conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        try:
+        with session_conf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled",
+                          "false"):
             df = spark.read.parquet(path)
-        finally:
-            conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", ntz_prev)
         _SCHEMA_CACHE[path] = (stamp, df.schema)
     for c in nanos:
         # Integer division, not float: at epoch-ns magnitude doubles have

@@ -133,7 +133,7 @@ def _fake_records(df: DataFrame, topic: str, epoch: int = 0, partitions: int = 4
 
 def kafka_sink(df: DataFrame, topic: Optional[str], opts: dict, rel):
     """Write encoded (binary key, binary value) rows to a topic."""
-    from ..operators.sinks import SinkResult
+    from ..operators.sinks import SinkResult, with_stream_opts
 
     if topic is None:
         from ..errors import ArityError
@@ -152,11 +152,7 @@ def kafka_sink(df: DataFrame, topic: Optional[str], opts: dict, rel):
             w = df.writeStream.foreachBatch(write_batch).outputMode(
                 opts.get("output_mode", "update")
             )
-            if "checkpoint" in opts:
-                w = w.option("checkpointLocation", opts["checkpoint"])
-            if opts.get("trigger") == "available_now":
-                w = w.trigger(availableNow=True)
-            return SinkResult(rel, topic, w.start())
+            return SinkResult(rel, topic, with_stream_opts(w, opts).start())
         epoch = _next_epoch(df.sparkSession, fake)
         _fake_records(df, topic, epoch=epoch,
                       partitions=partitions).write.mode("append").parquet(fake)
@@ -169,9 +165,7 @@ def kafka_sink(df: DataFrame, topic: Optional[str], opts: dict, rel):
             .option("kafka.bootstrap.servers", bootstrap)
             .option("topic", topic)
         )
-        if "checkpoint" in opts:
-            w = w.option("checkpointLocation", opts["checkpoint"])
-        return SinkResult(rel, topic, w.start())
+        return SinkResult(rel, topic, with_stream_opts(w, opts).start())
     (
         df.write.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap)

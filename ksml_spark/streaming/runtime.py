@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..eval import Ctx, defop
 from ..model import KTableRel, Rel
+from ..operators.util import session_conf
 
 
 @defop("with-watermark")
@@ -68,15 +69,11 @@ def file_stream_source(
     # watermarks reject NTZ event-time columns (see sources/files.py).
     # Scoped save/restore — the explicit schema pins the type for the
     # streaming scan, so only this inference read needs the conf.
-    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with session_conf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled",
+                      "false"):
         if schema is None:
             schema = spark.read.format(fmt).load(path).schema
         return spark.readStream.format(fmt).schema(schema).load(path)
-    finally:
-        spark.conf.set(key, prev)
 
 
 def run_to_memory(

@@ -44,7 +44,6 @@ Storage backends:
 
 from __future__ import annotations
 
-import threading
 from dataclasses import dataclass
 from typing import Any, Optional
 
@@ -52,13 +51,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import ArityError
-from ..operators.util import float_opt, int_opt, opts_of, str_opt
+from ..operators.util import float_opt, int_opt, opts_of, session_conf, str_opt
 from ..eval import Ctx, defop
 from ..model import KTableRel, Rel
-
-
-# serializes the session-conf flip around bucketed lookups (see lookup)
-_BUCKETED_LOOKUP_LOCK = threading.Lock()
 
 
 @dataclass
@@ -241,17 +236,13 @@ class ServeHandle:
         # turn it off for the lookup so the scan reads ONE bucket —
         # "SelectedBucketsCount: 1 out of N" — the ring.clj host-routing
         # analog. The conf is session-wide, so set/collect/restore runs
-        # under one module lock: two client threads interleaving their
-        # restores would otherwise leave the session at "false" for good.
-        conf = self.spark.conf
-        key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        with _BUCKETED_LOOKUP_LOCK:
-            prev = conf.get(key)
-            conf.set(key, "false")
-            try:
-                return df.collect()
-            finally:
-                conf.set(key, prev)
+        # under the engine's scoped-conf lock: two client threads
+        # interleaving their restores would otherwise leave the session
+        # at "false" for good.
+        with session_conf(self.spark,
+                          "spark.sql.sources.bucketing.autoBucketedScan.enabled",
+                          "false"):
+            return df.collect()
 
     def refresh(self) -> "ServeHandle":
         """Streaming handles: block until everything currently available

@@ -1,5 +1,11 @@
 """Generate docs/OPERATORS.md from the live operator registry — one row
-per registered op with its implementing function and docstring summary."""
+per registered op with its implementing function and docstring summary.
+
+    python scripts/gen_opdocs.py     # rewrite docs/OPERATORS.md
+
+``render()`` builds the text without writing it;
+tests/test_eval.py::test_operator_docs_match_registry compares it with
+the committed file."""
 
 from __future__ import annotations
 
@@ -13,10 +19,20 @@ from ksml_spark import OPERATORS  # noqa: E402
 import ksml_spark.operators  # noqa: F401,E402  (registers everything)
 
 
-def main() -> None:
-    seen = {}
+OUT = os.path.join(ROOT, "docs", "OPERATORS.md")
+
+
+def _by_impl() -> dict:
+    """{implementing function: [form names]} — aliases share a row."""
+    seen: dict = {}
     for name, fn in sorted(OPERATORS.items()):
         seen.setdefault(fn, []).append(name)
+    return seen
+
+
+def render() -> str:
+    """The full docs/OPERATORS.md text for the live registry."""
+    seen = _by_impl()
     lines = [
         "# Operator reference",
         "",
@@ -48,10 +64,14 @@ def main() -> None:
         mod = fn.__module__.replace("ksml_spark.", "")
         forms = ", ".join(f"`{n}`" for n in names)
         lines.append(f"| {forms} | `{mod}.{fn.__name__}` | {summary} |")
-    out = "\n".join(lines) + "\n"
-    with open(os.path.join(ROOT, "docs", "OPERATORS.md"), "w") as f:
-        f.write(out)
-    print(f"wrote docs/OPERATORS.md ({len(seen)} ops, {len(OPERATORS)} forms)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(OUT, "w") as f:
+        f.write(render())
+    print(f"wrote docs/OPERATORS.md ({len(_by_impl())} ops, "
+          f"{len(OPERATORS)} forms)")
 
 
 if __name__ == "__main__":

@@ -765,30 +765,29 @@ def test_lsh_join_composes_with_anti_join(spark):
     assert [r["doc_id"] for r in kept.collect()] == [2]
 
 
-def test_band_signature_cols_match_agg_path(spark, tables):
-    """The per-row HOF signature expressions produce bit-identical band
-    buckets to the explode + codegen-agg path (incl. the short-doc
-    whole-text fallback shingle)."""
-    from ksml_spark.operators.dedup import band_signature_cols, band_signatures
+def test_streaming_minhash_matches_batch(spark, tables, tmp_path):
+    """Streaming minhash (one availableNow batch) appends band buckets
+    bit-identical to batch minhash, keeps every input column, applies
+    the short-doc whole-text fallback shingle and drops NULL-text rows."""
+    from ksml_spark.streaming.runtime import file_stream_source, run_to_memory
 
-    docs = tables["documents"].limit(50)
-    agg = {r["doc_id"]: tuple(r[c] for c in r.asDict() if c.startswith("band_"))
-           for r in band_signatures(docs, "doc_id", "text").collect()}
-    bands = band_signature_cols("text")
-    from pyspark.sql import functions as F
-
-    hof = {r["doc_id"]: tuple(r[n] for n in bands)
-           for r in docs.select(F.col("doc_id"),
-                                *[c.alias(n) for n, c in bands.items()]).collect()}
-    assert agg == hof and len(agg) == 50
-    short = _docs(spark, [(1, "tiny doc"), (2, None)])
-    agg_s = {r["doc_id"]: r["band_0"]
-             for r in band_signatures(short, "doc_id", "text").collect()}
-    hof_s = {r["doc_id"]: r["band_0"]
-             for r in short.select("doc_id",
-                                   bands["band_0"].alias("band_0")).collect()}
-    assert agg_s[1] == hof_s[1]
-    assert 2 not in agg_s and hof_s[2] is None  # NULL text: dropped vs NULL
+    docs = tables["documents"].select("doc_id", "text", "lang").limit(40)
+    docs = docs.unionByName(spark.createDataFrame(
+        [(90001, "tiny doc", "en"), (90002, None, "en"), (90003, "", "en")],
+        "doc_id long, text string, lang string"))
+    p = str(tmp_path / "minhash_docs")
+    docs.write.parquet(p)
+    bands = [f"band_{b}" for b in range(4)]
+    batch = {r["doc_id"]: tuple(r) for r in _pipe(
+        spark, spark.read.parquet(p), ["minhash"]).collect()}
+    out = run_to_memory(
+        _pipe(spark, file_stream_source(spark, p), ["minhash"]),
+        "streaming_minhash", output_mode="append")
+    assert out.columns == ["doc_id", "text", "lang", *bands]
+    got = {r["doc_id"]: tuple(r) for r in out.collect()}
+    assert got == batch and len(got) == 42
+    assert 90002 not in got  # NULL text: no signature, row dropped
+    assert got[90001][1] == "tiny doc"
 
 
 def test_simhash_col_matches_agg_path(spark, tables):

@@ -565,6 +565,30 @@ _RETIRED_IMPL_OPTS = [
     ("semdedup", False, "assign_impl", ("auto", "expr", "blas"),
      {"id": "doc_id", "vec": "embedding", "dim": 3, "centroids": "doc_id = 1"},
      "semdedup assigns with the expression plan"),
+    # the caching hints: the engine picks the storage level, and an
+    # input read more than once is pinned by an upstream persist op
+    ("jaccard-pairs", False, "storage", ("memory", "disk"), {},
+     "operator pins DISK_ONLY"),
+    ("containment-pairs", False, "storage", ("memory", "disk"), {},
+     "operator pins DISK_ONLY"),
+    ("near-dedup", False, "storage", ("memory", "disk"), {},
+     "operator pins DISK_ONLY"),
+    ("lsh-candidates", False, "storage", ("memory", "disk"), {},
+     "operator pins DISK_ONLY"),
+    ("semdedup", False, "storage", ("memory", "disk"),
+     {"id": "doc_id", "vec": "embedding", "dim": 3, "centroids": "doc_id = 1"},
+     "operator pins DISK_ONLY"),
+    ("semdedup-join", True, "storage", ("memory", "disk"),
+     {"id": "doc_id", "vec": "embedding", "dim": 3, "centroids": "doc_id = 1"},
+     "operator pins DISK_ONLY"),
+    ("persist", False, "storage", ("memory", "disk"), {},
+     "operator pins DISK_ONLY"),
+    ("pack-chunks", False, "persist", (True, False), {"tokens": "n"},
+     "upstream, which pins it in the bounded registry"),
+    ("dedup-paragraphs", False, "persist", (True, False), {},
+     "upstream, which pins it in the bounded registry"),
+    ("lm-score", False, "persist", (True, False), {},
+     "upstream, which pins it in the bounded registry"),
 ]
 
 
@@ -573,9 +597,10 @@ _RETIRED_IMPL_OPTS = [
     ids=[f"{r[0]}-{r[2]}" for r in _RETIRED_IMPL_OPTS])
 def test_retired_impl_options_refused_naming_replacement(
         spark, probe_rel_df, op, operand, key, values, opts, replacement):
-    """The user-set implementation switches are gone — each op picks its
-    path from what it observes (streaming inputs, protobuf, centroid
-    count). Every value the retired option used to take is refused at
+    """The user-set implementation switches and caching hints are gone —
+    each op picks its path from what it observes (streaming inputs,
+    protobuf, centroid count) and pins DISK_ONLY where it pins at all.
+    Every value the retired option used to take is refused at
     construction with the curated ArityError naming what replaced it."""
     from ksml_spark.errors import ArityError
 

@@ -416,6 +416,78 @@ def test_foreach_batch_sink(spark, events_path):
     assert sum(n for _, n in seen) == 210  # clicks at sf0.001
 
 
+def test_streaming_sinks_honour_interval_trigger(spark, events_path, tmp_path):
+    """An interval ``trigger`` reaches the query on foreach-batch and on
+    the fake-transport kafka sink (both used to drop anything but
+    "available_now"); with no trigger Spark's default stands."""
+    rel = pipe(events_stream(spark, events_path), ["where", "false"], spark=spark)
+    sinks = {
+        "foreach-batch 1s": ["foreach-batch", rel, lambda df, i: None,
+                             {"trigger": "1 second"}],
+        "kafka fake 1s": ["to", rel, "out", {
+            "fake_dir": str(tmp_path / "topic"), "trigger": "1 second",
+            "checkpoint": str(tmp_path / "ck")}],
+        "foreach-batch default": ["foreach-batch", rel, lambda df, i: None],
+    }
+    got = {}
+    for name, form in sinks.items():
+        q = ksml(form, spark=spark).query
+        try:
+            got[name] = q._jsq.streamingQuery().trigger().toString()
+        finally:
+            q.stop()
+    assert got == {
+        "foreach-batch 1s": "ProcessingTimeTrigger(1000)",
+        "kafka fake 1s": "ProcessingTimeTrigger(1000)",
+        "foreach-batch default": "ProcessingTimeTrigger(0)",
+    }
+
+
+def test_concurrent_schema_inference_restores_ntz_conf(spark, tmp_path):
+    """read_parquet and file_stream_source flip inferTimestampNTZ off for
+    the whole session around their schema inference. Eight threads
+    inferring at once must each read the unadjusted timestamp as
+    TIMESTAMP (not TIMESTAMP_NTZ), and the session must end with the
+    conf it started with (interleaved restores used to leave it at
+    "false")."""
+    import datetime as dt
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ksml_spark.sources.files import read_parquet
+
+    # written by pyarrow, not Spark: no Spark schema in the footer, so the
+    # isAdjustedToUTC=false timestamp is typed by inference alone
+    table = pa.table({"k": [1], "ts": pa.array([dt.datetime(2024, 1, 1)],
+                                               pa.timestamp("us"))})
+    paths = [tmp_path / f"ntz{i}" for i in range(8)]
+    for p in paths:
+        p.mkdir()
+        pq.write_table(table, str(p / "part-0.parquet"))
+    paths = [str(p) for p in paths]
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prior = spark.conf.get(key)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads often
+    try:
+        def infer(p):
+            types = [read_parquet(spark, p).schema["ts"].dataType.simpleString()]
+            for _ in range(3):
+                df = file_stream_source(spark, p)
+                types.append(df.schema["ts"].dataType.simpleString())
+            return types
+
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            results = list(pool.map(infer, paths, timeout=300))
+        assert results == [["timestamp"] * 4] * 8
+        assert spark.conf.get(key) == prior
+    finally:
+        sys.setswitchinterval(switch)
+
+
 def test_streaming_global_table_join(spark, events_path, tables):
     """stream ⋈ global-table = stream-static broadcast join, streaming."""
     gt = ksml(["global-table", tables["nation"], {"key": "n_nationkey", "unique": True}],
