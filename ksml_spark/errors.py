@@ -37,3 +37,11 @@ class TypeDispatchError(KsmlError, TypeError):
 
     Also a ``TypeError`` so pre-existing callers catching the stdlib
     type keep working."""
+
+
+class StreamTimeoutError(KsmlError, TimeoutError):
+    """A streaming query run to completion (``availableNow``) did not
+    finish within its timeout; the query is stopped, since its output
+    so far is partial.
+
+    Also a ``TimeoutError`` so stdlib-type handlers keep working."""

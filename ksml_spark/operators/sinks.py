@@ -158,20 +158,22 @@ def op_foreach_batch(ctx: Ctx, rel: Rel, fn, *rest) -> SinkResult:
 
 @defop("print")
 def op_print(ctx: Ctx, rel: Rel, *rest) -> SinkResult:
-    """[:print! s] — debug sink (eval_test.clj:500-504). Streaming:
-    console sink; batch: df.show."""
+    """[:print! s {opts}] — debug sink (eval_test.clj:500-504).
+    Streaming: console sink (``checkpoint`` / ``trigger`` as every
+    streaming sink); batch: df.show."""
     if rel.df.isStreaming:
-        q = rel.df.writeStream.format("console").outputMode("append").start()
-        return SinkResult(rel, "console", q)
+        w = rel.df.writeStream.format("console").outputMode("append")
+        return SinkResult(rel, "console", with_stream_opts(w, opts_of(rest)).start())
     rel.df.show(20, truncate=False)
     return SinkResult(rel, "console")
 
 
 @defop("foreach", retype_value_errors=False)
 def op_foreach(ctx: Ctx, rel: Rel, action: ForeachAction, *rest) -> SinkResult:
-    """[:foreach s [:foreach-action f]] — terminal per-record side effect
-    (eval.clj:119-121; eval_test.clj:399-402). Runs on executors via
-    foreachPartition (batch) / writeStream.foreach (streaming); the driver
+    """[:foreach s [:foreach-action f] {opts}] — terminal per-record side
+    effect (eval.clj:119-121; eval_test.clj:399-402). Runs on executors
+    via foreachPartition (batch) / writeStream.foreach (streaming, with
+    ``checkpoint`` / ``trigger`` as every streaming sink); the driver
     never collects the data."""
     if not isinstance(action, ForeachAction) or not callable(action.fn):
         raise ArityError(
@@ -179,8 +181,8 @@ def op_foreach(ctx: Ctx, rel: Rel, action: ForeachAction, *rest) -> SinkResult:
         )
     fn = action.fn
     if rel.df.isStreaming:
-        q = rel.df.writeStream.foreach(lambda row: fn(row)).start()
-        return SinkResult(rel, "foreach", q)
+        w = rel.df.writeStream.foreach(lambda row: fn(row))
+        return SinkResult(rel, "foreach", with_stream_opts(w, opts_of(rest)).start())
 
     def run_partition(it):
         for row in it:

@@ -21,6 +21,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..errors import StreamTimeoutError
 from ..eval import Ctx, defop
 from ..model import KTableRel, Rel
 from ..operators.util import session_conf
@@ -94,6 +95,18 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout)
-    spark = df.sparkSession
-    return spark.table(name)
+    await_available_now(q, timeout, "run_to_memory")
+    return df.sparkSession.table(name)
+
+
+def await_available_now(q, timeout: float, what: str) -> None:
+    """Wait for an availableNow query to drain its input. A query still
+    running after ``timeout`` seconds is stopped and raises
+    StreamTimeoutError: what it wrote so far is a partial result."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise StreamTimeoutError(
+            f"{what}: streaming query {q.name!r} had not drained its input "
+            f"after the {timeout:g} s timeout; it was stopped and its "
+            "output is incomplete (raise {'timeout': seconds})"
+        )

@@ -25,13 +25,20 @@ Storage backends:
   (``KTableRel.update_only`` — e.g. the streaming changelog join, whose
   applyInPandasWithState plan Spark refuses to run in complete mode).
   The memory sink collects the view to the driver — O(keys), not
-  O(events), which is what a serving copy of an aggregate is — but
-  O(keys) still has a driver-RAM ceiling: a streaming memory-sink
-  handle GUARDS it, counting the served snapshot after each refresh
-  and warning (``overflow: "warn"``, default) or raising
-  (``overflow: "error"``) once it exceeds ``max_memory_rows``
-  (default 1,000,000) with instructions to switch to
-  ``storage: "table"``, the beyond-driver-memory path.
+  O(events), which is what a serving copy of an aggregate is — so a
+  full-key lookup on a streaming handle is a dictionary read, not a
+  Spark job: the handle keeps an index of the served rows keyed by the
+  memory sink's batch id and rebuilds it once per new batch (the
+  reference answers from the local state store the same way,
+  ring.clj:20-53). The index holds at most ``_INDEX_MAX_ROWS`` rows; a
+  larger snapshot is looked up with a filtered scan, as is a handle
+  whose view name a later ``serve`` has taken over. O(keys) still has a
+  driver-RAM ceiling: a streaming memory-sink handle GUARDS it,
+  counting the served snapshot after each refresh and warning
+  (``overflow: "warn"``, default) or raising (``overflow: "error"``)
+  once it exceeds ``max_memory_rows`` (default 1,000,000) with
+  instructions to switch to ``storage: "table"``, the
+  beyond-driver-memory path.
 * ``storage: "table"`` — the beyond-driver-memory path: the view is
   written to a catalog table BUCKETED by the key columns
   (operators/sinks.py bucketed sink layout), and ``lookup()`` prunes the
@@ -44,16 +51,46 @@ Storage backends:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
+from datetime import date, datetime
+from operator import itemgetter
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ByteType, DateType, IntegerType, LongType,
+                               ShortType, StringType, TimestampType)
 
 from ..errors import ArityError
+from ..operators.sinks import with_stream_opts
 from ..operators.util import float_opt, int_opt, opts_of, session_conf, str_opt
 from ..eval import Ctx, defop
 from ..model import KTableRel, Rel
+from .runtime import await_available_now
+
+# Key column type -> the Python type its values collect to, for the types
+# where a Spark `col = probe` is plain equality of those Python values.
+# Every other key type (floats, decimals, NTZ timestamps, structs, ...)
+# is looked up with a filtered scan.
+_PROBE_TYPES = {ByteType: int, ShortType: int, IntegerType: int,
+                LongType: int, StringType: str, TimestampType: datetime,
+                DateType: date}
+_TS = TimestampType()
+
+# The largest snapshot a streaming memory handle indexes. A rebuild
+# costs ~9 us a row in Python (~0.47 s at the cap) against ~0.1-0.3 s for
+# one filtered scan (4 vCPU, a string key and a count): a batch that
+# gets one lookup pays at most ~2-3 scans, one that gets a few breaks
+# even. Above the cap the handle stops indexing and scans, so the Python
+# copy of the snapshot never exceeds this many rows.
+_INDEX_MAX_ROWS = 50_000
+
+
+def _probe_type(dt) -> Optional[type]:
+    if isinstance(dt, StringType) and dt.collation != "UTF8_BINARY":
+        return None  # a collated `=` is not str equality
+    return _PROBE_TYPES.get(type(dt))
 
 
 @dataclass
@@ -72,6 +109,15 @@ class ServeHandle:
     overflow: str = "warn"  # "warn" | "error" when the cap is exceeded
     buckets: int = 0  # storage="table": bucket count of the catalog table
     _key_types: Optional[dict] = None  # host_for: cached key-column types
+    # streaming memory-sink lookups: (the query's MemorySink, the session
+    # catalog, the temp view the sink registered) while the index is in
+    # use, else None; the key columns' (row positions, probe types); and
+    # the published index (batch id, {key: [Row, ...]})
+    _memory: Any = field(default=None, repr=False, compare=False)
+    _key_layout: Any = field(default=None, repr=False, compare=False)
+    _index: Any = field(default=None, repr=False, compare=False)
+    _index_lock: Any = field(default_factory=threading.Lock, repr=False,
+                             compare=False)
 
     def host_for(self, key) -> dict:
         """Metadata for where a key's state is served — the ring.clj
@@ -138,11 +184,12 @@ class ServeHandle:
         return [(self.key_cols[0], key)]
 
     def _check_memory_ceiling(self) -> None:
-        """The memory sink holds the full served snapshot in driver RAM.
-        Count it (driver-local, cheap) and warn/refuse past the cap so a
-        growing keyspace surfaces as a clear signal — with the fix named
-        (storage="table", the bucketed beyond-driver-memory path) —
-        instead of an eventual driver OOM. Re-checked after every
+        """The memory sink holds the full served snapshot in driver RAM
+        (the lookup index copies at most ``_INDEX_MAX_ROWS`` of it).
+        Count the snapshot (driver-local, cheap) and warn/refuse past the
+        cap so a growing keyspace surfaces as a clear signal — with the
+        fix named (storage="table", the bucketed beyond-driver-memory
+        path) — instead of an eventual driver OOM. Re-checked after every
         refresh(); lookups between refreshes see an unchanged snapshot,
         so they skip the count."""
         if not self.memory_rows_cap:
@@ -225,9 +272,30 @@ class ServeHandle:
 
     def lookup(self, key) -> list:
         """Rows for one key. ``key``: a scalar (single-column key), a
-        tuple (positional composite), or a {col: value} dict."""
+        tuple (positional composite), or a {col: value} dict.
+
+        On a streaming ``storage: "memory"`` handle a probe that names
+        every key column, each value non-NULL and of the exact Python
+        type the column collects to (``str`` for strings, ``int`` for
+        integral columns, a naive ``datetime`` for TIMESTAMP, a ``date``
+        for DATE), is a dictionary read: no Spark job. The index is
+        rebuilt from ``df()`` (so the ``__seq`` / tombstone /
+        ``__closed`` rules apply as for a scan) once per memory-sink
+        batch, so a lookup that starts after a batch commits sees that
+        batch. The first lookup after a batch pays the rebuild (~9 us a
+        row) and concurrent lookups wait for it. Every other probe —
+        partial-key dicts, ``None``, an int on a string column, tz-aware
+        datetimes, floats — every other handle, a snapshot of more than
+        ``_INDEX_MAX_ROWS`` rows and a handle whose view name a later
+        ``serve`` took over run the filtered scan
+        ``df().filter(...).collect()``."""
+        items = self._key_items(key)
+        if self._memory is not None:
+            rows = self._index_lookup(items)
+            if rows is not None:
+                return rows
         df = self.df()
-        for col, val in self._key_items(key):
+        for col, val in items:
             df = df.filter(df[col] == val)
         if not self.bucketed:
             return df.collect()
@@ -243,6 +311,82 @@ class ServeHandle:
                           "spark.sql.sources.bucketing.autoBucketedScan.enabled",
                           "false"):
             return df.collect()
+
+    def _index_lookup(self, items) -> Optional[list]:
+        """The rows for a full-key probe read from the batch-versioned
+        index, or None when the probe or the handle needs the scan."""
+        if self._key_layout is None:
+            schema = self.df().schema
+            names = schema.fieldNames()
+            self._key_layout = (
+                [names.index(c) for c in self.key_cols if c in names],
+                [_probe_type(schema[c].dataType) if c in names else None
+                 for c in self.key_cols],
+            )
+        positions, types = self._key_layout
+        probe = dict(items)
+        if probe.keys() != set(self.key_cols):
+            return None
+        vals = []
+        for c, t in zip(self.key_cols, types):
+            v = probe[c]
+            if t is None or type(v) is not t:
+                return None
+            if t is datetime:
+                if v.tzinfo is not None:
+                    return None
+                # the instant a literal of v compares at, as it collects
+                v = _TS.fromInternal(_TS.toInternal(v))
+            vals.append(v)
+        version = self._batch_id()
+        if version is None:
+            return None
+        index = self._index
+        if index is None or index[0] < version:
+            index = self._rebuild_index(version, positions)
+            if index is None:
+                return None
+        return list(index[1].get(vals[0] if len(vals) == 1 else tuple(vals), ()))
+
+    def _batch_id(self) -> Optional[int]:
+        """The memory sink's latest batch id (-1 before the first); the
+        sink sets it when the batch's rows land, before the checkpoint
+        commit. None once the view ``name`` is no longer the one this
+        handle's sink registered (the query finished and a new ``serve``
+        took the name): the index then stops for good, so lookups read
+        the view that ``all()`` and ``df()`` read."""
+        memory = self._memory
+        if memory is None:
+            return None
+        sink, catalog, view = memory
+        if not view.equals(catalog.getTempView(self.name)):
+            self._memory = self._index = None
+            return None
+        latest = sink.latestBatchId()
+        return -1 if latest.isEmpty() else latest.get()
+
+    def _rebuild_index(self, version: int, positions) -> Optional[tuple]:
+        """Publish the index for ``version``, or stop indexing (None) once
+        the snapshot holds more than ``_INDEX_MAX_ROWS`` rows. The version
+        was read before this collect, so the index may hold a newer batch
+        than its label (costing one extra rebuild), never an older one.
+        Readers of a published index take no lock."""
+        with self._index_lock:
+            index = self._index
+            if self._memory is None:
+                return None
+            if index is None or index[0] < version:
+                rows = self.df().limit(_INDEX_MAX_ROWS + 1).collect()
+                if len(rows) > _INDEX_MAX_ROWS:
+                    # a served keyspace rarely shrinks: scan from now on
+                    self._memory = self._index = None
+                    return None
+                key_of = itemgetter(*positions)
+                groups: dict = {}
+                for row in rows:
+                    groups.setdefault(key_of(row), []).append(row)
+                index = self._index = (version, groups)
+        return index
 
     def refresh(self) -> "ServeHandle":
         """Streaming handles: block until everything currently available
@@ -311,8 +455,11 @@ def _seed_or_recover(sp: SparkSession, bdf: DataFrame, name: str,
 @defop("serve")
 def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
     """["serve", rel, {"name": ..., "key": cols?, "storage":
-    "memory"|"table", "buckets": N, "trigger": ..., "output_mode": ...}]
-    — materialize + return a lookup handle."""
+    "memory"|"table", "buckets": N, "trigger": ..., "checkpoint": ...,
+    "timeout": s, "output_mode": ...}] — materialize + return a lookup
+    handle. ``trigger`` defaults to ``"available_now"``, which waits up
+    to ``timeout`` seconds (default 120) for the query to drain and
+    raises StreamTimeoutError past it."""
     opts = opts_of(rest)
     name = opts.get("name") or rel.name
     if not name:
@@ -414,15 +561,17 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
     else:
         w = rel.df.writeStream.format("memory").queryName(name).outputMode(mode)
     trig = opts.get("trigger", "available_now")
+    timeout = float_opt(opts, "timeout", "serve", 120.0)
+    q = with_stream_opts(w, {**opts, "trigger": trig}).start()
+    memory = None
+    if storage != "table":
+        # the index labels rows read from the view with the sink's batch
+        # id: both are taken now, while the view is this query's
+        catalog = ctx.spark._jsparkSession.sessionState().catalog()
+        memory = (q._jsq.streamingQuery().sink(), catalog,
+                  catalog.getTempView(name))
     if trig == "available_now":
-        w = w.trigger(availableNow=True)
-    elif trig:
-        w = w.trigger(processingTime=trig)
-    if "checkpoint" in opts:
-        w = w.option("checkpointLocation", opts["checkpoint"])
-    q = w.start()
-    if trig == "available_now":
-        q.awaitTermination(float_opt(opts, "timeout", "serve", 120.0))
+        await_available_now(q, timeout, f"serve {name!r}")
     handle = ServeHandle(
         ctx.spark, name, key_cols, query=q,
         bucketed=storage == "table",
@@ -432,6 +581,7 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
                          else int_opt(opts, "max_memory_rows", "serve",
                                       1_000_000)),
         overflow=overflow,
+        _memory=memory,
     )
     if trig == "available_now":
         handle._check_memory_ceiling()

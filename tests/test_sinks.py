@@ -434,6 +434,234 @@ def test_serve_host_for_metadata(spark, tables):
         spark.sql("DROP TABLE IF EXISTS served_hostfor")
 
 
+def _land(dirpath, name: str, rows) -> None:
+    """Add one parquet file of (k string, n long) rows to a streamed
+    directory, renamed into place whole so the file source never lists a
+    half-written file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(os.path.dirname(dirpath), f".{name}.tmp")
+    pq.write_table(pa.table({"k": pa.array([k for k, _ in rows], pa.string()),
+                             "n": pa.array([n for _, n in rows], pa.int64())}),
+                   tmp)
+    os.replace(tmp, os.path.join(dirpath, f"{name}.parquet"))
+
+
+def _served_counts(spark, dirpath, name: str, **opts):
+    """A live complete-mode memory handle: per-key row counts of the
+    streamed directory."""
+    from ksml_spark.streaming.runtime import file_stream_source
+
+    counts = pipe(["stream", file_stream_source(spark, str(dirpath)), {"key": "k"}],
+                  ["group-by-key"], ["count"], spark=spark)
+    return ksml(["serve", counts, {"name": name, **opts}], spark=spark)
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_serve_memory_lookups_run_no_spark_job(spark, tmp_path):
+    """A full-key lookup on a streaming memory handle reads the driver
+    index: between batches no lookup starts a Spark job, and a new batch
+    costs one index rebuild, not one scan per lookup."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _land(str(src), "f0", [("a", 1), ("b", 1)])
+    h = _served_counts(spark, src, "served_nojob", trigger="100 milliseconds")
+    try:
+        h.refresh()
+        assert [r["count"] for r in h.lookup("a")] == [1]
+        rebuilds = []
+        df = h.df
+        h.df = lambda: rebuilds.append(1) or df()
+        assert _jobs_in_group(spark, lambda: [h.lookup("a") for _ in range(50)]) == 0
+        assert rebuilds == []
+
+        _land(str(src), "f1", [("a", 1), ("c", 1)])
+        h.refresh()
+        got = []
+        # the rebuild collects the memory sink's rows, a driver-local scan
+        assert _jobs_in_group(
+            spark, lambda: got.extend(h.lookup(k) for k in ["a", "c", "z"] * 17)
+        ) == 0
+        assert rebuilds == [1]
+        assert [[r["count"] for r in rows] for rows in got[:3]] == [[2], [1], []]
+        # a probe the index does not answer (a non-key column) scans
+        scanned: list = []
+        assert _jobs_in_group(
+            spark, lambda: scanned.extend(h.lookup({"k": "a", "count": 2}))) >= 1
+        assert [r["count"] for r in scanned] == [2]
+    finally:
+        h.stop()
+
+
+def test_serve_lookups_concurrent_with_refresh(spark, tmp_path):
+    """Three threads look up while files land. After refresh() returns,
+    every key written so far reads at its latest count; no thread sees a
+    count go backwards, a seen key vanish, or two rows for one key."""
+    import random
+    import threading
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _land(str(src), "f0", [("k0", 1), ("k1", 1)])
+    h = _served_counts(spark, src, "served_concurrent_refresh", trigger="100 milliseconds")
+    h.refresh()
+    stop = threading.Event()
+    errors: list = []
+
+    def client(seed: int) -> None:
+        rng = random.Random(seed)
+        seen: dict = {}
+        try:
+            while not stop.is_set():
+                k = f"k{rng.randrange(12)}"
+                rows = h.lookup(k)
+                assert len(rows) <= 1, (k, rows)
+                n = rows[0]["count"] if rows else 0
+                assert n >= seen.get(k, 0), (k, n, seen.get(k))
+                seen[k] = n
+        except BaseException as e:  # reported by the main thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(i,), daemon=True)
+               for i in range(3)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # interleave the client threads often
+    for t in threads:
+        t.start()
+    try:
+        expected = {"k0": 1, "k1": 1}
+        for i in range(1, 6):
+            keys = [f"k{j}" for j in range(2 * i + 2)]
+            _land(str(src), f"f{i}", [(k, 1) for k in keys])
+            for k in keys:
+                expected[k] = expected.get(k, 0) + 1
+            h.refresh()
+            got = {k: [r["count"] for r in h.lookup(k)] for k in expected}
+            assert got == {k: [n] for k, n in expected.items()}
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(30)
+        sys.setswitchinterval(switch)
+        h.stop()
+    assert not errors, errors[0]
+    assert not any(t.is_alive() for t in threads)
+
+
+def test_serve_index_fallback_matches_filter(spark, tmp_path):
+    """Probes the index cannot answer exactly — a partial key, NULL, an
+    int on a string column, a tz-aware datetime — return what the
+    filtered scan returns; a full exact probe returns it too."""
+    import datetime as dt
+
+    from ksml_spark.streaming.runtime import file_stream_source
+
+    t0, t1 = dt.datetime(2024, 1, 1, 0, 0), dt.datetime(2024, 1, 1, 0, 5)
+    src = str(tmp_path / "src")
+    # numeric strings: Spark's `k = 1` casts k to a number ("1" and "01"
+    # both match), where a dictionary probe would match neither
+    spark.createDataFrame(
+        [("1", t0), ("1", t0), ("1", t1), ("01", t0), ("2", t1)],
+        "k string, t timestamp").write.parquet(src)
+    counts = pipe(["stream", file_stream_source(spark, src), {"key": "k"}],
+                  ["group-by", ["key-value-mapper", {"k": "k", "t": "t"}]],
+                  ["count"], spark=spark)
+    h = ksml(["serve", counts, {"name": "served_fallback"}], spark=spark)
+    assert h.query is not None and h.key_cols == ("k", "t")
+
+    def scan(probe: dict) -> list:
+        df = h.df()
+        for c, v in probe.items():
+            df = df.filter(df[c] == v)
+        return sorted(df.collect())
+
+    probes = [
+        {"k": "1", "t": t0},                        # exact: the index
+        ("1", t1),                                  # positional exact
+        {"k": "1"},                                 # partial key
+        {"k": None, "t": t0},                       # NULL
+        {"k": 1, "t": t0},                          # int on a string key
+        {"k": "1", "t": t0.replace(tzinfo=dt.timezone.utc)},  # tz-aware
+        {"k": "9", "t": t0},                        # absent key
+    ]
+    for probe in probes:
+        want = scan(probe if isinstance(probe, dict) else dict(zip(h.key_cols, probe)))
+        assert sorted(h.lookup(probe)) == want, probe
+    assert [r["count"] for r in h.lookup({"k": "1", "t": t0})] == [2]
+    assert len(h.lookup({"k": "1"})) == 2
+    assert sorted(r["k"] for r in h.lookup({"k": 1, "t": t0})) == ["01", "1"]
+
+
+def test_serve_index_follows_view_taken_over_by_new_serve(spark, tmp_path):
+    """A finished availableNow handle whose view name a new ``serve``
+    takes over answers lookups from that view, as its ``all()`` does,
+    instead of from its own frozen index."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _land(str(src), "f0", [("a", 1), ("b", 1)])
+    old = _served_counts(spark, src, "served_takeover")
+    assert [r["count"] for r in old.lookup("a")] == [1]
+    _land(str(src), "f1", [("a", 1)])
+    new = _served_counts(spark, src, "served_takeover")
+    assert [r["count"] for r in new.lookup("a")] == [2]
+    assert [r["count"] for r in old.lookup("a")] == [2]
+    assert sorted(old.all()) == sorted(new.all())
+
+
+def test_serve_index_stops_above_row_cap(spark, tmp_path, monkeypatch):
+    """A snapshot larger than the index cap is looked up with the
+    filtered scan, and the handle holds no index copy of it."""
+    from ksml_spark.streaming import serving
+
+    monkeypatch.setattr(serving, "_INDEX_MAX_ROWS", 2)
+    src = tmp_path / "src"
+    src.mkdir()
+    _land(str(src), "f0", [("a", 1), ("b", 1)])
+    h = _served_counts(spark, src, "served_capped", trigger="100 milliseconds")
+    try:
+        h.refresh()
+        assert [r["count"] for r in h.lookup("a")] == [1]
+        assert h._index is not None
+        _land(str(src), "f1", [("a", 1), ("c", 1)])
+        h.refresh()
+        assert _jobs_in_group(spark, lambda: h.lookup("c")) >= 1
+        assert h._index is None
+        assert [[r["count"] for r in h.lookup(k)] for k in "acz"] == [[2], [1], []]
+    finally:
+        h.stop()
+
+
+def test_serve_available_now_timeout_raises(spark, tables, tmp_path):
+    """An availableNow serve still running at its timeout stops the
+    query and raises, instead of serving a partial snapshot."""
+    from ksml_spark.errors import StreamTimeoutError
+    from ksml_spark.streaming.runtime import file_stream_source
+
+    p = str(tmp_path / "events")
+    tables["events"].write.parquet(p)
+    counts = pipe(["stream", file_stream_source(spark, p), {"key": "user_id"}],
+                  ["group-by-key"], ["count"], spark=spark)
+    with pytest.raises(StreamTimeoutError, match="timeout"):
+        ksml(["serve", counts, {"name": "served_timeout", "timeout": 0.001}],
+             spark=spark)
+    assert "served_timeout" not in {q.name for q in spark.streams.active}
+
+
 def test_current_rows_dedups_replayed_batch(spark):
     """A crash after an append/compaction commits but before the
     streaming checkpoint commits replays the batch into the emission

@@ -417,9 +417,12 @@ def test_foreach_batch_sink(spark, events_path):
 
 
 def test_streaming_sinks_honour_interval_trigger(spark, events_path, tmp_path):
-    """An interval ``trigger`` reaches the query on foreach-batch and on
-    the fake-transport kafka sink (both used to drop anything but
-    "available_now"); with no trigger Spark's default stands."""
+    """An interval ``trigger`` reaches the query on foreach-batch, the
+    fake-transport kafka sink, foreach and print (each used to drop it),
+    and their ``checkpoint`` directory is the one the query writes; with
+    no trigger Spark's default stands."""
+    import os
+
     rel = pipe(events_stream(spark, events_path), ["where", "false"], spark=spark)
     sinks = {
         "foreach-batch 1s": ["foreach-batch", rel, lambda df, i: None,
@@ -427,6 +430,11 @@ def test_streaming_sinks_honour_interval_trigger(spark, events_path, tmp_path):
         "kafka fake 1s": ["to", rel, "out", {
             "fake_dir": str(tmp_path / "topic"), "trigger": "1 second",
             "checkpoint": str(tmp_path / "ck")}],
+        "foreach 1s": ["foreach", rel, ["foreach-action", lambda row: None],
+                       {"trigger": "1 second",
+                        "checkpoint": str(tmp_path / "ck_foreach")}],
+        "print 1s": ["print", rel, {"trigger": "1 second",
+                                    "checkpoint": str(tmp_path / "ck_print")}],
         "foreach-batch default": ["foreach-batch", rel, lambda df, i: None],
     }
     got = {}
@@ -434,13 +442,29 @@ def test_streaming_sinks_honour_interval_trigger(spark, events_path, tmp_path):
         q = ksml(form, spark=spark).query
         try:
             got[name] = q._jsq.streamingQuery().trigger().toString()
+            q.processAllAvailable()
         finally:
             q.stop()
     assert got == {
         "foreach-batch 1s": "ProcessingTimeTrigger(1000)",
         "kafka fake 1s": "ProcessingTimeTrigger(1000)",
+        "foreach 1s": "ProcessingTimeTrigger(1000)",
+        "print 1s": "ProcessingTimeTrigger(1000)",
         "foreach-batch default": "ProcessingTimeTrigger(0)",
     }
+    for ck in ("ck_foreach", "ck_print"):
+        assert os.listdir(tmp_path / ck / "offsets"), ck
+
+
+def test_run_to_memory_timeout_raises(spark, events_path):
+    """A run_to_memory query still running at its timeout is stopped and
+    raises, instead of returning a partial table as complete."""
+    from ksml_spark.errors import StreamTimeoutError
+
+    rel = pipe(events_stream(spark, events_path), ["where", "true"], spark=spark)
+    with pytest.raises(StreamTimeoutError, match="run_to_memory.*timeout"):
+        run_to_memory(rel, "rtm_timeout", output_mode="append", timeout=0.001)
+    assert "rtm_timeout" not in {q.name for q in spark.streams.active}
 
 
 def test_concurrent_schema_inference_restores_ntz_conf(spark, tmp_path):
