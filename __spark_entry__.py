@@ -32,6 +32,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from ksml_spark import ksml, pipe
+from ksml_spark.session import cpus
 from ksml_spark.operators.dedup import N_BANDS, N_HASHES, ROWS_PER_BAND, SHINGLE_K
 
 
@@ -42,21 +43,13 @@ def _tune(spark: SparkSession) -> SparkSession:
     """Runtime-settable engine conf for driver-owned sessions (JVM flags
     like the code-cache size can only help our own get_spark sessions)."""
     if id(spark) not in _TUNED:
-        # shuffle width follows the session's actual parallelism (the
-        # driver benches at MORE THAN ONE core count): a constant tuned
-        # for local[32] under-parallelizes nothing but over-splits a
-        # smaller session; AQE coalescing absorbs the small-partition
-        # side either way. defaultParallelism is 1x total executor
-        # cores (ADVICE r17 corrected the old 2-3x claim here): the 1x
-        # posture is INTENDED for this suite — partitions stay
-        # >= 100 MB-class at bench scale and AQE cannot add parallelism
-        # upward, so a cluster deployment that wants the documented
-        # 2-3x headroom sets spark.sql.shuffle.partitions explicitly
-        # (see ksml_spark/session.py) rather than relying on this hook.
-        try:
-            width = max(spark.sparkContext.defaultParallelism, 8)
-        except Exception:
-            width = 32
+        # shuffle width = the session's parallelism, the same rule as
+        # get_spark's default (ksml_spark.session.cpus): the driver
+        # benches at more than one core count, and AQE coalescing
+        # absorbs the small-partition side. The 1x-cores posture is
+        # intended for this suite; a cluster deployment that wants
+        # 2-3x headroom sets spark.sql.shuffle.partitions explicitly.
+        width = cpus(spark)
         for k, v in {
             "spark.sql.adaptive.enabled": "true",
             "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -7,8 +7,11 @@ Single place for the engine's Spark configuration posture:
 * **UTC session timezone** — deterministic timestamp semantics across
   engines (the DuckDB oracle compares naive/UTC timestamps).
 * **Arrow on** — pandas UDF / toPandas paths are Arrow-batched.
-* shuffle.partitions defaults to 32 locally; on a real cluster set it
-  ~2-3x total executor cores or rely on AQE coalescing from a higher
+* shuffle.partitions follows the session's parallelism (``cpus()``):
+  batch queries start at one partition per core and AQE coalesces, and
+  a new streaming checkpoint gets one state partition per core, so a
+  micro-batch commits its state in one wave. On a real cluster set it
+  ~2-3x total executor cores, or rely on AQE coalescing from a higher
   initial value.
 """
 
@@ -20,16 +23,36 @@ from typing import Optional
 from pyspark.sql import SparkSession
 
 
-def _env_cpus(default: int = 32) -> int:
-    """$SPARK_GRAFT_CPUS as an int, tolerating junk values (ADVICE r17:
-    this is read at module import, so a non-numeric value — 'auto',
-    '8 cores' — must degrade to the default, not crash every import of
-    ksml_spark with an uncurated ValueError)."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS")
+def _env_cpus() -> Optional[int]:
+    """$SPARK_GRAFT_CPUS as a positive int, else None. Read at module
+    import, so a junk value ('auto', '8 cores', '0') must not crash
+    every import of ksml_spark: it counts as unset."""
     try:
-        return int(raw) if raw else default
-    except (TypeError, ValueError):
-        return default
+        n = int(os.environ.get("SPARK_GRAFT_CPUS") or 0)
+    except ValueError:
+        return None
+    return n if n > 0 else None
+
+
+def cpus(spark: Optional[SparkSession] = None) -> int:
+    """The parallelism a session runs with, which is also its shuffle
+    and streaming-state width: $SPARK_GRAFT_CPUS when set, else the
+    session's ``defaultParallelism``, else the cores this process may
+    use. No floor: on 4 cores a stateful micro-batch commits 4 state
+    partitions in one wave instead of 8 in two, and each partition's
+    commit costs a fixed ~70 ms whatever its row count."""
+    n = _env_cpus()
+    if n:
+        return n
+    if spark is not None:
+        try:
+            return spark.sparkContext.defaultParallelism
+        except Exception:
+            pass  # no SparkContext (Spark Connect): count cores
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
 
 
 DEFAULT_CONF = {
@@ -41,12 +64,10 @@ DEFAULT_CONF = {
     "spark.sql.parquet.filterPushdown": "true",
     # generous broadcast threshold: all dims in the star schema are small
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # shuffle width follows the configured core count (SPARK_GRAFT_CPUS)
-    # instead of a constant tuned for local[32]: the bench harness runs
-    # at more than one core count, and on a real cluster this is the
-    # knob to set ~2-3x total executor cores (or leave higher and let
-    # AQE coalesce). Floor of 8 keeps toy sessions from degenerating.
-    "spark.sql.shuffle.partitions": str(max(_env_cpus(), 8)),
+    # shuffle width = the core count (see cpus()); on a real cluster
+    # this is the knob to set ~2-3x total executor cores (or leave
+    # higher and let AQE coalesce). A caller's conf overrides it.
+    "spark.sql.shuffle.partitions": str(cpus()),
     "spark.ui.enabled": "false",
     # local[32] runs driver + all executor threads in ONE heap: broadcasts,
     # shuffle buffers, and codegen classes for a 50-query suite accumulate,
@@ -82,12 +103,9 @@ def get_spark(
     conf: Optional[dict] = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
-        try:
-            master = f"local[{int(cpus)}]" if cpus else "local[*]"
-        except (TypeError, ValueError):
-            master = "local[*]"  # junk $SPARK_GRAFT_CPUS: all cores
+        n = _env_cpus()
+        master = f"local[{n}]" if n else "local[*]"
     b = SparkSession.builder.appName(app_name).master(master)
     merged = dict(DEFAULT_CONF)
     if conf:

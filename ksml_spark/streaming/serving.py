@@ -57,6 +57,7 @@ from datetime import date, datetime
 from operator import itemgetter
 from typing import Any, Optional
 
+from pyspark.errors.exceptions.base import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ByteType, DateType, IntegerType, LongType,
@@ -109,11 +110,14 @@ class ServeHandle:
     overflow: str = "warn"  # "warn" | "error" when the cap is exceeded
     buckets: int = 0  # storage="table": bucket count of the catalog table
     _key_types: Optional[dict] = None  # host_for: cached key-column types
-    # streaming memory-sink lookups: (the query's MemorySink, the session
-    # catalog, the temp view the sink registered) while the index is in
-    # use, else None; the key columns' (row positions, probe types); and
-    # the published index (batch id, {key: [Row, ...]})
-    _memory: Any = field(default=None, repr=False, compare=False)
+    # storage="memory": (the session catalog, the temp view this handle
+    # registered), so stop() and the index only act while `name` is
+    # still that view. Streaming memory-sink lookups: the query's
+    # MemorySink while the index is in use, else None; the key columns'
+    # (row positions, probe types); and the published index (batch id,
+    # {key: [Row, ...]})
+    _view: Any = field(default=None, repr=False, compare=False)
+    _sink: Any = field(default=None, repr=False, compare=False)
     _key_layout: Any = field(default=None, repr=False, compare=False)
     _index: Any = field(default=None, repr=False, compare=False)
     _index_lock: Any = field(default_factory=threading.Lock, repr=False,
@@ -288,29 +292,53 @@ class ServeHandle:
         datetimes, floats — every other handle, a snapshot of more than
         ``_INDEX_MAX_ROWS`` rows and a handle whose view name a later
         ``serve`` took over run the filtered scan
-        ``df().filter(...).collect()``."""
+        ``df().filter(...).collect()``. A scan probe that makes Spark cast
+        a served key which does not convert (``lookup(1)`` on a string
+        key column holding ``"a"``) raises ArityError naming the column,
+        its type and the probe's type; where every key converts, the
+        scan's rows are returned."""
         items = self._key_items(key)
-        if self._memory is not None:
+        if self._sink is not None:
             rows = self._index_lookup(items)
             if rows is not None:
                 return rows
         df = self.df()
         for col, val in items:
             df = df.filter(df[col] == val)
-        if not self.bucketed:
-            return df.collect()
-        # Spark's auto-bucketed-scan heuristic drops the bucketed read for
-        # a bare filter (it only credits avoided shuffles, not pruning);
-        # turn it off for the lookup so the scan reads ONE bucket —
-        # "SelectedBucketsCount: 1 out of N" — the ring.clj host-routing
-        # analog. The conf is session-wide, so set/collect/restore runs
-        # under the engine's scoped-conf lock: two client threads
-        # interleaving their restores would otherwise leave the session
-        # at "false" for good.
-        with session_conf(self.spark,
-                          "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-                          "false"):
-            return df.collect()
+        try:
+            if not self.bucketed:
+                return df.collect()
+            # Spark's auto-bucketed-scan heuristic drops the bucketed read
+            # for a bare filter (it only credits avoided shuffles, not
+            # pruning); turn it off for the lookup so the scan reads ONE
+            # bucket — "SelectedBucketsCount: 1 out of N" — the ring.clj
+            # host-routing analog. The conf is session-wide, so
+            # set/collect/restore runs under the engine's scoped-conf
+            # lock: two client threads interleaving their restores would
+            # otherwise leave the session at "false" for good.
+            with session_conf(self.spark,
+                              "spark.sql.sources.bucketing.autoBucketedScan.enabled",
+                              "false"):
+                return df.collect()
+        except PySparkException as e:
+            if e.getCondition() != "CAST_INVALID_INPUT":
+                raise
+            raise self._probe_type_error(items, df.schema) from e
+
+    def _probe_type_error(self, items, schema) -> ArityError:
+        """A probe whose `col = value` made Spark cast a served key that
+        does not convert (an int probe on a string key column with a
+        non-numeric key): name the columns whose probe type differs."""
+        bad = [(c, v) for c, v in items
+               if _probe_type(schema[c].dataType) is not type(v)] or items
+        parts = ", ".join(
+            f"key column {c!r} is {schema[c].dataType.simpleString().upper()} "
+            f"but the probe {v!r} is a Python {type(v).__name__}"
+            for c, v in bad)
+        return ArityError(
+            f"serve handle {self.name!r}: lookup {parts}, and a served key "
+            "does not cast to the probe's type; probe with a value of the "
+            "column's type")
 
     def _index_lookup(self, items) -> Optional[list]:
         """The rows for a full-key probe read from the batch-versioned
@@ -355,12 +383,11 @@ class ServeHandle:
         handle's sink registered (the query finished and a new ``serve``
         took the name): the index then stops for good, so lookups read
         the view that ``all()`` and ``df()`` read."""
-        memory = self._memory
-        if memory is None:
+        sink = self._sink
+        if sink is None:
             return None
-        sink, catalog, view = memory
-        if not view.equals(catalog.getTempView(self.name)):
-            self._memory = self._index = None
+        if not self._owns_view():
+            self._sink = self._index = None
             return None
         latest = sink.latestBatchId()
         return -1 if latest.isEmpty() else latest.get()
@@ -373,13 +400,13 @@ class ServeHandle:
         Readers of a published index take no lock."""
         with self._index_lock:
             index = self._index
-            if self._memory is None:
+            if self._sink is None:
                 return None
             if index is None or index[0] < version:
                 rows = self.df().limit(_INDEX_MAX_ROWS + 1).collect()
                 if len(rows) > _INDEX_MAX_ROWS:
                     # a served keyspace rarely shrinks: scan from now on
-                    self._memory = self._index = None
+                    self._sink = self._index = None
                     return None
                 key_of = itemgetter(*positions)
                 groups: dict = {}
@@ -402,9 +429,28 @@ class ServeHandle:
             self._check_memory_ceiling()
         return self
 
+    def _owns_view(self) -> bool:
+        """Whether temp view ``name`` is still the one this handle
+        registered (a later ``serve`` may have taken the name over)."""
+        if self._view is None:
+            return False
+        catalog, view = self._view
+        return view.equals(catalog.getTempView(self.name))
+
     def stop(self) -> None:
+        """Stop the handle's query and drop the temp view it registered,
+        so the name no longer shadows a catalog table. A view that a
+        later ``serve`` took the name over with is left in place."""
         if self.query is not None and self.query.isActive:
             self.query.stop()
+        if self._owns_view():
+            self.spark.catalog.dropTempView(self.name)
+
+
+def _view_of(spark: SparkSession, name: str) -> tuple:
+    """(session catalog, the temp view now registered as ``name``)."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    return catalog, catalog.getTempView(name)
 
 
 def _bucketed_write(df: DataFrame, name: str, key_cols, buckets: int) -> None:
@@ -479,11 +525,11 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
     if not rel.df.isStreaming:
         if storage == "table":
             _bucketed_write(rel.df, name, key_cols, buckets)
-        else:
-            rel.df.createOrReplaceTempView(name)
+            return ServeHandle(ctx.spark, name, key_cols, bucketed=True,
+                               buckets=buckets)
+        rel.df.createOrReplaceTempView(name)
         return ServeHandle(ctx.spark, name, key_cols,
-                           bucketed=storage == "table",
-                           buckets=buckets if storage == "table" else 0)
+                           _view=_view_of(ctx.spark, name))
 
     # streaming: aggregated tables serve a full consistent snapshot per
     # trigger (complete); stateful-processor tables (changelog join) are
@@ -563,13 +609,11 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
     trig = opts.get("trigger", "available_now")
     timeout = float_opt(opts, "timeout", "serve", 120.0)
     q = with_stream_opts(w, {**opts, "trigger": trig}).start()
-    memory = None
+    sink = view = None
     if storage != "table":
         # the index labels rows read from the view with the sink's batch
         # id: both are taken now, while the view is this query's
-        catalog = ctx.spark._jsparkSession.sessionState().catalog()
-        memory = (q._jsq.streamingQuery().sink(), catalog,
-                  catalog.getTempView(name))
+        sink, view = q._jsq.streamingQuery().sink(), _view_of(ctx.spark, name)
     if trig == "available_now":
         await_available_now(q, timeout, f"serve {name!r}")
     handle = ServeHandle(
@@ -581,7 +625,8 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
                          else int_opt(opts, "max_memory_rows", "serve",
                                       1_000_000)),
         overflow=overflow,
-        _memory=memory,
+        _view=view,
+        _sink=sink,
     )
     if trig == "available_now":
         handle._check_memory_ceiling()

@@ -646,6 +646,78 @@ def test_serve_index_stops_above_row_cap(spark, tmp_path, monkeypatch):
         h.stop()
 
 
+@pytest.mark.parametrize("kind", ["batch", "table", "memory"])
+def test_serve_mistyped_probe_raises_curated_error(spark, tmp_path, kind):
+    """An int probe on a string key column makes Spark cast the served
+    keys to a number. Where a key does not convert, the lookup raises an
+    ArityError naming the column, its type and the probe's type; where
+    every key converts, it returns the scan's rows as before."""
+    from ksml_spark.errors import ArityError
+
+    def serve(name, keys):
+        if kind == "memory":
+            src = tmp_path / name
+            src.mkdir()
+            _land(str(src), "f0", [(k, 1) for k in keys])
+            return _served_counts(spark, src, name)
+        df = spark.createDataFrame([(k, 1) for k in keys], "k string, n long")
+        opts = {"storage": "table", "buckets": 2} if kind == "table" else {}
+        return ksml(["serve", ["stream", df, {"key": "k"}], {"name": name, **opts}],
+                    spark=spark)
+
+    names = [f"served_numeric_{kind}", f"served_mistyped_{kind}"]
+    handles = []
+    try:
+        numeric = serve(names[0], ["1", "01", "2"])
+        handles.append(numeric)
+        assert sorted(r["k"] for r in numeric.lookup(1)) == ["01", "1"]
+        mistyped = serve(names[1], ["a", "b", "1"])
+        handles.append(mistyped)
+        with pytest.raises(ArityError,
+                           match=r"'k' is STRING but the probe 1 is a Python int"):
+            mistyped.lookup(1)
+        assert [r["k"] for r in mistyped.lookup("a")] == ["a"]
+    finally:
+        for h in handles:
+            h.stop()
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_serve_stop_drops_its_view(spark, tmp_path):
+    """stop() drops the temp view a memory handle registered, so a later
+    catalog table of the same name is read, not shadowed; an old
+    handle's stop() keeps the view a later serve took the name over
+    with."""
+    name = "served_stop_view"
+    src = tmp_path / "src"
+    src.mkdir()
+    _land(str(src), "f0", [("a", 1), ("a", 1)])
+    mem = _served_counts(spark, src, name)
+    assert [r["count"] for r in mem.lookup("a")] == [2]
+    mem.stop()
+    assert not spark.catalog.tableExists(name)
+    batch = ksml(["serve", ["stream", spark.createDataFrame([("a", 5)], "k string, count long"),
+                            {"key": "k"}], {"name": name}], spark=spark)
+    assert [r["count"] for r in batch.lookup("a")] == [5]
+    batch.stop()
+    assert not spark.catalog.tableExists(name)
+    try:
+        tbl = ksml(["serve", ["stream", spark.createDataFrame([("a", 7)], "k string, count long"),
+                              {"key": "k"}], {"name": name, "storage": "table", "buckets": 2}],
+                   spark=spark)
+        assert [r["count"] for r in tbl.lookup("a")] == [7]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+    old = _served_counts(spark, src, "served_stop_takeover")
+    new = _served_counts(spark, src, "served_stop_takeover")
+    old.stop()
+    assert [r["count"] for r in new.lookup("a")] == [2]
+    new.stop()
+    assert not spark.catalog.tableExists("served_stop_takeover")
+
+
 def test_serve_available_now_timeout_raises(spark, tables, tmp_path):
     """An availableNow serve still running at its timeout stops the
     query and raises, instead of serving a partial snapshot."""
