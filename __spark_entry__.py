@@ -40,23 +40,20 @@ _TUNED = set()
 
 
 def _tune(spark: SparkSession) -> SparkSession:
-    """Runtime-settable engine conf for driver-owned sessions (JVM flags
-    like the code-cache size can only help our own get_spark sessions)."""
+    """Give a session the engine's shuffle width and broadcast threshold
+    where its builder set neither. A ``get_spark`` session already
+    carries both (``DEFAULT_CONF``), and a width a caller pinned holds
+    for the whole session. The width is the session's parallelism
+    (``ksml_spark.session.cpus``): the driver benches at more than one
+    core count, and AQE coalescing absorbs the small-partition side."""
     if id(spark) not in _TUNED:
-        # shuffle width = the session's parallelism, the same rule as
-        # get_spark's default (ksml_spark.session.cpus): the driver
-        # benches at more than one core count, and AQE coalescing
-        # absorbs the small-partition side. The 1x-cores posture is
-        # intended for this suite; a cluster deployment that wants
-        # 2-3x headroom sets spark.sql.shuffle.partitions explicitly.
-        width = cpus(spark)
+        built = spark.sparkContext.getConf()
         for k, v in {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-            "spark.sql.shuffle.partitions": str(width),
+            "spark.sql.shuffle.partitions": str(cpus(spark)),
             "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         }.items():
+            if built.contains(k):
+                continue
             try:
                 spark.conf.set(k, v)
             except Exception:

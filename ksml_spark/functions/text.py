@@ -89,30 +89,6 @@ def lang_id(col: Column) -> Column:
     return best_lang
 
 
-def quality_score(col: Column) -> Column:
-    """Heuristic quality score in [0, 1]: mean of
-    * length score     — min(1, n_chars / 1000)
-    * word-length sanity — 1 if mean word length in [3, 12] else 0
-    * punctuation sanity — 1 - min(1, punct_chars / (chars/10 + 1))
-    * stopword signal  — min(1, 4 * max-lang stopword ratio)
-    """
-    n_chars = F.length(col)
-    length_score = F.least(F.lit(1.0), n_chars / F.lit(1000.0))
-    ws = words(col)
-    mean_wlen = F.when(
-        F.size(ws) > 0,
-        F.aggregate(ws, F.lit(0).cast("double"), lambda a, w: a + F.length(w)) / F.size(ws),
-    ).otherwise(F.lit(0.0))
-    wlen_score = F.when((mean_wlen >= 3) & (mean_wlen <= 12), F.lit(1.0)).otherwise(F.lit(0.0))
-    punct = F.length(col) - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
-    punct_score = F.lit(1.0) - F.least(F.lit(1.0), punct / (n_chars / F.lit(10.0) + F.lit(1.0)))
-    sw_best = None
-    for _, score in lang_scores(col):
-        sw_best = score if sw_best is None else F.greatest(sw_best, score)
-    sw_score = F.least(F.lit(1.0), F.lit(4.0) * sw_best)
-    return (length_score + wlen_score + punct_score + sw_score) / F.lit(4.0)
-
-
 def fingerprint64(col: Column) -> Column:
     """64-bit document fingerprint: xxhash64 of the normalized word
     sequence (lowercase, punctuation-stripped, single-spaced) — robust to

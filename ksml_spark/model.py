@@ -19,7 +19,7 @@ one-column key.
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -161,33 +161,3 @@ class BranchedRel:
 
     def __len__(self) -> int:
         return len(self.branches)
-
-
-def dedup_latest(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    tombstone: Optional[Column] = None,
-) -> DataFrame:
-    """Latest-per-key changelog view (KTable semantics, SURVEY.md §4 item 1).
-
-    Batch analog of the Kafka Streams table materialization: keep the newest
-    record per key (by ``order_cols`` descending — include a unique tiebreak
-    column for determinism), then drop keys whose newest record is a
-    tombstone. At scale this is one hash shuffle on the key (no sort of the
-    whole table — Spark plans a windowed row_number as a partial
-    sort-within-partition after the exchange).
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    out = (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    if tombstone is not None:
-        out = out.filter(~tombstone)
-    return out

@@ -101,6 +101,13 @@ def op_timestamp_extractor(ctx: Ctx, expr, policy: str = "fail") -> TimestampExt
     (WallclockTimestampExtractor), "partition-time"
     (UsePartitionTimeOnInvalidTimestamp -> Kafka timestamp column).
     """
+    from ..errors import ArityError
+
+    policies = ("fail", "skip", "wallclock", "partition-time")
+    if policy not in policies:
+        raise ArityError(
+            f"timestamp-extractor policy must be one of {list(policies)}, "
+            f"got {policy!r}")
     return TimestampExtractor(expr, policy)
 
 

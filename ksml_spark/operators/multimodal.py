@@ -86,14 +86,6 @@ def op_media(ctx: Ctx, rel: Rel, *rest) -> Rel:
     )
 
 
-def decode_stub(payload: bytes) -> tuple[int, str, int, int]:
-    """Python reference of the stub features (tests compare against this;
-    the operator itself computes them as Columns): (n_bytes, first-4-bytes
-    hex, fake width, fake height)."""
-    n = len(payload)
-    return n, payload[:4].hex(), n % 640, (n * 7) % 480
-
-
 @defop("decode-features")
 def op_decode_features(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     """Feature extraction over a binary column — see module docstring."""

@@ -16,28 +16,25 @@ materialized table:
 
 Storage backends:
 
-* ``storage: "memory"`` (default) — batch rels register a temp view
-  (NO driver copy: lookups are filtered scans, Catalyst prunes);
-  streaming rels run a memory-sink query: "complete" output for
-  aggregated tables (each trigger replaces the snapshot, so lookups
-  always see a consistent latest state), "append" for plain streams,
-  "update" + read-side max-__seq dedup for stateful-processor tables
+* ``storage: "memory"`` (default) — a batch rel registers a temp view
+  (NO driver copy: lookups are filtered scans, Catalyst prunes). A
+  streaming rel runs a ``foreachBatch`` query that folds each
+  micro-batch into rows the handle owns — one copy, in driver RAM,
+  O(keys) for an aggregate — the way the reference answers from each
+  instance's local state store (ring.clj:20-53). The output mode is the
+  one the rel allows: "complete" for aggregated tables (each batch's
+  snapshot replaces the last), "update" for stateful-processor tables
   (``KTableRel.update_only`` — e.g. the streaming changelog join, whose
-  applyInPandasWithState plan Spark refuses to run in complete mode).
-  The memory sink collects the view to the driver — O(keys), not
-  O(events), which is what a serving copy of an aggregate is — so a
-  full-key lookup on a streaming handle is a dictionary read, not a
-  Spark job: the handle keeps an index of the served rows keyed by the
-  memory sink's batch id and rebuilds it once per new batch (the
-  reference answers from the local state store the same way,
-  ring.clj:20-53). The index holds at most ``_INDEX_MAX_ROWS`` rows; a
-  larger snapshot is looked up with a filtered scan, as is a handle
-  whose view name a later ``serve`` has taken over. O(keys) still has a
-  driver-RAM ceiling: a streaming memory-sink handle GUARDS it,
-  counting the served snapshot after each refresh and warning
-  (``overflow: "warn"``, default) or raising (``overflow: "error"``)
-  once it exceeds ``max_memory_rows`` (default 1,000,000) with
-  instructions to switch to ``storage: "table"``, the
+  applyInPandasWithState plan Spark refuses to run in complete mode:
+  per key, the batch's emission becomes the live rows, a tombstone
+  leaves none, and ``__closed`` finals accumulate), "append" for plain
+  streams. Each fold is published whole and a batch id already folded
+  is skipped (the idempotent-sink rule), so readers never see half a
+  batch, and a full-key lookup is a dictionary read, not a Spark job.
+  The handle registers no temp view. It GUARDS the driver-RAM ceiling:
+  once the folded rows exceed ``max_memory_rows`` (default 1,000,000)
+  after a refresh it warns (``overflow: "warn"``, default) or raises
+  (``overflow: "error"``), naming ``storage: "table"``, the
   beyond-driver-memory path.
 * ``storage: "table"`` — the beyond-driver-memory path: the view is
   written to a catalog table BUCKETED by the key columns
@@ -51,21 +48,22 @@ Storage backends:
 
 from __future__ import annotations
 
-import threading
+import time
 from dataclasses import dataclass, field
 from datetime import date, datetime
 from operator import itemgetter
 from typing import Any, Optional
 
 from pyspark.errors.exceptions.base import PySparkException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ByteType, DateType, IntegerType, LongType,
-                               ShortType, StringType, TimestampType)
+                               ShortType, StringType, StructType, TimestampType)
 
 from ..errors import ArityError
 from ..operators.sinks import with_stream_opts
-from ..operators.util import float_opt, int_opt, opts_of, session_conf, str_opt
+from ..operators.util import (float_opt, int_opt, opts_of, refuse_removed_opt,
+                              session_conf, str_opt)
 from ..eval import Ctx, defop
 from ..model import KTableRel, Rel
 from .runtime import await_available_now
@@ -79,19 +77,86 @@ _PROBE_TYPES = {ByteType: int, ShortType: int, IntegerType: int,
                 DateType: date}
 _TS = TimestampType()
 
-# The largest snapshot a streaming memory handle indexes. A rebuild
-# costs ~9 us a row in Python (~0.47 s at the cap) against ~0.1-0.3 s for
-# one filtered scan (4 vCPU, a string key and a count): a batch that
-# gets one lookup pays at most ~2-3 scans, one that gets a few breaks
-# even. Above the cap the handle stops indexing and scans, so the Python
-# copy of the snapshot never exceeds this many rows.
-_INDEX_MAX_ROWS = 50_000
-
-
 def _probe_type(dt) -> Optional[type]:
     if isinstance(dt, StringType) and dt.collation != "UTF8_BINARY":
         return None  # a collated `=` is not str equality
     return _PROBE_TYPES.get(type(dt))
+
+
+class _Fold:
+    """The rows a streaming ``storage: "memory"`` handle serves. The
+    query's ``foreachBatch`` calls it once per micro-batch, on py4j's
+    callback thread. Each call builds a new snapshot from the last one
+    and the batch's rows and publishes it with one assignment, so readers
+    take no lock and never see half a batch; a batch id already folded
+    (a replay after a failure) is skipped.
+
+    ``snapshot`` is (last folded batch id, {key: served rows},
+    {key: served ``__closed`` rows}, served row count). A key is the
+    key column's value, or a tuple of values for a composite key."""
+
+    def __init__(self, schema: StructType, key_cols, mode: str):
+        names = schema.fieldNames()
+        self.mode = mode
+        self.key_of = itemgetter(*[names.index(c) for c in key_cols])
+        self.closed_at = names.index("__closed") if "__closed" in names else None
+        served = [f for f in schema.fields
+                  if mode != "update" or f.name not in ("__seq", "__closed")]
+        self.schema = StructType(served)
+        self.key_types = [_probe_type(schema[c].dataType) for c in key_cols]
+        # update mode serves a projection: no __seq / __closed, and no
+        # row whose value columns are all NULL (a retraction)
+        self.keep = [names.index(f.name) for f in served]
+        self.values = [names.index(f.name) for f in served
+                       if f.name not in key_cols]
+        self.make = Row(*[f.name for f in served])
+        self.snapshot: tuple = (-1, {}, {}, 0)
+
+    def __call__(self, bdf: DataFrame, batch_id: int) -> None:
+        if batch_id <= self.snapshot[0]:
+            return
+        rows = bdf.collect()
+        groups: dict = {}
+        key_of = self.key_of
+        for row in rows:
+            groups.setdefault(key_of(row), []).append(row)
+        _, index, closed, n = self.snapshot
+        if self.mode == "complete":
+            index, n = groups, len(rows)
+        elif self.mode == "append":
+            index = dict(index)
+            for k, new in groups.items():
+                index[k] = [*index.get(k, ()), *new]
+            n += len(rows)
+        else:
+            index, closed = self._update(groups, index, closed)
+            n = sum(map(len, index.values()))
+        self.snapshot = (batch_id, index, closed, n)
+
+    def _update(self, groups: dict, index: dict, closed: dict) -> tuple:
+        """Per emitting key: its ``__closed`` rows join the key's finals,
+        and its other rows become the live rows (one call of a stateful
+        processor emits a key's whole current state)."""
+        index, closed = dict(index), dict(closed)
+        c = self.closed_at
+        for k, rows in groups.items():
+            fin = closed.get(k, [])
+            if c is not None and any(r[c] for r in rows):
+                fin = closed[k] = fin + self._served(r for r in rows if r[c])
+            live = self._served(r for r in rows if c is None or not r[c])
+            if fin or live:
+                index[k] = fin + live
+            else:
+                index.pop(k, None)
+        return index, closed
+
+    def _served(self, rows) -> list:
+        keep, make = self.keep, self.make
+        return [make(*[r[i] for i in keep]) for r in rows
+                if not self.values or any(r[i] is not None for i in self.values)]
+
+    def rows(self) -> list:
+        return [r for rows in self.snapshot[1].values() for r in rows]
 
 
 @dataclass
@@ -102,26 +167,20 @@ class ServeHandle:
     name: str
     key_cols: tuple[str, ...]
     query: Any = None  # StreamingQuery when the rel was streaming
-    latest_by_seq: bool = False  # update-mode sink: dedup to max __seq/key
+    latest_by_seq: bool = False  # update-mode table: dedup to max __seq/key
     bucketed: bool = False  # storage="table": key lookups prune to 1 bucket
-    # streaming memory-sink guard: snapshot row ceiling (0 = no guard —
+    # streaming memory handle guard: folded row ceiling (0 = no guard —
     # batch temp views and bucketed tables have no driver copy to bound)
     memory_rows_cap: int = 0
     overflow: str = "warn"  # "warn" | "error" when the cap is exceeded
     buckets: int = 0  # storage="table": bucket count of the catalog table
     _key_types: Optional[dict] = None  # host_for: cached key-column types
-    # storage="memory": (the session catalog, the temp view this handle
-    # registered), so stop() and the index only act while `name` is
-    # still that view. Streaming memory-sink lookups: the query's
-    # MemorySink while the index is in use, else None; the key columns'
-    # (row positions, probe types); and the published index (batch id,
-    # {key: [Row, ...]})
+    # batch storage="memory": (the session catalog, the temp view this
+    # handle registered), so stop() only drops it while `name` is still
+    # that view
     _view: Any = field(default=None, repr=False, compare=False)
-    _sink: Any = field(default=None, repr=False, compare=False)
-    _key_layout: Any = field(default=None, repr=False, compare=False)
-    _index: Any = field(default=None, repr=False, compare=False)
-    _index_lock: Any = field(default_factory=threading.Lock, repr=False,
-                             compare=False)
+    # streaming storage="memory": the rows the handle serves
+    _fold: Optional[_Fold] = field(default=None, repr=False, compare=False)
 
     def host_for(self, key) -> dict:
         """Metadata for where a key's state is served — the ring.clj
@@ -188,22 +247,19 @@ class ServeHandle:
         return [(self.key_cols[0], key)]
 
     def _check_memory_ceiling(self) -> None:
-        """The memory sink holds the full served snapshot in driver RAM
-        (the lookup index copies at most ``_INDEX_MAX_ROWS`` of it).
-        Count the snapshot (driver-local, cheap) and warn/refuse past the
-        cap so a growing keyspace surfaces as a clear signal — with the
-        fix named (storage="table", the bucketed beyond-driver-memory
-        path) — instead of an eventual driver OOM. Re-checked after every
-        refresh(); lookups between refreshes see an unchanged snapshot,
-        so they skip the count."""
+        """The handle holds the rows it serves in driver RAM. Past the cap
+        warn or refuse, so a growing keyspace surfaces as a clear signal —
+        with the fix named (storage="table", the bucketed
+        beyond-driver-memory path) — instead of an eventual driver OOM.
+        Re-checked after every refresh() from the fold's own row count."""
         if not self.memory_rows_cap:
             return
-        n = self.spark.table(self.name).count()
+        n = self._fold.snapshot[3]
         if n <= self.memory_rows_cap:
             return
         msg = (
-            f"serve handle {self.name!r}: memory-sink snapshot holds {n:,} "
-            f"rows (> max_memory_rows={self.memory_rows_cap:,}) in driver "
+            f"serve handle {self.name!r}: holds {n:,} served rows "
+            f"(> max_memory_rows={self.memory_rows_cap:,}) in driver "
             "RAM. Re-serve with {'storage': 'table'} (bucketed catalog "
             "table, lookups prune to one bucket) or raise "
             "{'max_memory_rows': N} if the driver is sized for it."
@@ -215,6 +271,8 @@ class ServeHandle:
         warnings.warn(msg, ResourceWarning, stacklevel=3)
 
     def df(self) -> DataFrame:
+        if self._fold is not None:
+            return self.spark.createDataFrame(self._fold.rows(), self._fold.schema)
         df = self.spark.table(self.name)
         if self.latest_by_seq:
             df = self._latest(df)
@@ -272,6 +330,8 @@ class ServeHandle:
         return df
 
     def all(self) -> list:
+        if self._fold is not None:
+            return self._fold.rows()
         return self.df().collect()
 
     def lookup(self, key) -> list:
@@ -282,26 +342,24 @@ class ServeHandle:
         every key column, each value non-NULL and of the exact Python
         type the column collects to (``str`` for strings, ``int`` for
         integral columns, a naive ``datetime`` for TIMESTAMP, a ``date``
-        for DATE), is a dictionary read: no Spark job. The index is
-        rebuilt from ``df()`` (so the ``__seq`` / tombstone /
-        ``__closed`` rules apply as for a scan) once per memory-sink
-        batch, so a lookup that starts after a batch commits sees that
-        batch. The first lookup after a batch pays the rebuild (~9 us a
-        row) and concurrent lookups wait for it. Every other probe —
-        partial-key dicts, ``None``, an int on a string column, tz-aware
-        datetimes, floats — every other handle, a snapshot of more than
-        ``_INDEX_MAX_ROWS`` rows and a handle whose view name a later
-        ``serve`` took over run the filtered scan
-        ``df().filter(...).collect()``. A scan probe that makes Spark cast
-        a served key which does not convert (``lookup(1)`` on a string
-        key column holding ``"a"``) raises ArityError naming the column,
-        its type and the probe's type; where every key converts, the
-        scan's rows are returned."""
+        for DATE), is a dictionary read of the folded rows: no Spark
+        job, and a lookup that starts after a batch commits sees that
+        batch. Every other probe — partial-key dicts, ``None``, an int
+        on a string column, tz-aware datetimes, floats — and every other
+        handle runs the filtered scan ``df().filter(...).collect()``. A
+        scan probe that makes Spark cast a served key which does not
+        convert (``lookup(1)`` on a string key column holding ``"a"``)
+        raises ArityError naming the column, its type and the probe's
+        type; where every key converts, the scan's rows are returned."""
         items = self._key_items(key)
-        if self._sink is not None:
-            rows = self._index_lookup(items)
-            if rows is not None:
-                return rows
+        k = self._exact_key(items) if self._fold is not None else None
+        if k is not None:
+            # Yield the GIL once. The fold runs on py4j's callback thread
+            # in this interpreter, and clients reading the dict in a
+            # closed loop would otherwise starve it (and any other Python
+            # thread, such as an in-process load generator).
+            time.sleep(0)
+            return list(self._fold.snapshot[1].get(k, ()))
         df = self.df()
         for col, val in items:
             df = df.filter(df[col] == val)
@@ -340,23 +398,15 @@ class ServeHandle:
             "does not cast to the probe's type; probe with a value of the "
             "column's type")
 
-    def _index_lookup(self, items) -> Optional[list]:
-        """The rows for a full-key probe read from the batch-versioned
-        index, or None when the probe or the handle needs the scan."""
-        if self._key_layout is None:
-            schema = self.df().schema
-            names = schema.fieldNames()
-            self._key_layout = (
-                [names.index(c) for c in self.key_cols if c in names],
-                [_probe_type(schema[c].dataType) if c in names else None
-                 for c in self.key_cols],
-            )
-        positions, types = self._key_layout
+    def _exact_key(self, items):
+        """The folded-state key of a probe that names every key column
+        with a non-NULL value of the exact type the column collects to,
+        else None: the probe takes the scan."""
         probe = dict(items)
         if probe.keys() != set(self.key_cols):
             return None
         vals = []
-        for c, t in zip(self.key_cols, types):
+        for c, t in zip(self.key_cols, self._fold.key_types):
             v = probe[c]
             if t is None or type(v) is not t:
                 return None
@@ -366,58 +416,11 @@ class ServeHandle:
                 # the instant a literal of v compares at, as it collects
                 v = _TS.fromInternal(_TS.toInternal(v))
             vals.append(v)
-        version = self._batch_id()
-        if version is None:
-            return None
-        index = self._index
-        if index is None or index[0] < version:
-            index = self._rebuild_index(version, positions)
-            if index is None:
-                return None
-        return list(index[1].get(vals[0] if len(vals) == 1 else tuple(vals), ()))
-
-    def _batch_id(self) -> Optional[int]:
-        """The memory sink's latest batch id (-1 before the first); the
-        sink sets it when the batch's rows land, before the checkpoint
-        commit. None once the view ``name`` is no longer the one this
-        handle's sink registered (the query finished and a new ``serve``
-        took the name): the index then stops for good, so lookups read
-        the view that ``all()`` and ``df()`` read."""
-        sink = self._sink
-        if sink is None:
-            return None
-        if not self._owns_view():
-            self._sink = self._index = None
-            return None
-        latest = sink.latestBatchId()
-        return -1 if latest.isEmpty() else latest.get()
-
-    def _rebuild_index(self, version: int, positions) -> Optional[tuple]:
-        """Publish the index for ``version``, or stop indexing (None) once
-        the snapshot holds more than ``_INDEX_MAX_ROWS`` rows. The version
-        was read before this collect, so the index may hold a newer batch
-        than its label (costing one extra rebuild), never an older one.
-        Readers of a published index take no lock."""
-        with self._index_lock:
-            index = self._index
-            if self._sink is None:
-                return None
-            if index is None or index[0] < version:
-                rows = self.df().limit(_INDEX_MAX_ROWS + 1).collect()
-                if len(rows) > _INDEX_MAX_ROWS:
-                    # a served keyspace rarely shrinks: scan from now on
-                    self._sink = self._index = None
-                    return None
-                key_of = itemgetter(*positions)
-                groups: dict = {}
-                for row in rows:
-                    groups.setdefault(key_of(row), []).append(row)
-                index = self._index = (version, groups)
-        return index
+        return vals[0] if len(vals) == 1 else tuple(vals)
 
     def refresh(self) -> "ServeHandle":
         """Streaming handles: block until everything currently available
-        at the source has been processed into the serving table."""
+        at the source has been processed into the served rows."""
         if self.query is not None:
             if not self.query.isActive:
                 # availableNow queries terminate; a fresh lookup needs a new run
@@ -429,22 +432,16 @@ class ServeHandle:
             self._check_memory_ceiling()
         return self
 
-    def _owns_view(self) -> bool:
-        """Whether temp view ``name`` is still the one this handle
-        registered (a later ``serve`` may have taken the name over)."""
-        if self._view is None:
-            return False
-        catalog, view = self._view
-        return view.equals(catalog.getTempView(self.name))
-
     def stop(self) -> None:
-        """Stop the handle's query and drop the temp view it registered,
-        so the name no longer shadows a catalog table. A view that a
-        later ``serve`` took the name over with is left in place."""
+        """Stop the handle's query and drop the temp view a batch handle
+        registered, so the name no longer shadows a catalog table. A view
+        that a later ``serve`` took the name over with is left in place."""
         if self.query is not None and self.query.isActive:
             self.query.stop()
-        if self._owns_view():
-            self.spark.catalog.dropTempView(self.name)
+        if self._view is not None:
+            catalog, view = self._view
+            if view.equals(catalog.getTempView(self.name)):
+                self.spark.catalog.dropTempView(self.name)
 
 
 def _view_of(spark: SparkSession, name: str) -> tuple:
@@ -502,10 +499,13 @@ def _seed_or_recover(sp: SparkSession, bdf: DataFrame, name: str,
 def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
     """["serve", rel, {"name": ..., "key": cols?, "storage":
     "memory"|"table", "buckets": N, "trigger": ..., "checkpoint": ...,
-    "timeout": s, "output_mode": ...}] — materialize + return a lookup
-    handle. ``trigger`` defaults to ``"available_now"``, which waits up
-    to ``timeout`` seconds (default 120) for the query to drain and
-    raises StreamTimeoutError past it."""
+    "timeout": s, "max_memory_rows": N, "overflow": "warn"|"error"}] —
+    materialize + return a lookup handle. A streaming rel is served in
+    the output mode it allows: complete for aggregated tables, update
+    for stateful-processor tables, append for plain streams.
+    ``trigger`` defaults to ``"available_now"``, which waits up to
+    ``timeout`` seconds (default 120) for the query to drain and raises
+    StreamTimeoutError past it."""
     opts = opts_of(rest)
     name = opts.get("name") or rel.name
     if not name:
@@ -516,10 +516,19 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
     key_cols = tuple(key or rel.key_cols)
     if not key_cols:
         raise ArityError("serve needs key columns (keyed rel or {'key': cols})")
-    storage = opts.get("storage", "memory")
-    buckets = int_opt(opts, "buckets", "serve", 8)
+    missing = [c for c in key_cols if c not in rel.df.columns]
+    if missing:
+        raise ArityError(f"serve: key column(s) {missing} are not columns "
+                         f"of the relation {rel.df.columns}")
+    storage = str_opt(opts, "storage", "serve", "memory",
+                      choices=("memory", "table"))
+    buckets = int_opt(opts, "buckets", "serve", 8, lo=1)
     overflow = str_opt(opts, "overflow", "serve", "warn",
                        choices=("warn", "error"))
+    refuse_removed_opt(opts, "output_mode", "serve",
+                       "serve picks the output mode: complete for aggregated "
+                       "tables, update for stateful-processor tables, append "
+                       "for plain streams")
     update_only = bool(getattr(rel, "update_only", False))
 
     if not rel.df.isStreaming:
@@ -532,20 +541,12 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
                            _view=_view_of(ctx.spark, name))
 
     # streaming: aggregated tables serve a full consistent snapshot per
-    # trigger (complete); stateful-processor tables (changelog join) are
-    # update-mode-only and dedup at read; plain streams append.
-    mode = opts.get("output_mode") or (
-        "update" if update_only
-        else "complete" if isinstance(rel, KTableRel)
-        else "append"
-    )
-    if update_only and mode != "update":
-        raise ArityError(
-            "this table comes from a stateful processor (changelog join): "
-            "Spark only runs it in update output mode — drop the "
-            f"output_mode override ({mode!r}); lookups dedup to the latest "
-            "emission per key automatically"
-        )
+    # trigger (complete); stateful-processor tables (changelog join,
+    # session fold) are update-mode-only and keep each key's latest
+    # emission; plain streams append.
+    mode = ("update" if update_only
+            else "complete" if isinstance(rel, KTableRel)
+            else "append")
 
     if storage == "table":
         # beyond-driver-memory: refresh a bucketed catalog table per
@@ -604,16 +605,13 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
                 _bucketed_write(bdf, name, key_cols, buckets)
 
         w = rel.df.writeStream.foreachBatch(write_batch).outputMode(mode)
+        fold = None
     else:
-        w = rel.df.writeStream.format("memory").queryName(name).outputMode(mode)
+        fold = _Fold(rel.df.schema, key_cols, mode)
+        w = rel.df.writeStream.foreachBatch(fold).queryName(name).outputMode(mode)
     trig = opts.get("trigger", "available_now")
     timeout = float_opt(opts, "timeout", "serve", 120.0)
     q = with_stream_opts(w, {**opts, "trigger": trig}).start()
-    sink = view = None
-    if storage != "table":
-        # the index labels rows read from the view with the sink's batch
-        # id: both are taken now, while the view is this query's
-        sink, view = q._jsq.streamingQuery().sink(), _view_of(ctx.spark, name)
     if trig == "available_now":
         await_available_now(q, timeout, f"serve {name!r}")
     handle = ServeHandle(
@@ -625,8 +623,7 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
                          else int_opt(opts, "max_memory_rows", "serve",
                                       1_000_000)),
         overflow=overflow,
-        _view=view,
-        _sink=sink,
+        _fold=fold,
     )
     if trig == "available_now":
         handle._check_memory_ceiling()

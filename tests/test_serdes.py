@@ -101,6 +101,15 @@ def test_timestamp_extractor_wallclock(spark):
         assert abs((r["event_time"] - now).total_seconds()) < 600
 
 
+@pytest.mark.parametrize("policy", ["FAIL", "drop", "wall-clock", None])
+def test_timestamp_extractor_refuses_unknown_policy(spark, policy):
+    from ksml_spark.errors import ArityError
+
+    with pytest.raises(ArityError, match=r"one of \['fail', 'skip', 'wallclock', "
+                                         r"'partition-time'\]"):
+        ksml(["timestamp-extractor", "try_cast(raw as timestamp)", policy], spark=spark)
+
+
 def test_offset_reset_validates(spark):
     assert ksml(["offset-reset", "EARLIEST"], spark=spark) == "EARLIEST"
     with pytest.raises(ValueError):

@@ -54,22 +54,39 @@ def test_default_conf_and_tune_take_the_width_and_callers_override(spark, monkey
     monkeypatch.setattr(entry, "_TUNED", set())
     stubs = []
 
-    def tuned_width(parallelism: int) -> str:
+    def tuned_width(parallelism: int, built: dict = {}):
         confs: dict = {}
         stubs.append(SimpleNamespace(
-            sparkContext=SimpleNamespace(defaultParallelism=parallelism),
+            sparkContext=SimpleNamespace(
+                defaultParallelism=parallelism,
+                getConf=lambda: SimpleNamespace(contains=built.__contains__)),
             conf=SimpleNamespace(set=confs.__setitem__)))
         entry._tune(stubs[-1])
-        return confs[WIDTH]
+        return confs.get(WIDTH)
 
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     assert tuned_width(3) == "3"
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
     assert tuned_width(6) == "2"
+    # a width the session's builder set is left alone
+    assert tuned_width(6, {WIDTH: "8"}) is None
 
     with session_conf(spark, WIDTH, spark.conf.get(WIDTH)):
         assert get_spark(conf={WIDTH: "3"}) is spark
         assert spark.conf.get(WIDTH) == "3"
+
+
+def test_registry_queries_keep_the_session_width(spark, monkeypatch):
+    """Building a registry query tunes the session it is handed, but a
+    width the session's builder set (here the suite's own) holds."""
+    import __spark_entry__ as entry
+    from conftest import SF_DIR
+
+    monkeypatch.setattr(entry, "_TUNED", set())
+    before = spark.conf.get(WIDTH)
+    entry.queries()["q5_local_supplier_revenue"](spark, SF_DIR)
+    assert id(spark) in entry._TUNED
+    assert spark.conf.get(WIDTH) == before
 
 
 def test_restart_keeps_the_checkpoint_state_width(spark, tmp_path):

@@ -474,9 +474,9 @@ def _jobs_in_group(spark, fn) -> int:
 
 
 def test_serve_memory_lookups_run_no_spark_job(spark, tmp_path):
-    """A full-key lookup on a streaming memory handle reads the driver
-    index: between batches no lookup starts a Spark job, and a new batch
-    costs one index rebuild, not one scan per lookup."""
+    """A full-key lookup on a streaming memory handle reads the rows the
+    handle folded: no lookup starts a Spark job, before or after a new
+    batch."""
     src = tmp_path / "src"
     src.mkdir()
     _land(str(src), "f0", [("a", 1), ("b", 1)])
@@ -484,22 +484,16 @@ def test_serve_memory_lookups_run_no_spark_job(spark, tmp_path):
     try:
         h.refresh()
         assert [r["count"] for r in h.lookup("a")] == [1]
-        rebuilds = []
-        df = h.df
-        h.df = lambda: rebuilds.append(1) or df()
         assert _jobs_in_group(spark, lambda: [h.lookup("a") for _ in range(50)]) == 0
-        assert rebuilds == []
 
         _land(str(src), "f1", [("a", 1), ("c", 1)])
         h.refresh()
         got = []
-        # the rebuild collects the memory sink's rows, a driver-local scan
         assert _jobs_in_group(
             spark, lambda: got.extend(h.lookup(k) for k in ["a", "c", "z"] * 17)
         ) == 0
-        assert rebuilds == [1]
         assert [[r["count"] for r in rows] for rows in got[:3]] == [[2], [1], []]
-        # a probe the index does not answer (a non-key column) scans
+        # a probe that is not a full key (a non-key column) scans
         scanned: list = []
         assert _jobs_in_group(
             spark, lambda: scanned.extend(h.lookup({"k": "a", "count": 2}))) >= 1
@@ -607,10 +601,10 @@ def test_serve_index_fallback_matches_filter(spark, tmp_path):
     assert sorted(r["k"] for r in h.lookup({"k": 1, "t": t0})) == ["01", "1"]
 
 
-def test_serve_index_follows_view_taken_over_by_new_serve(spark, tmp_path):
-    """A finished availableNow handle whose view name a new ``serve``
-    takes over answers lookups from that view, as its ``all()`` does,
-    instead of from its own frozen index."""
+def test_serve_handles_of_one_name_answer_from_their_own_state(spark, tmp_path):
+    """Two streaming memory handles of one name each answer lookups,
+    ``all()`` and scans from the rows they folded: a later ``serve``
+    of the name leaves the earlier handle's answers as they were."""
     src = tmp_path / "src"
     src.mkdir()
     _land(str(src), "f0", [("a", 1), ("b", 1)])
@@ -619,31 +613,114 @@ def test_serve_index_follows_view_taken_over_by_new_serve(spark, tmp_path):
     _land(str(src), "f1", [("a", 1)])
     new = _served_counts(spark, src, "served_takeover")
     assert [r["count"] for r in new.lookup("a")] == [2]
-    assert [r["count"] for r in old.lookup("a")] == [2]
-    assert sorted(old.all()) == sorted(new.all())
+    assert [r["count"] for r in old.lookup("a")] == [1]
+    assert [r["count"] for r in old.lookup({"k": "a"})] == [1]
+    assert sorted((r["k"], r["count"]) for r in old.all()) == [("a", 1), ("b", 1)]
+    assert sorted((r["k"], r["count"]) for r in new.all()) == [("a", 2), ("b", 1)]
+    assert not spark.catalog.tableExists("served_takeover")
 
 
-def test_serve_index_stops_above_row_cap(spark, tmp_path, monkeypatch):
-    """A snapshot larger than the index cap is looked up with the
-    filtered scan, and the handle holds no index copy of it."""
-    from ksml_spark.streaming import serving
-
-    monkeypatch.setattr(serving, "_INDEX_MAX_ROWS", 2)
+def test_serve_memory_handle_restarts_from_its_checkpoint(spark, tmp_path):
+    """A memory handle stopped and served again on the same checkpoint
+    serves every key at its cumulative count once a new file lands, not
+    only the keys the new file touches."""
     src = tmp_path / "src"
     src.mkdir()
-    _land(str(src), "f0", [("a", 1), ("b", 1)])
-    h = _served_counts(spark, src, "served_capped", trigger="100 milliseconds")
+    ckpt = str(tmp_path / "ckpt")
+    _land(str(src), "f0", [("a", 1), ("b", 1), ("b", 1)])
+    h = _served_counts(spark, src, "served_restart", trigger="100 milliseconds",
+                       checkpoint=ckpt)
+    h.refresh()
+    assert [r["count"] for r in h.lookup("b")] == [2]
+    h.stop()
+
+    h = _served_counts(spark, src, "served_restart", trigger="100 milliseconds",
+                       checkpoint=ckpt)
     try:
+        _land(str(src), "f1", [("a", 1)])
         h.refresh()
-        assert [r["count"] for r in h.lookup("a")] == [1]
-        assert h._index is not None
-        _land(str(src), "f1", [("a", 1), ("c", 1)])
-        h.refresh()
-        assert _jobs_in_group(spark, lambda: h.lookup("c")) >= 1
-        assert h._index is None
-        assert [[r["count"] for r in h.lookup(k)] for k in "acz"] == [[2], [1], []]
+        assert {k: [r["count"] for r in h.lookup(k)] for k in "abz"} == {
+            "a": [2], "b": [2], "z": []}
     finally:
         h.stop()
+
+
+def _fold_batches(mode: str, ddl: str, batches) -> list:
+    """Fold (batch id, rows) pairs into a streaming memory handle's state
+    and return {key: sorted values} after each."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import Row
+    from pyspark.sql.types import StructType
+
+    from ksml_spark.streaming.serving import _Fold
+
+    schema = StructType.fromDDL(ddl)
+    fold, make, seen = _Fold(schema, ("k",), mode), Row(*schema.fieldNames()), []
+    for bid, rows in batches:
+        fold(SimpleNamespace(collect=lambda rows=rows: [make(*r) for r in rows]), bid)
+        index = fold.snapshot[1]
+        assert fold.snapshot[3] == sum(map(len, index.values()))
+        # served rows carry the served schema: no __seq / __closed
+        assert {tuple(r.__fields__) for rs in index.values() for r in rs} <= {
+            tuple(fold.schema.fieldNames())}
+        assert fold.schema.fieldNames() == ["k", "v"]
+        seen.append({k: sorted(r["v"] for r in rs) for k, rs in index.items()})
+    return seen
+
+
+def test_serve_fold_update_rules(spark):
+    """Update mode: a key's emission replaces its live rows, __closed
+    finals accumulate, a retraction (all values NULL) leaves only the
+    finals, and a batch id already folded is skipped."""
+    got = _fold_batches("update", "k string, v long, __seq long, __closed boolean", [
+        (0, [("a", 1, 1, False), ("a", 2, 1, False), ("b", 5, 1, False)]),
+        (1, [("a", 3, 2, False), ("b", 5, 2, True), ("b", 6, 2, False)]),
+        (1, [("a", 9, 3, False)]),
+        (2, [("a", None, 3, False), ("b", None, 3, False)]),
+        (3, [("a", 7, 4, False)]),
+    ])
+    assert got == [{"a": [1, 2], "b": [5]},
+                   {"a": [3], "b": [5, 6]},
+                   {"a": [3], "b": [5, 6]},
+                   {"b": [5]},
+                   {"a": [7], "b": [5]}]
+
+
+def test_serve_fold_complete_and_append(spark):
+    """Complete mode swaps in each batch's snapshot; append mode adds a
+    batch's rows to each key's rows."""
+    batches = [(0, [("a", 1), ("b", 1)]), (1, [("a", 2)]), (1, [("a", 5)])]
+    assert _fold_batches("complete", "k string, v long", batches) == [
+        {"a": [1], "b": [1]}, {"a": [2]}, {"a": [2]}]
+    assert _fold_batches("append", "k string, v long", batches) == [
+        {"a": [1], "b": [1]}, {"a": [1, 2], "b": [1]}, {"a": [1, 2], "b": [1]}]
+
+
+@pytest.mark.parametrize("opts, match", [
+    ({"storage": "tabel"}, r"storage must be one of \['memory', 'table'\]"),
+    ({"buckets": 0}, "buckets must be >= 1"),
+    ({"key": "nope"}, r"key column\(s\) \['nope'\]"),
+    ({"output_mode": "update"}, "'output_mode' was removed — serve picks"),
+])
+@pytest.mark.parametrize("streaming", [False, True])
+def test_serve_malformed_form_raises_curated_error(spark, tmp_path, opts, match,
+                                                   streaming):
+    """A malformed serve form raises an ArityError when ``serve`` is
+    called, before any view, table or query exists."""
+    from ksml_spark.errors import ArityError
+
+    df = spark.createDataFrame([("a", 1)], "k string, n long")
+    if streaming:
+        df.write.parquet(str(tmp_path / "src"))
+        from ksml_spark.streaming.runtime import file_stream_source
+
+        df = file_stream_source(spark, str(tmp_path / "src"))
+    with pytest.raises(ArityError, match=match):
+        ksml(["serve", ["stream", df, {"key": "k"}], {"name": "served_malformed", **opts}],
+             spark=spark)
+    assert not spark.catalog.tableExists("served_malformed")
+    assert "served_malformed" not in {q.name for q in spark.streams.active}
 
 
 @pytest.mark.parametrize("kind", ["batch", "table", "memory"])

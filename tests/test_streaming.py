@@ -1077,10 +1077,11 @@ def test_streaming_session_watermark_eviction(spark, tmp_path):
         got = {(r["window_start"].second + 60 * r["window_start"].minute): r["value"]
                for r in h.lookup("u")}
         assert got == {0: "a", 100: "b", 300: "c"}, got
-        # raw sink evidence: [0,0] closes in the 3rd (data) batch; the
-        # armed event-time timer then closes [100,100] in a 4th
-        # timer-only batch once the watermark (295s) passes 100s+gap
-        raw = spark.table("sess_evict_serve")
+        # raw emission evidence, from a memory-sink run of the same
+        # form: [0,0] closes in the 3rd (data) batch; the armed
+        # event-time timer then closes [100,100] in a 4th timer-only
+        # batch once the watermark (295s) passes 100s+gap
+        raw = run_to_memory(out, "sess_evict_raw", output_mode="update")
         closed = [(r["window_start"].second, r["__seq"]) for r in
                   raw.filter("__closed").orderBy("__seq").collect()]
         assert closed == [(0, 3), (40, 4)], closed
@@ -1118,8 +1119,9 @@ def test_streaming_session_dormant_key_timer_eviction(spark, tmp_path):
     )
     h = ksml(["serve", out, {"name": "sess_timer_serve"}], spark=spark)
     try:
-        # w was closed via a timer-only invocation (no w data in batch 2)
-        raw = spark.table("sess_timer_serve")
+        # w was closed via a timer-only invocation (no w data in batch
+        # 2): the raw emissions of a memory-sink run of the same form
+        raw = run_to_memory(out, "sess_timer_raw", output_mode="update")
         w_closed = [(r["value"], r["__seq"]) for r in
                     raw.filter("key = 'w' AND __closed").collect()]
         assert w_closed == [("x", 2)], w_closed
