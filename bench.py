@@ -304,8 +304,10 @@ def _skew_bench(spark, sf_dir: str) -> dict:
       vocabulary (every token is hyper-frequent; only blocking keeps any
       plan feasible there), so a controlled realistic-vocab corpus is the
       only way to isolate one hot key. Reported: the plain inverted
-      index, the prefix plan, and {"prefix": "auto"} (which must pick
-      prefix via the sampled-skew rule — see dedup._index_estimate).
+      index and the prefix plan, each forced through the plan rule's
+      constants in dedup, and the engine's own choice (which must pick
+      prefix via the hot-key rule over its one bounded fetch — see
+      dedup._index_estimate).
     * ``agg_*``: the events table replicated x10 (1M rows) with one key
       remapped onto ~30% of rows; plain groupBy vs the two-phase
       agg-salted op. Measured honestly: Spark's map-side partial
@@ -316,6 +318,7 @@ def _skew_bench(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from ksml_spark import ksml, pipe
+    from ksml_spark.operators import dedup
 
     out: dict[str, float] = {}
     n_docs, vocab, toks = 20_000, 200_000, 40
@@ -341,17 +344,23 @@ def _skew_bench(spark, sf_dir: str) -> dict:
         ).alias("text"),
     ).persist()
     corpus.count()
+    rule = (dedup._PREFIX_MIN_POSTINGS, dedup._HOT_MIN_PAIRS)
+    inf = float("inf")
     try:
-        for label, pflag in (("jaccard_plain", False), ("jaccard_prefix", True),
-                             ("jaccard_auto", "auto")):
+        # (min postings, hot-pair floor) forcing each plan; None = the rule
+        for label, forced in (("jaccard_plain", (inf, inf)),
+                              ("jaccard_prefix", (0, inf)),
+                              ("jaccard_auto", None)):
+            dedup._PREFIX_MIN_POSTINGS, dedup._HOT_MIN_PAIRS = forced or rule
             t0 = time.time()
             r = pipe(["stream", corpus, {"key": "doc_id"}],
                      ["jaccard-pairs", {"col": "text", "id": "doc_id",
-                                        "threshold": 0.5, "prefix": pflag}],
+                                        "threshold": 0.5}],
                      spark=spark)
             r.df.write.mode("overwrite").format("noop").save()
             out[label] = round(time.time() - t0, 2)
     finally:
+        dedup._PREFIX_MIN_POSTINGS, dedup._HOT_MIN_PAIRS = rule
         corpus.unpersist()
 
     # winnow-pairs boilerplate stress: 1/4 of docs (~5k) share a

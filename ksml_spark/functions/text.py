@@ -63,32 +63,6 @@ def token_count_bpe(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(BPE_ISH_PATTERN), 0))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """Fraction of words that are stopwords for ``lang``."""
-    ws = words(col)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(ws, lambda w: F.array_contains(sw, w)))
-    return F.when(F.size(ws) > 0, hits / F.size(ws)).otherwise(F.lit(0.0))
-
-
-def lang_scores(col: Column) -> list[tuple[str, Column]]:
-    return [(lang, stopword_ratio(col, lang)) for lang in STOPWORDS]
-
-
-def lang_id(col: Column) -> Column:
-    """Stopword-ratio language heuristic: argmax over STOPWORDS languages,
-    'und' (undetermined) when no stopwords hit at all. Deterministic
-    tie-break: language order en, de, fr, es (strictly-greater compare)."""
-    scores = lang_scores(col)
-    best_lang = F.lit("und")
-    best_score = F.lit(0.0)
-    for lang, score in scores:
-        is_better = score > best_score
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(is_better, score).otherwise(best_score)
-    return best_lang
-
-
 def fingerprint64(col: Column) -> Column:
     """64-bit document fingerprint: xxhash64 of the normalized word
     sequence (lowercase, punctuation-stripped, single-spaced) — robust to

@@ -754,6 +754,128 @@ def op_lsh_join(ctx: Ctx, left: Rel, right: Rel, *rest) -> KStreamRel:
     return KStreamRel(pairs, key_cols=(out_a, out_b))
 
 
+# jaccard-pairs' plan choice (see its docstring): the prefix plan runs when
+# the estimated token index reaches _PREFIX_MIN_POSTINGS postings, or when
+# the hottest (block, token) join key's estimated pair output exceeds
+# _HOT_RATIO x postings and _HOT_MIN_PAIRS; the plain plan otherwise.
+_PREFIX_MIN_POSTINGS = 50_000_000
+_HOT_RATIO = 4.0
+_HOT_MIN_PAIRS = 2_000_000
+# rows of the one bounded fetch the estimate reads
+_ESTIMATE_SAMPLE = 2048
+_PLAN_REMOVED = (
+    f"the engine picks the prefix plan when the estimated postings reach "
+    f"{_PREFIX_MIN_POSTINGS:,}, or when the hottest (block, token) key's "
+    f"pair output exceeds {_HOT_RATIO:g}x postings and {_HOT_MIN_PAIRS:,}, "
+    f"and the plain plan otherwise"
+)
+
+
+def _require_columns(df: DataFrame, op: str, **named) -> None:
+    """ArityError unless each named option names a column of ``df``,
+    matched case-insensitively as Spark resolves names by default."""
+    have = {c.lower() for c in df.columns}
+    for key, name in named.items():
+        if not isinstance(name, str) or name.lower() not in have:
+            raise ArityError(
+                f"{op}: {key} {name!r} is not a column of the input "
+                f"(have {df.columns})"
+            )
+
+
+def _token_sets(rel: Rel, opts: dict, op: str) -> tuple[DataFrame, DataFrame, str, list]:
+    """Parse a pair op's ``col`` / ``id`` / ``block`` / ``shingle`` and
+    build its pinned token sets.
+
+    Returns ``(toks, sample, idc, bcols)``: ``toks`` is (id, block
+    columns ``bcols``, ``__t`` distinct token ids, ``__n`` set size),
+    ``sample`` the unpinned (``__bytes``, ``__t``, ``__bh`` block hash)
+    projection jaccard-pairs' plan estimate reads.
+
+    Tokens are hashed to 60-bit longs (md5_long_col) up front: join/agg
+    work on longs is far cheaper than on strings, the hash runs once per
+    doc, and 60 bits keeps birthday collisions negligible at corpus-scale
+    vocabularies. ``{"shingle": k}`` switches the set elements from single
+    tokens to k-word shingles (n-gram Jaccard, the resemblance measure
+    minhash approximates)."""
+    from .util import md5_long_col, spread
+
+    idc = opts.get("id", "doc_id")
+    col = opts.get("col", "text")
+    _require_columns(rel.df, op, id=idc, col=col)
+    block = opts.get("block", [])
+    blocks = [block] if isinstance(block, str) else block
+    if (not isinstance(blocks, (list, tuple))
+            or not all(isinstance(b, str) for b in blocks)):
+        raise ArityError(
+            f"{op}: block must be a SQL expression or a list of them, "
+            f"got {block!r}"
+        )
+    # curated >= 1 parse: 0 or a negative reached shingles_col's F.slice
+    shingle = pos_int_opt(opts, "shingle", op)
+    units = (shingles_col(F.col(col), shingle) if shingle
+             else tokens_col(F.col(col)))
+    tok_ids = F.array_distinct(
+        F.transform(units, lambda x: md5_long_col(x))
+    ).alias("__t")
+    block_exprs = [F.expr(b) for b in blocks]
+    bcols = [f"__b{i}" for i in range(len(blocks))]
+    # spread: the per-token md5 tokenize is the compute-heavy stage and a
+    # small parquet source scans as one split (see band_signatures)
+    toks = spread(rel.df).select(
+        F.col(idc), *[e.alias(c) for e, c in zip(block_exprs, bcols)], tok_ids,
+    ).withColumn("__n", F.size("__t"))
+    sample = rel.df.select(
+        F.octet_length(col).alias("__bytes"), tok_ids,
+        (F.xxhash64(*block_exprs) if blocks else F.lit(0)).alias("__bh"),
+    )
+    return _pin_tokens(toks), sample, idc, bcols
+
+
+def _token_join(ex: DataFrame, idc: str, bcols: list) -> DataFrame:
+    """Self-join of an exploded (id, blocks, ``__tok``, ...) token index
+    on (blocks, token) with a.id < b.id: one row per shared token per
+    co-blocked pair, the sides aliased ``a`` and ``b``.
+
+    The explicit repartition on the join keys: the exploded index is small
+    relative to the pair rows the join EMITS, so AQE (sized on map output)
+    would coalesce to ~1 partition and run the quadratic pair generation
+    single-threaded; a user-specified partition count is respected by AQE,
+    and both self-join sides reuse the one exchange."""
+    from .util import shuffle_partitions
+
+    ex = ex.repartition(shuffle_partitions(ex), *bcols, "__tok")
+    a, b = ex.alias("a"), ex.alias("b")
+    cond = (F.col("a.__tok") == F.col("b.__tok")) & (F.col(f"a.{idc}") < F.col(f"b.{idc}"))
+    for c in bcols:
+        cond = (F.col(f"a.{c}") == F.col(f"b.{c}")) & cond
+    return a.join(b, cond, "inner")
+
+
+def _shared_counts(toks: DataFrame, idc: str, bcols: list) -> DataFrame:
+    """The plain inverted-index plan of the pair ops: (doc_a, doc_b,
+    __na, __nb, __c) for every co-blocked pair sharing a token, with
+    both set sizes and __c = |A ∩ B|.
+
+    Work is proportional to the number of SHARED tokens (pairs with no
+    overlap are never materialized), and every step is a codegen'd hash
+    join / hash aggregation; the per-pair ``array_intersect`` is an
+    interpreted CodegenFallback expression, ~20us/pair. The sizes ride
+    along as grouping keys, so no extra join is needed for |A|, |B|."""
+    ex = toks.select(F.col(idc), *bcols, "__n", F.explode("__t").alias("__tok"))
+    return (
+        _token_join(ex, idc, bcols)
+        .select(
+            F.col(f"a.{idc}").alias("doc_a"),
+            F.col(f"b.{idc}").alias("doc_b"),
+            F.col("a.__n").alias("__na"),
+            F.col("b.__n").alias("__nb"),
+        )
+        .groupBy("doc_a", "doc_b", "__na", "__nb")
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
+
+
 @defop("jaccard-pairs")
 def op_jaccard_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     """Exact token-set Jaccard similarity pairs within blocking groups:
@@ -762,43 +884,35 @@ def op_jaccard_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
                                 "block": "lang", "threshold": 0.5,
                                 "shingle": None}]  # k => n-gram Jaccard
 
-    Inverted-index plan (threshold > 0): explode distinct token hashes,
+    ``block`` is a SQL expression or a list of them. Two exact plans,
+    bit-identical results (same oracle); the engine picks one per call.
+
+    Plain inverted index (threshold > 0): explode distinct token hashes,
     self-equi-join on (block, token), count matches per candidate pair.
-    Work is proportional to the number of SHARED tokens — pairs with no
-    overlap are never materialized — and every step is a codegen'd hash
-    join / hash aggregation (the naive per-pair ``array_intersect`` is a
-    CodegenFallback expression, ~20us/pair interpreted). The block key
-    still bounds the candidate space; at 100 TB a hyper-frequent token is
-    a skewed join key — AQE skew-join splitting handles it, and
-    {"prefix": true} enables the AllPairs prefix-filter refinement (see
-    below). threshold <= 0 falls back to the blocked cross join
-    (zero-overlap pairs must then be emitted).
+    Work is proportional to the number of SHARED tokens, and every step is
+    a codegen'd hash join / hash aggregation. threshold <= 0 falls back to
+    the blocked cross join (zero-overlap pairs must then be emitted).
 
-    PREFIX FILTERING ({"prefix": true}) — the 100 TB refinement
-    (Bayardo et al., "Scaling Up All Pairs Similarity Search"): order
-    each doc's tokens by global document frequency (rarest first; token
-    id tiebreak) and index only the first n - ceil(t*n) + 1. Any pair
-    with Jaccard >= t shares its canonically-FIRST common token inside
-    BOTH prefixes, so the prefix self-join is a guaranteed candidate
-    superset; exact Jaccard is then verified on candidates only by
-    re-joining the full token sets. The index shrinks by ~t/(1+t) and —
-    decisive at scale — the hottest (most frequent) tokens tend to fall
-    out of the index, shrinking the skewed join keys. Results are
-    bit-identical to the plain inverted-index plan (same oracle).
-    Measured honestly: at sf0.1 (5k docs) the prefix plan is SLOWER
-    (5.1s vs 3.0s) — the document-frequency pass + per-doc ranking +
-    verify join only amortize when the token index is large and skewed;
-    use the plain plan interactively, prefix at corpus scale.
+    AllPairs prefix filtering (Bayardo et al., "Scaling Up All Pairs
+    Similarity Search"): order each doc's tokens by global document
+    frequency (rarest first; token id tiebreak) and index only the first
+    n - ceil(t*n) + 1. Any pair with Jaccard >= t shares its
+    canonically-FIRST common token inside BOTH prefixes, so the prefix
+    self-join is a guaranteed candidate superset; exact Jaccard is then
+    verified on candidates only. The index shrinks by ~t/(1+t) and the
+    hottest tokens fall out of it, shrinking the skewed join keys. On
+    uniform corpora it is slower (the document-frequency pass, per-doc
+    ranking and verify join only amortize on a large or skewed index).
 
-    The default {"prefix": "auto"} makes that call automatically from a
-    plan-build-time sample (no full pass): the prefix plan is selected
-    when the estimated index size crosses {"auto_threshold": 50M}
-    postings, OR when it is skewed — the hottest (block, token) join
-    key's estimated pair output exceeding {"hot_ratio": 4.0} x postings
-    and {"hot_min_pairs": 2M}. Skew rule measured (r06): one token in
-    17% of a 20k-doc corpus makes plain 2.3x slower than prefix, 33%
-    makes it 7x — the quadratic hot-key blowup auto exists to avoid.
-    True/False stay as explicit overrides."""
+    The choice reads ONE bounded Arrow fetch of the input
+    (``_ESTIMATE_SAMPLE`` rows, no full pass) plus Catalyst's row
+    estimate, and no option: prefix when the estimated postings reach
+    50M, or when the hottest (block, token) join key's estimated pair
+    output exceeds 4x postings and 2M pairs (the floor keeps tiny corpora
+    on plain). Skew rule measured (r06): one token in 17% of a 20k-doc
+    corpus makes plain 2.3x slower than prefix, 33% makes it 7x. The
+    retired options ``prefix``, ``auto_threshold``, ``hot_ratio`` and
+    ``hot_min_pairs`` are refused."""
     if rel.df.isStreaming:
         raise TypeDispatchError(
             "jaccard-pairs self-joins corpus-global postings and is "
@@ -806,88 +920,16 @@ def op_jaccard_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
         )
     opts = _opts(rest)
     refuse_removed_opt(opts, "storage", "jaccard-pairs", STORAGE_REMOVED)
-    idc = opts.get("id", "doc_id")
-    block = opts.get("block")
+    for key in ("prefix", "auto_threshold", "hot_ratio", "hot_min_pairs"):
+        refuse_removed_opt(opts, key, "jaccard-pairs", _PLAN_REMOVED)
     thr = float_opt(opts, "threshold", "jaccard-pairs", 0.5)
-    col = opts.get("col", "text")
-    blocks = [block] if isinstance(block, str) else list(block or [])
-    # tokens are hashed to 60-bit longs (engine-portable md5 slice, see
-    # md5_long_col) up front: join/agg work on longs is far cheaper than
-    # on strings, the hash runs once per doc occurrence (not per pair),
-    # and 60 bits keeps birthday collisions negligible at corpus-scale
-    # vocabularies where a 32-bit slice would merge unrelated tokens.
-    # {"shingle": k} switches the set elements from single tokens to
-    # k-word shingles (n-gram Jaccard — word-order-sensitive, the
-    # resemblance measure minhash approximates; same shingles_col
-    # construction, so exact-verify composes with lsh-candidates).
-    # curated >= 1 parse (r14, the lsh_dims falsy-zero class): 0/negative
-    # reached shingles_col's F.slice — garbage shingles at 0, an opaque
-    # INVALID_PARAMETER_VALUE abort at first action for negatives
-    shingle = pos_int_opt(opts, "shingle", "jaccard-pairs")
-    units = (shingles_col(F.col(col), shingle) if shingle
-             else tokens_col(F.col(col)))
-    from .util import md5_long_col, spread
-
-    tok_ids = F.array_distinct(
-        F.transform(units, lambda x: md5_long_col(x))
-    )
-    # spread: the per-token md5 tokenize is the compute-heavy stage and a
-    # small parquet source scans as one split (see band_signatures)
-    toks = spread(rel.df).select(
-        F.col(idc),
-        *[F.expr(b).alias(f"__b{i}") for i, b in enumerate(blocks)],
-        tok_ids.alias("__t"),
-    )
-    toks = toks.withColumn("__n", F.size(F.col("__t")))
-    toks = _pin_tokens(toks)
-
-    # Plan choice: {"prefix": True/False} is an explicit override; the
-    # default "auto" estimates the token index from a LIMIT-sample (a
-    # single input split — plan construction must not silently scan a
-    # corpus; row count comes from Catalyst plan statistics, not
-    # count()) and switches to the prefix-filtered plan when EITHER
-    #   * the index is big: estimated postings >= ``auto_threshold``
-    #     (default 50M — the regime where the df pass + verify join
-    #     amortize even without skew), OR
-    #   * the index is SKEWED: the hottest (block, token) join key's
-    #     estimated pair-row output (f_max·rows)²/2 exceeds
-    #     ``hot_ratio`` x postings (and the absolute ``hot_min_pairs``
-    #     floor, so tiny corpora never flip on ratio alone).
-    # The skew rule is pinned from measurement (r06, local[32], 20k-doc
-    # synthetic, 200k vocab, one hot token): plain/prefix = 6.4/6.7s at
-    # 0% hot, 10.8/4.7s with the hot token in 17% of docs (ratio 6.8x),
-    # 32.9/4.6s at 33% — plain degrades quadratically in the hot count
-    # while prefix stays flat because the hot token (max df) drops out
-    # of every prefix. Measured break-even ~1x postings; the 4x default
-    # + 2M floor biases toward plain at toy scale where the prefix
-    # overhead is the larger term. Streaming rels can't sample, so auto
-    # resolves to the plain plan there.
-    if thr > 0:
-        prefix_opt = opts.get("prefix", "auto")
-        if prefix_opt == "auto":
-            if rel.df.isStreaming:
-                use_prefix = False
-            else:
-                postings, hot_pairs = _index_estimate(
-                    rel.df, F.col(col), tok_ids,
-                    [F.expr(b) for b in blocks],
-                )
-                use_prefix = postings >= int(
-                    opts.get("auto_threshold", 50_000_000)
-                ) or hot_pairs >= max(
-                    float_opt(opts, "hot_ratio", "jaccard-pairs", 4.0) * postings,
-                    float_opt(opts, "hot_min_pairs", "jaccard-pairs", 2_000_000),
-                )
-        else:
-            use_prefix = bool(prefix_opt)
-        if use_prefix:
-            return _jaccard_prefix(toks, idc, blocks, thr)
+    toks, sample, idc, bcols = _token_sets(rel, opts, "jaccard-pairs")
 
     if thr <= 0:  # exact all-pairs within block, incl. zero-overlap pairs
         a, b = toks.alias("a"), toks.alias("b")
         cond = F.col(f"a.{idc}") < F.col(f"b.{idc}")
-        for i in range(len(blocks)):
-            cond = (F.col(f"a.__b{i}") == F.col(f"b.__b{i}")) & cond
+        for c in bcols:
+            cond = (F.col(f"a.{c}") == F.col(f"b.{c}")) & cond
         common = F.size(F.array_intersect(F.col("a.__t"), F.col("b.__t")))
         jac = common / (F.col("a.__n") + F.col("b.__n") - common)
         pairs = (
@@ -901,38 +943,11 @@ def op_jaccard_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
         )
         return KStreamRel(pairs, key_cols=("doc_a", "doc_b"))
 
-    ex = toks.select(
-        F.col(idc),
-        *[f"__b{i}" for i in range(len(blocks))],
-        F.col("__n"),
-        F.explode(F.col("__t")).alias("__tok"),
-    )
-    # explicit repartition on the join keys: the exploded index is small
-    # relative to the pair rows the join EMITS, so AQE (sized on map
-    # output) would coalesce to ~1 partition and run the quadratic pair
-    # generation single-threaded; a user-specified partition count is
-    # respected by AQE, and both self-join sides reuse the one exchange
-    from .util import shuffle_partitions
-
-    nparts = shuffle_partitions(ex)
-    ex = ex.repartition(
-        nparts, *[f"__b{i}" for i in range(len(blocks))], "__tok"
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    cond = (F.col("a.__tok") == F.col("b.__tok")) & (F.col(f"a.{idc}") < F.col(f"b.{idc}"))
-    for i in range(len(blocks)):
-        cond = (F.col(f"a.__b{i}") == F.col(f"b.__b{i}")) & cond
-    # one row per shared token per pair -> count = |A ∩ B|; sizes ride
-    # along as grouping keys so no extra join is needed for |A|, |B|
-    matched = a.join(b, cond, "inner").select(
-        F.col(f"a.{idc}").alias("doc_a"),
-        F.col(f"b.{idc}").alias("doc_b"),
-        F.col("a.__n").alias("__na"),
-        F.col("b.__n").alias("__nb"),
-    )
-    counted = matched.groupBy("doc_a", "doc_b", "__na", "__nb").agg(
-        F.count(F.lit(1)).alias("__c")
-    )
+    postings, hot_pairs = _index_estimate(rel.df, sample)
+    if postings >= _PREFIX_MIN_POSTINGS or hot_pairs >= max(
+            _HOT_RATIO * postings, _HOT_MIN_PAIRS):
+        return _jaccard_prefix(toks, idc, bcols, thr)
+    counted = _shared_counts(toks, idc, bcols)
     # |A∪B| = |A| + |B| − |A∩B|
     jac = F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))
     pairs = (
@@ -958,17 +973,15 @@ def op_containment_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
            containment >= threshold (max-containment = the overlap
            coefficient |A∩B| / min(|A|,|B|)).
 
-    Same inverted-index plan as jaccard-pairs (work ∝ shared tokens,
-    codegen hash join + hash agg, never all-pairs): explode distinct
-    60-bit token hashes, self-equi-join on (block, token), count shared
-    per pair with both set sizes riding the grouping key. threshold
+    The plain inverted-index plan of jaccard-pairs (work ∝ shared tokens,
+    codegen hash join + hash agg, never all-pairs). threshold
     must be > 0 — a zero threshold is every co-blocked pair; use
     jaccard-pairs' documented threshold<=0 cross-join fallback for
     that. AllPairs prefix filtering does NOT port: its bound assumes
     the symmetric Jaccard overlap constraint, while containment admits
     pairs with arbitrarily small Jaccard (the snippet case above), so
     a prefix index would drop true pairs; skew in the token index is
-    handled by AQE skew-split, as in the plain jaccard plan.
+    handled by AQE skew-split.
 
     Reference: no analog (§2.10 extension surface)."""
     if rel.df.isStreaming:
@@ -978,59 +991,15 @@ def op_containment_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
         )
     opts = _opts(rest)
     refuse_removed_opt(opts, "storage", "containment-pairs", STORAGE_REMOVED)
-    idc = opts.get("id", "doc_id")
-    block = opts.get("block")
     thr = float_opt(opts, "threshold", "containment-pairs", 0.9)
-    col = opts.get("col", "text")
     if thr <= 0:
         raise TypeDispatchError(
             "containment-pairs needs threshold > 0 (the inverted index "
             "only materializes pairs sharing a token); for every "
             "co-blocked pair use jaccard-pairs with threshold <= 0"
         )
-    blocks = [block] if isinstance(block, str) else list(block or [])
-    from .util import md5_long_col, shuffle_partitions, spread
-
-    # curated >= 1 parse (r14 — see jaccard-pairs)
-    shingle = pos_int_opt(opts, "shingle", "containment-pairs")
-    units = (shingles_col(F.col(col), shingle) if shingle
-             else tokens_col(F.col(col)))
-    tok_ids = F.array_distinct(
-        F.transform(units, lambda x: md5_long_col(x))
-    )
-    toks = spread(rel.df).select(
-        F.col(idc),
-        *[F.expr(b).alias(f"__b{i}") for i, b in enumerate(blocks)],
-        tok_ids.alias("__t"),
-    ).withColumn("__n", F.size(F.col("__t")))
-    toks = _pin_tokens(toks)
-    ex = toks.select(
-        F.col(idc),
-        *[f"__b{i}" for i in range(len(blocks))],
-        F.col("__n"),
-        F.explode(F.col("__t")).alias("__tok"),
-    )
-    # same exchange-reuse rationale as jaccard-pairs: pin the partition
-    # count so AQE (sized on the small map output, blind to the pair
-    # rows the join emits) can't coalesce the quadratic stage to 1 task
-    ex = ex.repartition(
-        shuffle_partitions(ex), *[f"__b{i}" for i in range(len(blocks))], "__tok"
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    cond = (F.col("a.__tok") == F.col("b.__tok")) & (F.col(f"a.{idc}") < F.col(f"b.{idc}"))
-    for i in range(len(blocks)):
-        cond = (F.col(f"a.__b{i}") == F.col(f"b.__b{i}")) & cond
-    counted = (
-        a.join(b, cond, "inner")
-        .select(
-            F.col(f"a.{idc}").alias("doc_a"),
-            F.col(f"b.{idc}").alias("doc_b"),
-            F.col("a.__n").alias("__na"),
-            F.col("b.__n").alias("__nb"),
-        )
-        .groupBy("doc_a", "doc_b", "__na", "__nb")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
+    toks, _, idc, bcols = _token_sets(rel, opts, "containment-pairs")
+    counted = _shared_counts(toks, idc, bcols)
     c_a = F.col("__c") / F.col("__na")
     c_b = F.col("__c") / F.col("__nb")
     pairs = (
@@ -1046,21 +1015,20 @@ def op_containment_pairs(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     return KStreamRel(pairs, key_cols=("doc_a", "doc_b"))
 
 
-def _index_estimate(
-    df: DataFrame, text_col, tok_ids, block_exprs, sample: int = 2048
-) -> tuple[float, float]:
-    """(estimated postings, estimated hot-join-key pair rows) WITHOUT a
-    full pass over the corpus — this runs at plan-construction time,
-    where silently executing a count() over an arbitrary upstream
-    pipeline would mean minutes of surprise cluster work per ksml()
-    call. Inputs: two LIMIT-``sample`` jobs over a single input split
-    (mean tokens/doc + mean row bytes; max per-(block, token) sample
-    frequency), combined with Catalyst's plan statistics (rowCount when
-    available, else sizeInBytes / mean row bytes). File-source
-    sizeInBytes is compressed bytes, so the row estimate can undershoot
-    by the compression ratio (~3x) — order-of-magnitude accuracy, which
-    is all the thresholds need; {"prefix": True/False} overrides when
-    it matters.
+def _index_estimate(df: DataFrame, sample: DataFrame) -> tuple[float, float]:
+    """(estimated postings, estimated hot-join-key pair rows) of a token
+    index WITHOUT a full pass over the corpus: this runs at plan
+    construction, where a count() over an arbitrary upstream pipeline
+    would be minutes of surprise cluster work per ksml() call.
+
+    One Spark job: a LIMIT-``_ESTIMATE_SAMPLE`` Arrow fetch of
+    ``sample`` (_token_sets' (__bytes, __t, __bh) projection of ``df``).
+    From it the driver takes the row count, the mean bytes and tokens per
+    doc and the hottest (block, token) key's document count, combined
+    with Catalyst's plan statistics of ``df`` (rowCount when available,
+    else sizeInBytes / mean row bytes). File-source sizeInBytes is compressed
+    bytes, so the row estimate can undershoot by the compression ratio
+    (~3x): order-of-magnitude accuracy, which is all the rule needs.
 
     The hot estimate keys on (block..., token) because that IS the
     self-join key: a globally hot token split across many blocks is not
@@ -1070,34 +1038,25 @@ def _index_estimate(
     2048-doc sample resolves hot fractions down to ~0.1%; rarer-but-
     still-hot keys at extreme corpus sizes are the postings rule's job.
     Sample collisions (unrelated tokens hitting 2-3 of 2048 docs) give
-    f_max ~1.5e-3, whose pair estimate stays below the hot_min_pairs
+    f_max ~1.5e-3, whose pair estimate stays below the _HOT_MIN_PAIRS
     floor until the corpus is large enough that the estimate is real."""
-    base = df.select(
-        F.octet_length(text_col).alias("__b"),
-        tok_ids.alias("__t"),
-        *[e.alias(f"__eb{i}") for i, e in enumerate(block_exprs)],
-    ).limit(sample)
-    # materialize the sample ONCE: the size/avg agg and the hot-key agg
-    # below would otherwise each re-run the limit (two scan+tokenize
-    # jobs at plan time — measured as jaccard-pairs' auto-mode overhead)
-    # over two potentially DIFFERENT non-deterministic samples, making
-    # f_max inconsistent with the count it divides by. eager=False (r17):
-    # the size/avg agg directly below is a full scan, so its job writes
-    # the checkpoint — the consumers are sequential driver actions, so
-    # the single-sample guarantee is unchanged. The call is not free:
-    # under AQE it runs the upstream's shuffle stages at once (measured
-    # 0.6-0.75 s of a corpus_batch job); near-dedup pins its input so
-    # that this upstream work is not paid again by the later jobs
-    base = base.localCheckpoint(eager=False)
-    s = base.agg(
-        F.avg("__b").alias("b"), F.avg(F.size("__t")).alias("n"),
-        F.count(F.lit(1)).alias("c"),
-    ).first()
-    if not s["c"]:
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    got = sample.limit(_ESTIMATE_SAMPLE).toArrow()
+    n = got.num_rows
+    if not n:
         return 0.0, 0.0
-    mean_n = float(s["n"] or 0.0)
-    if s["c"] < sample:  # the whole input fit in the sample: exact enough
-        rows_est = float(s["c"])
+    t = got.column("__t")
+    # one row per (doc, token): token ids are distinct within a doc, so a
+    # (block hash, token) count is that key's document count
+    flat = pa.table({
+        "bh": pc.take(got.column("__bh"), pc.list_parent_indices(t)),
+        "tok": pc.list_flatten(t),
+    })
+    mean_n = flat.num_rows / n
+    if n < _ESTIMATE_SAMPLE:  # the whole input fit in the sample: exact enough
+        rows_est = float(n)
     else:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         rc = stats.rowCount()
@@ -1111,36 +1070,24 @@ def _index_estimate(
                 # localCheckpoint outputs). Dividing that is a ~1e16-row
                 # hallucination that would force the prefix plan on tiny
                 # data; treat stats as unavailable and fall back to the
-                # sample count (=> plain plan unless overridden — the safe
-                # default, since unsized inputs are typically small/local).
-                rows_est = float(s["c"])
+                # sample count (=> plain plan — the safe default, since
+                # unsized inputs are typically small/local).
+                rows_est = float(n)
             else:
-                mean_b = float(s["b"] or 1.0)
+                mean_b = pc.mean(got.column("__bytes")).as_py() or 1.0
                 rows_est = size / max(mean_b, 1.0)
-        rows_est = max(rows_est, float(s["c"]))
-    hot = (
-        base.select(
-            *[f"__eb{i}" for i in range(len(block_exprs))],
-            F.explode("__t").alias("__tok"),
-        )
-        .groupBy(*[f"__eb{i}" for i in range(len(block_exprs))], "__tok")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .agg(F.max("__c").alias("m"))
-        .first()
-    )
-    f_max = float(hot["m"] or 0) / float(s["c"])
+        rows_est = max(rows_est, float(n))
+    per_key = flat.group_by(["bh", "tok"]).aggregate([("tok", "count")])
+    f_max = (pc.max(per_key.column("tok_count")).as_py() or 0) / n
     hot_docs = f_max * rows_est
     return rows_est * mean_n, hot_docs * hot_docs / 2.0
 
 
-def _jaccard_prefix(toks: DataFrame, idc: str, blocks: list, thr: float) -> KStreamRel:
+def _jaccard_prefix(toks: DataFrame, idc: str, bcols: list, thr: float) -> KStreamRel:
     """AllPairs prefix-filtered exact Jaccard (see op_jaccard_pairs
     docstring for the theory). toks: (id, __b*, __t token array, __n)."""
     from pyspark.sql import Window
 
-    from .util import shuffle_partitions
-
-    bcols = [f"__b{i}" for i in range(len(blocks))]
     ex = toks.select(F.col(idc), *bcols, F.col("__n"), F.explode("__t").alias("__tok"))
     # canonical order = ascending global document frequency (token id
     # tiebreak): rarest tokens first, so the index drops each doc's most
@@ -1157,13 +1104,8 @@ def _jaccard_prefix(toks: DataFrame, idc: str, blocks: list, thr: float) -> KStr
         + 1
     )
     pref = ranked.filter(F.col("__pos") <= plen).select(F.col(idc), *bcols, "__tok")
-    pref = pref.repartition(shuffle_partitions(pref), *bcols, "__tok")
-    a, b = pref.alias("a"), pref.alias("b")
-    cond = (F.col("a.__tok") == F.col("b.__tok")) & (F.col(f"a.{idc}") < F.col(f"b.{idc}"))
-    for i in range(len(blocks)):
-        cond = (F.col(f"a.__b{i}") == F.col(f"b.__b{i}")) & cond
     cand = (
-        a.join(b, cond, "inner")
+        _token_join(pref, idc, bcols)
         .select(F.col(f"a.{idc}").alias("doc_a"), F.col(f"b.{idc}").alias("doc_b"))
         .distinct()
     )
@@ -1443,9 +1385,10 @@ def op_dup_clusters(ctx: Ctx, rel: Rel, *rest) -> KStreamRel:
     a = opts.get("a", "doc_a")
     b = opts.get("b", "doc_b")
     out_id = opts.get("as", "doc_id")
-    max_iter = int_opt(opts, "max_iter", "dup-clusters", 15)
+    max_iter = int_opt(opts, "max_iter", "dup-clusters", 15, lo=1)
     if rel.df.isStreaming:
         raise ArityError("dup-clusters is batch-only (see docstring)")
+    _require_columns(rel.df, "dup-clusters", a=a, b=b)
 
     # checkpoint the pair relation BEFORE the bounded fetch and the
     # symmetric union: each would otherwise re-run the (expensive)
@@ -1492,16 +1435,18 @@ def op_near_dedup(ctx: Ctx, rel: Rel, *rest) -> Rel:
     dropped; everything else (including rows with no near-dup) passes
     through unchanged.
 
-    Composition of the gated building blocks — jaccard-pairs (inverted-
-    index exact verification within blocks) -> dup-clusters (driver
-    union-find up to CC_DRIVER_MAX_PAIRS pairs, contraction connected
-    components beyond) -> left_anti join against the non-representative
-    ids (a set far smaller than the corpus, so Catalyst broadcasts it).
+    Composition of the gated building blocks — jaccard-pairs (exact
+    verification within blocks; its opts col, id, block, threshold and
+    shingle pass through, and it picks its plan from one bounded fetch)
+    -> dup-clusters (driver union-find up to CC_DRIVER_MAX_PAIRS pairs,
+    contraction connected components beyond; ``max_iter`` passes
+    through) -> left_anti join against the non-representative ids (a
+    set far smaller than the corpus, so Catalyst broadcasts it).
 
     The input is pinned once (DISK_ONLY, the _pin_tokens rule) before
-    any of that runs. Three jobs read it: the pair stage's plan-time sample, the
-    pair checkpoint in dup-clusters and the final anti join; unpinned,
-    each re-ran the whole upstream pipeline. A call therefore holds two
+    any of that runs. Three jobs read it: jaccard-pairs' plan-time
+    fetch, the pair checkpoint in dup-clusters and the final anti join;
+    unpinned, each re-ran the whole upstream pipeline. A call therefore holds two
     registry pins (this one and the pair stage's), freed by
     ``ksml_spark.release_pinned()``.
 

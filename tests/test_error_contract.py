@@ -589,6 +589,15 @@ _RETIRED_IMPL_OPTS = [
      "upstream, which pins it in the bounded registry"),
     ("lm-score", False, "persist", (True, False), {},
      "upstream, which pins it in the bounded registry"),
+    # jaccard-pairs' plan knobs: the plan follows its estimated index
+    ("jaccard-pairs", False, "prefix", (True, False, "auto"), {},
+     "picks the prefix plan when the estimated postings reach"),
+    ("jaccard-pairs", False, "auto_threshold", (1, 50_000_000), {},
+     "picks the prefix plan when the estimated postings reach"),
+    ("jaccard-pairs", False, "hot_ratio", (1.0, 4.0), {},
+     "picks the prefix plan when the estimated postings reach"),
+    ("jaccard-pairs", False, "hot_min_pairs", (100_000, 2_000_000), {},
+     "picks the prefix plan when the estimated postings reach"),
 ]
 
 
@@ -610,3 +619,50 @@ def test_retired_impl_options_refused_naming_replacement(
         with pytest.raises(ArityError,
                            match=f"{op}: option '{key}' was removed — .*{replacement}"):
             ksml(form, spark=spark)
+
+
+_MALFORMED_PAIR_FORMS = [
+    # (case, op, options, what the curated message names)
+    ("jaccard-int-block", "jaccard-pairs", {"block": 5},
+     "block must be a SQL expression"),
+    ("containment-int-block", "containment-pairs", {"block": 5},
+     "block must be a SQL expression"),
+    ("near-dedup-int-block", "near-dedup", {"block": 5},
+     "block must be a SQL expression"),
+    ("jaccard-int-in-block-list", "jaccard-pairs", {"block": ["lang", 5]},
+     "block must be a SQL expression"),
+    ("jaccard-missing-id", "jaccard-pairs", {"id": "nope"},
+     "id 'nope' is not a column"),
+    ("containment-missing-id", "containment-pairs", {"id": "nope"},
+     "id 'nope' is not a column"),
+    ("near-dedup-missing-id", "near-dedup", {"id": "nope"},
+     "id 'nope' is not a column"),
+    ("jaccard-missing-col", "jaccard-pairs", {"col": "nope"},
+     "col 'nope' is not a column"),
+    ("containment-missing-col", "containment-pairs", {"col": "nope"},
+     "col 'nope' is not a column"),
+    ("near-dedup-missing-col", "near-dedup", {"col": "nope"},
+     "col 'nope' is not a column"),
+    ("dup-clusters-missing-a", "dup-clusters", {"a": "nope", "b": "user_id"},
+     "a 'nope' is not a column"),
+    ("dup-clusters-missing-b", "dup-clusters", {"a": "doc_id", "b": "nope"},
+     "b 'nope' is not a column"),
+    ("dup-clusters-zero-max-iter", "dup-clusters",
+     {"a": "doc_id", "b": "user_id", "max_iter": 0}, "max_iter must be >= 1"),
+]
+
+
+@pytest.mark.parametrize(
+    "op, opts, message", [r[1:] for r in _MALFORMED_PAIR_FORMS],
+    ids=[r[0] for r in _MALFORMED_PAIR_FORMS])
+def test_malformed_pair_operator_forms_refused_at_construction(
+        spark, probe_rel_df, op, opts, message):
+    """A block that is not a SQL expression or a list of them, an id or
+    text column the input lacks, a dup-clusters endpoint that is not a
+    column and ``max_iter: 0`` each raise the curated ArityError when
+    the form is built, not a raw TypeError or an unresolved-column
+    AnalysisException."""
+    from ksml_spark.errors import ArityError
+
+    with pytest.raises(ArityError, match=message):
+        ksml([op, ["stream", probe_rel_df, {"key": "doc_id"}], opts], spark=spark)

@@ -1121,45 +1121,94 @@ def test_degenerate_vectors_never_abort_similarity_ops(spark):
     assert run(dirty, "neardup-pairs", nd_opts) == want
 
 
-def test_jaccard_prefix_matches_plain_plan(spark, tables):
+def _force_jaccard_plan(m, prefix: bool) -> None:
+    """Force jaccard-pairs' plan through its rule's constants (``m`` a
+    monkeypatch): prefix from 0 postings, plain when neither the postings
+    nor the hot-key threshold can be reached."""
+    from ksml_spark.operators import dedup
+
+    if prefix:
+        m.setattr(dedup, "_PREFIX_MIN_POSTINGS", 0)
+    else:
+        m.setattr(dedup, "_PREFIX_MIN_POSTINGS", float("inf"))
+        m.setattr(dedup, "_HOT_MIN_PAIRS", float("inf"))
+
+
+def test_jaccard_prefix_matches_plain_plan(spark, tables, monkeypatch):
     """AllPairs prefix filtering must return bit-identical pairs to the
     plain inverted-index plan (same threshold, same blocks)."""
     base = {"col": "text", "id": "doc_id", "block": ["lang"], "threshold": 0.5}
     plain = pipe(docs_stream(tables), ["jaccard-pairs", base], spark=spark).df
-    pref = pipe(docs_stream(tables),
-                ["jaccard-pairs", {**base, "prefix": True}], spark=spark).df
+    _force_jaccard_plan(monkeypatch, prefix=True)
+    pref = pipe(docs_stream(tables), ["jaccard-pairs", base], spark=spark).df
     a = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in plain.collect()}
     b = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pref.collect()}
     assert a == b and len(a) > 0
 
 
-def test_jaccard_prefix_auto_switch(spark, tables):
-    """Default {"prefix": "auto"} picks the plan from the estimated
-    token-index size: plain below ``auto_threshold`` postings, the
-    AllPairs prefix-filtered plan above it — same results either way.
+def test_jaccard_prefix_auto_switch(spark, tables, monkeypatch):
+    """jaccard-pairs picks the plan from the estimated token-index size:
+    plain below ``_PREFIX_MIN_POSTINGS`` postings, the AllPairs
+    prefix-filtered plan above it — same results either way.
     The prefix plan is identified by its document-frequency ranking
     window (row_number over __df), which the plain plan never has."""
+    from ksml_spark.operators import dedup
+
     base = {"col": "text", "id": "doc_id", "block": ["lang"], "threshold": 0.5}
 
-    def plan(extra):
-        df = pipe(docs_stream(tables), ["jaccard-pairs", {**base, **extra}],
-                  spark=spark).df
+    def plan():
+        df = pipe(docs_stream(tables), ["jaccard-pairs", base], spark=spark).df
         return df, df._jdf.queryExecution().optimizedPlan().toString()
 
     # toy corpus is far below the default 50M-postings threshold -> plain
-    _, auto_plan = plan({})
+    _, auto_plan = plan()
     assert "row_number" not in auto_plan
-    # forcing the threshold to 1 posting flips auto to the prefix plan
-    forced_df, forced_plan = plan({"auto_threshold": 1})
+    # lowering the threshold to 1 posting flips the choice to prefix
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_PREFIX_MIN_POSTINGS", 1)
+        forced_df, forced_plan = plan()
     assert "row_number" in forced_plan
-    # explicit override still beats auto in both directions
-    _, off_plan = plan({"auto_threshold": 1, "prefix": False})
+    # a forced plain plan stays plain
+    with monkeypatch.context() as m:
+        _force_jaccard_plan(m, prefix=False)
+        off_df, off_plan = plan()
     assert "row_number" not in off_plan
     # and the auto-chosen prefix plan returns the same pairs
-    want = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in plan({"prefix": False})[0].collect()}
+    want = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in off_df.collect()}
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in forced_df.collect()}
     assert got == want and len(got) > 0
+
+
+def test_jaccard_plan_choice_is_one_spark_job(spark, monkeypatch):
+    """jaccard-pairs picks its plan from one bounded Arrow fetch: over a
+    shuffle-free input the estimate starts exactly one Spark job (no
+    checkpoint, no aggregate jobs)."""
+    import uuid
+
+    from ksml_spark.operators import dedup
+
+    sc = spark.sparkContext
+    jobs = []
+    estimate = dedup._index_estimate
+
+    def counted(*args):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            return estimate(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(dedup, "_index_estimate", counted)
+    df = spark.createDataFrame(
+        [(i, f"alpha beta gamma {i % 7}", "en" if i % 2 else "de")
+         for i in range(100)],
+        "doc_id long, text string, lang string")
+    pipe(["stream", df, {"key": "doc_id"}],
+         ["jaccard-pairs", {"block": "lang", "threshold": 0.5}], spark=spark)
+    assert jobs == [1]
 
 
 def test_frame_sample_stride_and_cap(spark, tables):
@@ -2524,13 +2573,15 @@ def test_semdedup_matches_python_reference(spark):
     assert got == expected
 
 
-def test_jaccard_prefix_auto_switch_on_skew(spark):
-    """{"prefix": "auto"} flips to the prefix plan when the sampled
+def test_jaccard_prefix_auto_switch_on_skew(spark, monkeypatch):
+    """jaccard-pairs flips to the prefix plan when the sampled
     token index is SKEWED (one hot (block, token) join key whose pair
     output would dominate), even though postings are far below the 50M
     size threshold — and stays plain on the same corpus without the hot
     token. Measured r06: the hot corpus runs 2-7x faster under prefix."""
     from pyspark.sql import functions as F
+
+    from ksml_spark.operators import dedup
 
     n, vocab, toks = 4000, 50_000, 30
     base = spark.range(n).select(
@@ -2546,21 +2597,22 @@ def test_jaccard_prefix_auto_switch_on_skew(spark):
                F.concat("text", F.lit(" hotskewtok")))
         .otherwise(F.col("text")).alias("text"))
 
-    def plan(df, extra=None):
+    def plan(df):
         out = pipe(["stream", df, {"key": "doc_id"}],
                    ["jaccard-pairs", {"col": "text", "id": "doc_id",
-                                      "threshold": 0.5,
-                                      "hot_min_pairs": 100_000,
-                                      **(extra or {})}], spark=spark).df
+                                      "threshold": 0.5}], spark=spark).df
         return out._jdf.queryExecution().optimizedPlan().toString()
+
+    monkeypatch.setattr(dedup, "_HOT_MIN_PAIRS", 100_000)
 
     # hot token in 50% of docs: est pairs (2000^2/2 = 2M) >> 4x postings
     # (~120k) -> prefix (identified by its df-ranking window)
     assert "row_number" in plan(hot)
     # same corpus, no hot token: uniform df -> plain
     assert "row_number" not in plan(base)
-    # explicit override still beats the skew rule
-    assert "row_number" not in plan(hot, {"prefix": False})
+    # a forced plain plan still beats the skew rule
+    _force_jaccard_plan(monkeypatch, prefix=False)
+    assert "row_number" not in plan(hot)
 
 
 def test_containment_pairs_values_and_inclusion_case(spark, tables):
