@@ -108,11 +108,7 @@ def _stream_bench(spark, sf_dir: str) -> dict:
     join. Sources are pre-written (untimed); each timed pass runs the
     full plan to a noop sink with Trigger.AvailableNow and a fresh
     checkpoint, so the measured cost is the streaming engine + state
-    store + Python stateful processor, not sink serialization.
-
-    ``changelog_join_loop`` pins the pre-vectorization record-loop path
-    of the same join (small_group=inf) so the vectorized speedup is a
-    recorded number, not a claim."""
+    store + Python stateful processor, not sink serialization."""
     import shutil
     import tempfile
 
@@ -137,7 +133,7 @@ def _stream_bench(spark, sf_dir: str) -> dict:
         ev.select("user_id", "event_type", "ts").write.parquet(rp)
         # hot-key variant: 32 keys total, thousands of records per key per
         # batch — the high-velocity/skew case where the per-key reduction
-        # dominates (this is what the vectorized _lexi_best path is for)
+        # (changelog_join._last_max) dominates
         hlp, hrp = os.path.join(tmp, "cl_hl"), os.path.join(tmp, "cl_hr")
         hot = ev.selectExpr("user_id % 32 as user_id", "value", "event_type", "ts")
         hot.select("user_id", "value", "ts").write.parquet(hlp)
@@ -191,14 +187,13 @@ def _stream_bench(spark, sf_dir: str) -> dict:
                 ["count"], spark=spark)
             return run_noop(out.df, ckpt, t0), n
 
-        def cl_join(ckpt, small_group=None, paths=(lp, rp)):
+        def cl_join(ckpt, paths=(lp, rp)):
             t0 = time.time()
             lt = ksml(["table", file_stream_source(spark, paths[0]),
                        {"key": "user_id", "time": "ts", "order": ["ts"]}], spark=spark)
             rt = ksml(["table", file_stream_source(spark, paths[1]),
                        {"key": "user_id", "time": "ts", "order": ["ts"]}], spark=spark)
-            kw = {} if small_group is None else {"small_group": small_group}
-            out = changelog_join(lt, rt, "inner", **kw)
+            out = changelog_join(lt, rt, "inner")
             return run_noop(out.df, ckpt, t0), 2 * n
 
         def st_join(ckpt):
@@ -255,8 +250,6 @@ def _stream_bench(spark, sf_dir: str) -> dict:
             "kafka_pipeline": kafka_pipeline,
             "changelog_join": cl_join,
             "changelog_join_hot": lambda ckpt: cl_join(ckpt, paths=(hlp, hrp)),
-            "changelog_join_hot_loop": lambda ckpt: cl_join(
-                ckpt, small_group=1 << 62, paths=(hlp, hrp)),
             "stream_table_join": st_join,
             "session_fold": session_fold,
             # km family; 8x-replicated layout since r12: the
@@ -270,8 +263,7 @@ def _stream_bench(spark, sf_dir: str) -> dict:
         passes = int(os.environ.get("BENCH_STREAM_PASSES", "2"))
         for name, fn in benches.items():
             best, rows = float("inf"), 0
-            npass = 1 if name.endswith("_loop") else passes
-            for i in range(npass):
+            for i in range(passes):
                 try:
                     dt, rows = fn(os.path.join(tmp, f"ck_{name}_{i}"))
                     best = min(best, dt)

@@ -527,10 +527,9 @@ def _session_fold_apply(
         return rows
 
     if df.isStreaming:
-        import base64
-        import pickle
-
         import numpy as np
+
+        from ..streaming.runtime import decode_state, encode_state
 
         out_schema = ", ".join(out_fields + ["`__seq` bigint", "`__closed` boolean"])
         # Event-time timers only exist when the input carries a watermark
@@ -544,7 +543,7 @@ def _session_fold_apply(
                 # GroupState.get is a property (calling it would invoke the
                 # returned tuple and crash on the 2nd micro-batch per key)
                 blob, seq = state.get
-                sessions = _sessions_to_ns(pickle.loads(base64.b64decode(blob)))
+                sessions = _sessions_to_ns(decode_state(blob))
             else:
                 sessions, seq = [], 0
             # pdfs is empty on a timer-only invocation (state.hasTimedOut):
@@ -581,7 +580,7 @@ def _session_fold_apply(
             # key would restart at 1 and lose to its own older snapshot.
             # Residual cost: O(bytes) per dormant key — the sessions
             # themselves (the unbounded part) are gone.
-            state.update((base64.b64encode(pickle.dumps(sessions)).decode(), seq))
+            state.update((encode_state(sessions), seq))
             if has_wm and sessions:
                 # arm a timer for the moment the watermark closes the
                 # oldest live session, so eviction fires even if the key

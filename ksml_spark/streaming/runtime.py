@@ -12,10 +12,15 @@ only exist in streaming:
   aggregation, works identically batch and streaming; no sort).
 * ``file_stream_source`` / ``run_to_memory`` — deterministic streaming
   test harness: file source + availableNow trigger + memory sink.
+* ``encode_state`` / ``decode_state`` — the one codec for the Python
+  objects ``applyInPandasWithState`` processors keep in string state
+  columns (the changelog joins, the session fold).
 """
 
 from __future__ import annotations
 
+import base64
+import pickle
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -110,3 +115,14 @@ def await_available_now(q, timeout: float, what: str) -> None:
             f"after the {timeout:g} s timeout; it was stopped and its "
             "output is incomplete (raise {'timeout': seconds})"
         )
+
+
+def encode_state(obj) -> Optional[str]:
+    """A Python object as base64 pickle text for a ``string`` state
+    column; None stays NULL."""
+    return None if obj is None else base64.b64encode(pickle.dumps(obj)).decode()
+
+
+def decode_state(text: Optional[str]):
+    """The inverse of ``encode_state``."""
+    return None if text is None else pickle.loads(base64.b64decode(text))

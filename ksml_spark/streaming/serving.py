@@ -181,6 +181,10 @@ class ServeHandle:
     _view: Any = field(default=None, repr=False, compare=False)
     # streaming storage="memory": the rows the handle serves
     _fold: Optional[_Fold] = field(default=None, repr=False, compare=False)
+    # streaming storage="table": [batches written], bumped by the writer,
+    # and the count this handle last read at
+    _written: Optional[list] = field(default=None, repr=False, compare=False)
+    _read: int = field(default=0, repr=False, compare=False)
 
     def host_for(self, key) -> dict:
         """Metadata for where a key's state is served — the ring.clj
@@ -273,6 +277,11 @@ class ServeHandle:
     def df(self) -> DataFrame:
         if self._fold is not None:
             return self.spark.createDataFrame(self._fold.rows(), self._fold.schema)
+        if self._written is not None and self._written[0] != self._read:
+            # the writer runs in the query's own session, so this
+            # session's cached file listing of the table goes stale
+            self._read = self._written[0]
+            self.spark.catalog.refreshTable(self.name)
         df = self.spark.table(self.name)
         if self.latest_by_seq:
             df = self._latest(df)
@@ -558,6 +567,7 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
         # not O(all emissions ever).
         append_mode = mode == "update"
         compact_every = int_opt(opts, "compact_every", "serve", 32)
+        written = [0]
 
         def write_batch(bdf: DataFrame, batch_id: int) -> None:
             if append_mode:
@@ -603,11 +613,12 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
                     bdf.write.mode("append").format("parquet").insertInto(name)
             else:
                 _bucketed_write(bdf, name, key_cols, buckets)
+            written[0] += 1
 
         w = rel.df.writeStream.foreachBatch(write_batch).outputMode(mode)
         fold = None
     else:
-        fold = _Fold(rel.df.schema, key_cols, mode)
+        fold, written = _Fold(rel.df.schema, key_cols, mode), None
         w = rel.df.writeStream.foreachBatch(fold).queryName(name).outputMode(mode)
     trig = opts.get("trigger", "available_now")
     timeout = float_opt(opts, "timeout", "serve", 120.0)
@@ -624,6 +635,7 @@ def op_serve(ctx: Ctx, rel: Rel, *rest) -> ServeHandle:
                                       1_000_000)),
         overflow=overflow,
         _fold=fold,
+        _written=written,
     )
     if trig == "available_now":
         handle._check_memory_ceiling()

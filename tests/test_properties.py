@@ -169,19 +169,35 @@ def test_ord_ge_total_order_with_nulls():
     assert _ord_ge((dt.datetime(2024, 1, 1),), (pd.NaT,))
 
 
-def test_lexi_best_matches_ord_ge_fold():
-    """The vectorized per-key batch reduction (_lexi_best) must select the
-    same row as sequentially folding _ord_ge over the rows in order —
-    same NULL-as--infinity order, same later-record-wins tie break."""
-    from ksml_spark.streaming.changelog_join import _lexi_best, _ord_ge
+def test_last_max_matches_ord_ge_fold():
+    """The per-key batch reduction (_last_max over the flat order columns,
+    as pandas hands them to the processor) must select the same row as
+    sequentially folding _ord_ge over the rows in order — same
+    NULL-as--infinity order, same later-record-wins tie break — for int,
+    string and timestamp elements with NULLs, at list lengths past 128."""
+    from ksml_spark.streaming.changelog_join import _last_max, _ord_ge
 
-    elem = st.one_of(st.none(), st.integers(-3, 3))
-    rows = st.lists(st.tuples(elem, elem), min_size=1, max_size=30)
+    base = pd.Timestamp("2024-01-01")
+    kinds = {
+        "int": (st.integers(-3, 3), "Int64"),
+        "str": (st.sampled_from(["", "a", "ab", "b"]), "object"),
+        "ts": (st.integers(-3, 3).map(lambda s: base + pd.Timedelta(seconds=s)),
+               "datetime64[ns]"),
+    }
 
-    @given(rows)
-    def check(tuples):
-        pdf = pd.DataFrame(tuples, columns=["o0", "o1"])
-        got = _lexi_best(pdf, ["o0", "o1"])
+    @settings(max_examples=150, deadline=None)
+    @given(st.sampled_from(sorted(kinds)), st.sampled_from(sorted(kinds)), st.data())
+    def check(k0, k1, data):
+        n = data.draw(st.integers(1, 300))
+        cols = []
+        for k in (k0, k1):
+            elem, dtype = kinds[k]
+            vals = data.draw(st.lists(st.one_of(st.none(), elem), min_size=n, max_size=n))
+            s = pd.Series(vals, dtype=dtype)
+            # the Arrow hand-off: nullable ints arrive as float64 with NaN
+            cols.append(s.astype("float64") if k == "int" else s)
+        got = _last_max([c.to_numpy() for c in cols])
+        tuples = list(zip(*[c.tolist() for c in cols]))
         best_i, best = 0, tuples[0]
         for i, t in enumerate(tuples[1:], start=1):
             if _ord_ge(t, best):

@@ -726,12 +726,11 @@ def test_streaming_table_table_join_retracts_on_tombstone(spark, tmp_path):
     assert rows[1]["lval"] is None and rows[1]["rname"] is None  # batch 2: retracted
 
 
-def test_streaming_tt_join_vectorized_path_parity(spark, tmp_path):
-    """High-velocity keys (> _SMALL_GROUP records per key per micro-batch)
-    take the vectorized _lexi_best reduction; the emitted row sequence must
-    be identical to the record-loop path across multiple batches, with
-    out-of-order arrivals, a NULL-order record (must lose), and a
-    tombstone retraction."""
+def test_streaming_tt_join_high_velocity_batches(spark, tmp_path):
+    """Keys with tens of records per micro-batch on both sides, across
+    two batches, with out-of-order arrivals, a NULL-order record (must
+    lose) and a tombstone retraction: each emission carries each side's
+    max-order record so far."""
     import random
 
     from ksml_spark.streaming.changelog_join import changelog_join
@@ -760,30 +759,50 @@ def test_streaming_tt_join_vectorized_path_parity(spark, tmp_path):
             rows.append({"side": "l", "key": "b", "event_time": ts(110)})  # tombstone
         return rows
 
-    def run(small_group, tag):
-        src = _json_batch_source(spark, tmp_path / tag, [batch(0), batch(1)])
-        lt = ksml(["table", src.filter("side = 'l'").drop("rname", "side"),
-                   {"key": "key", "time": "event_time", "order": ["event_time"]}],
-                  spark=spark)
-        rt = ksml(["table", src.filter("side = 'r'").drop("lval", "side"),
-                   {"key": "key", "time": "event_time", "order": ["event_time"]}],
-                  spark=spark)
-        out = changelog_join(lt, rt, "inner", small_group=small_group)
-        mem = run_to_memory(out, f"tt_vec_{tag}", output_mode="update")
-        return sorted(((r["key"], r["lval"], r["rname"], r["__seq"])
-                       for r in mem.collect()), key=lambda t: (t[0], t[3]))
-
-    vec = run(0, "vec")        # every group takes the vectorized reduction
-    loop = run(10**9, "loop")  # every group takes the record loop
-    assert vec == loop
-    got = {(k, seq): (lv, rn) for k, lv, rn, seq in vec}
+    src = _json_batch_source(spark, tmp_path, [batch(0), batch(1)])
+    lt = ksml(["table", src.filter("side = 'l'").drop("rname", "side"),
+               {"key": "key", "time": "event_time", "order": ["event_time"]}],
+              spark=spark)
+    rt = ksml(["table", src.filter("side = 'r'").drop("lval", "side"),
+               {"key": "key", "time": "event_time", "order": ["event_time"]}],
+              spark=spark)
+    mem = run_to_memory(changelog_join(lt, rt, "inner"), "tt_velocity",
+                        output_mode="update")
+    rows = [(r["key"], r["lval"], r["rname"], r["__seq"]) for r in mem.collect()]
+    got = {(k, seq): (lv, rn) for k, lv, rn, seq in rows}
     # batch 0: a sees 41 records (20+20+NULL-order), best t=19 on both sides
     assert got[("a", 41)] == (19, "v19")
     # batch 1: 40 more records, best t=119
     assert got[("a", 81)] == (119, "v119")
     assert got[("b", 2)] == (1, "rb")        # batch 0: b joined
     assert got[("b", 3)] == (None, None)     # batch 1: tombstone retracts b
-    assert len(vec) == 4
+    assert len(rows) == 4
+
+
+@pytest.mark.parametrize("n_left", [100, 200])
+def test_streaming_tt_join_string_order_null_loses(spark, tmp_path, n_left):
+    """A changelog join ordered by a string column, with one NULL order
+    value among one key's left records in a micro-batch: the final row
+    carries the max string order and the NULL loses, at every per-key
+    batch size."""
+    schema = "side string, key string, lval long, rname string, ord string"
+    rows = [{"side": "l", "key": "a", "lval": i, "ord": f"o{i:04d}"}
+            for i in range(n_left - 1)]
+    rows.insert(n_left // 2, {"side": "l", "key": "a", "lval": -1})  # NULL order
+    rows.append({"side": "r", "key": "a", "rname": "x", "ord": "o0000"})
+    src = _json_batch_source(spark, tmp_path, [rows], schema=schema)
+    out = ksml(
+        ["join",
+         ["table", src.filter("side = 'l'").drop("rname", "side"),
+          {"key": "key", "order": ["ord"]}],
+         ["table", src.filter("side = 'r'").drop("lval", "side"),
+          {"key": "key", "order": ["ord"]}]],
+        spark=spark,
+    )
+    got = _final_rows(run_to_memory(out, f"tt_strord_{n_left}", output_mode="update"))
+    assert set(got) == {"a"}
+    assert got["a"]["lval"] == n_left - 2 and got["a"]["ord"] == f"o{n_left - 2:04d}"
+    assert got["a"]["rname"] == "x" and got["a"]["__seq"] == n_left + 1
 
 
 def test_streaming_table_join_after_transform_raises(spark, tmp_path):
@@ -853,6 +872,52 @@ def test_streaming_stream_live_table_join(spark, tmp_path):
     assert inner == {1: "alpha-v1", 2: "alpha-v2", 3: "beta"}
     left = run("left-join")
     assert left == {1: "alpha-v1", 2: "alpha-v2", 3: "beta", 4: None, 5: None}
+
+
+class _StubState:
+    """The GroupState surface the join processors use."""
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_stream_table_processor_sorts_null_event_time_first(how):
+    """Records arriving right@t2, left@NULL, left@t1 in one batch apply
+    as left@NULL, left@t1, right@t2: a NULL event time is -infinity, so
+    no stream record sees a table value from its future. The table value
+    then serves a later batch's record."""
+    from ksml_spark.streaming.changelog_join import (_Layout,
+                                                     _make_stream_table_processor)
+
+    t1, t2, t3 = (pd.Timestamp(f"2024-01-01 00:00:0{s}") for s in (1, 2, 3))
+    proc = _make_stream_table_processor(
+        how, _Layout(["key"], ["fid"], ["name"], ["name"], [], ["__ro0"]))
+    state = _StubState()
+
+    def run(recs):
+        pdf = pd.DataFrame(recs, columns=["key", "__ro0", "__ts", "__side",
+                                          "__tomb", "__lv", "__rv"])
+        pdf["__ts"] = pd.to_datetime(pdf["__ts"])
+        out = list(proc(("a",), iter([pdf]), state))
+        return [] if not out else [tuple(r) for r in out[0].itertuples(index=False)]
+
+    got = run([("a", t2, t2, 1, False, None, {"name": "v2"}),
+               ("a", None, None, 0, False, {"fid": 1}, None),
+               ("a", None, t1, 0, False, {"fid": 2}, None)])
+    assert got == ([] if how == "inner" else [("a", 1, None), ("a", 2, None)])
+    assert run([("a", None, t3, 0, False, {"fid": 3}, None)]) == [("a", 3, "v2")]
 
 
 def test_streaming_text_signals_match_batch(spark, tables, tmp_path):
@@ -950,6 +1015,223 @@ def test_streaming_table_table_join_cross_batch_update(spark, tmp_path):
     assert emitted == [(1, "x0"), (1, "x1"), (2, "x1")]
     # rows are sorted by __seq, so distinct values == strictly increasing
     assert len({r["__seq"] for r in rows}) == len(rows)
+
+
+def _cut(data, n: int) -> list:
+    """1-5 nonempty consecutive slices of range(n), cut at random."""
+    from hypothesis import strategies as st
+
+    cuts = data.draw(st.lists(st.integers(1, n - 1), max_size=4, unique=True)
+                     if n > 1 else st.just([]))
+    bounds = [0, *sorted(cuts), n]
+    return [range(a, b) for a, b in zip(bounds, bounds[1:])]
+
+
+def _tt_batch_cut_property(spark, tmp_factory, data):
+    """Changelog rows on both sides (NULL values are tombstones, NULL and
+    tied event times), cut at random into 1-5 micro-batches: the final
+    state of each streaming join equals the batch join of the same rows.
+    The order is (event_time, n), n the arrival index: a full-tuple tie
+    makes max_by in the batch view pick an arbitrary record."""
+    import json
+    import os
+    import uuid
+
+    from hypothesis import strategies as st
+    from pyspark.sql.types import StructType
+
+    row = st.tuples(st.sampled_from("lr"), st.sampled_from("abc"),
+                    st.one_of(st.none(), st.integers(0, 9)),
+                    st.one_of(st.none(), st.integers(0, 3)))
+    rows = data.draw(st.lists(row, min_size=1, max_size=24))
+    recs = []
+    for n, (side, key, val, t) in enumerate(rows):
+        et = None if t is None else f"2024-01-01T00:00:0{t}"
+        v = {"lval": val} if side == "l" else {
+            "rname": None if val is None else f"v{val}"}
+        recs.append({"side": side, "key": key, "event_time": et, "n": n, **v})
+    schema = _SIDES_SCHEMA + ", n long"
+    tmp = tmp_factory.mktemp("cut")
+    src = _json_batch_source(spark, tmp, [[recs[i] for i in b] for b in _cut(data, len(recs))],
+                             schema=schema)
+    whole = spark.read.schema(StructType.fromDDL(schema)).json(os.path.join(str(tmp), "src"))
+
+    def tables(df):
+        opts = {"key": "key", "time": "event_time", "order": ["event_time", "n"]}
+        return (["table", df.filter("side = 'l'").drop("rname", "side"),
+                 {**opts, "tombstone": "lval IS NULL"}],
+                ["table", df.filter("side = 'r'").drop("lval", "side"),
+                 {**opts, "tombstone": "rname IS NULL"}])
+
+    def final(r):
+        return (r["lval"], r["rname"], r["n"], r["r_n"])
+
+    for kind in ("join", "left-join", "outer-join"):
+        out = ksml([kind, *tables(src)], spark=spark)
+        mem = run_to_memory(out, f"tt_cut_{uuid.uuid4().hex}", output_mode="update")
+        got = {k: final(r) for k, r in _final_rows(mem).items()
+               if not (r["lval"] is None and r["rname"] is None)}
+        want = {r["key"]: final(r)
+                for r in ksml([kind, *tables(whole)], spark=spark).df.collect()}
+        assert got == want, (kind, json.dumps(recs))
+
+
+@pytest.mark.slow
+def test_streaming_tt_join_batch_cut_invariant(spark, tmp_path_factory):
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(st.data())
+    def check(data):
+        _tt_batch_cut_property(spark, tmp_path_factory, data)
+
+    check()
+
+
+def test_streaming_tt_join_batch_cut_invariant_fast(spark, tmp_path_factory):
+    """Fast-tier sample of the property above."""
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    @settings(max_examples=2, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(st.data())
+    def check(data):
+        _tt_batch_cut_property(spark, tmp_path_factory, data)
+
+    check()
+
+
+def _st_batch_cut_property(spark, tmp_factory, data):
+    """Stream records and table updates arriving in event-time order
+    (right before left at equal times; tombstones as NULL names), cut at
+    random into 1-5 micro-batches: each stream record is enriched with
+    the table value of the last update that arrived before it, as a
+    pandas recount of the time-synchronised lookup says."""
+    import json
+    import uuid
+
+    from hypothesis import strategies as st
+
+    row = st.tuples(st.sampled_from("lr"), st.sampled_from("abc"),
+                    st.one_of(st.none(), st.integers(0, 9)), st.integers(0, 5))
+    rows = sorted(data.draw(st.lists(row, min_size=1, max_size=24)),
+                  key=lambda r: (r[3], r[0] == "l"))
+    recs = []
+    for n, (side, key, val, t) in enumerate(rows):
+        rec = {"side": side, "key": key, "event_time": f"2024-01-01T00:00:0{t}", "n": n}
+        if side == "l":
+            rec["fid"] = n
+        else:
+            rec["rname"] = None if val is None else f"v{val}"
+        recs.append(rec)
+    src = _json_batch_source(
+        spark, tmp_factory.mktemp("cut"), [[recs[i] for i in b] for b in _cut(data, len(recs))],
+        schema="side string, key string, fid long, rname string, event_time timestamp, n long")
+    stream = ["stream", src.filter("side = 'l'").select("key", "fid", "event_time"),
+              {"key": "key", "time": "event_time"}]
+    table = ["table", src.filter("side = 'r'").select("key", "rname", "event_time", "n"),
+             {"key": "key", "time": "event_time", "order": ["event_time", "n"],
+              "tombstone": "rname IS NULL"}]
+    for kind, how in (("join", "inner"), ("left-join", "left")):
+        out = ksml([kind, stream, table], spark=spark)
+        mem = run_to_memory(out, f"st_cut_{uuid.uuid4().hex}", output_mode="update")
+        got = sorted((r["key"], r["fid"], r["rname"]) for r in mem.collect())
+        cur, want = {}, []
+        for rec in recs:
+            if rec["side"] == "r":
+                cur[rec["key"]] = rec["rname"]
+            elif how == "left" or cur.get(rec["key"]) is not None:
+                want.append((rec["key"], rec["fid"], cur.get(rec["key"])))
+        assert got == sorted(want), (kind, json.dumps(recs))
+
+
+@pytest.mark.slow
+def test_streaming_stream_table_join_batch_cut_invariant(spark, tmp_path_factory):
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(st.data())
+    def check(data):
+        _st_batch_cut_property(spark, tmp_path_factory, data)
+
+    check()
+
+
+def test_streaming_stream_table_join_batch_cut_invariant_fast(spark, tmp_path_factory):
+    """Fast-tier sample of the property above."""
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    @settings(max_examples=2, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(st.data())
+    def check(data):
+        _st_batch_cut_property(spark, tmp_path_factory, data)
+
+    check()
+
+
+def test_streaming_tt_join_restarts_from_its_checkpoint(spark, tmp_path):
+    """Serve the changelog join on a checkpoint, drain two files, stop;
+    land a third file that updates one key on each side and tombstones
+    another; serve again on the same checkpoint: the served state equals
+    a pandas recount over all three files."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    sdir, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    os.makedirs(sdir)
+    files = []
+
+    def land(rows):
+        i = len(files)
+        files.append(rows)
+        p = os.path.join(sdir, f"b{i}.json")
+        with open(p + ".tmp", "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in rows)
+        os.utime(p + ".tmp", (i + 1, i + 1))
+        os.replace(p + ".tmp", p)
+
+    def rec(side, key, val, t):
+        v = {"lval": val} if side == "l" else {"rname": val}
+        return {"side": side, "key": key, "event_time": f"2024-01-01T00:00:{t:02d}", **v}
+
+    def serve():
+        src = (spark.readStream.schema(StructType.fromDDL(_SIDES_SCHEMA))
+               .option("maxFilesPerTrigger", 1).json(sdir))
+        opts = {"key": "key", "time": "event_time", "order": ["event_time"]}
+        out = ksml(["join",
+                    ["table", src.filter("side = 'l'").drop("rname", "side"), opts],
+                    ["table", src.filter("side = 'r'").drop("lval", "side"), opts]],
+                   spark=spark)
+        return ksml(["serve", out, {"name": "served_tt_restart", "storage": "table",
+                                    "buckets": 2, "checkpoint": ckpt}], spark=spark)
+
+    spark.sql("DROP TABLE IF EXISTS served_tt_restart")
+    land([rec("l", k, i, 1) for i, k in enumerate("abcd")]
+         + [rec("r", k, f"x{k}", 1) for k in "abc"])
+    land([rec("l", "a", 10, 2), rec("r", "d", "xd", 2)])
+    try:
+        h = serve()
+        assert {r["key"]: (r["lval"], r["rname"]) for r in h.all()} == {
+            "a": (10, "xa"), "b": (1, "xb"), "c": (2, "xc"), "d": (3, "xd")}
+        h.stop()
+        land([rec("l", "b", 11, 3), rec("r", "c", "yc", 3), rec("l", "d", None, 3)])
+        h = serve()
+        got = {r["key"]: (r["lval"], r["rname"]) for r in h.all()}
+        h.stop()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS served_tt_restart")
+
+    pdf = pd.DataFrame([r for rows in files for r in rows])
+    pdf["at"] = pd.to_datetime(pdf["event_time"])
+    latest = {s: pdf[pdf["side"] == s].sort_values("at", kind="stable")
+              .drop_duplicates("key", keep="last").set_index("key") for s in "lr"}
+    want = {}
+    for k in sorted(set(latest["l"].index) & set(latest["r"].index)):
+        lv, rn = latest["l"].loc[k, "lval"], latest["r"].loc[k, "rname"]
+        if pd.notna(lv) and pd.notna(rn):
+            want[k] = (int(lv), rn)
+    assert got == want == {"a": (10, "xa"), "b": (11, "xb"), "c": (2, "yc")}
 
 
 _SESS_SCHEMA = "key string, val string, event_time timestamp"
